@@ -130,43 +130,6 @@ def main() -> None:
     wall_timings: dict[str, float] = {}
     drain_detail: dict = {}
 
-    # Per-query state-store drain timings (the exact code paths the
-    # driver certifies), restored to the bench in v7: they feed
-    # legacy_total / legacy_total_wall so cross-round totals compare
-    # the same implementation r1→r9, and they ship in BENCH_DETAIL
-    # (per_query_drain_sec). The shared-scan unit stays the headline
-    # `value` accounting (deployment shape, adjudicated legitimate in
-    # the round-8 verdict) and its unit time remains a separate
-    # deployment-shape metric in BENCH_DETAIL.
-    per_query_drain_sec: dict[str, float] = {}
-    per_query_drain_wall: dict[str, float] = {}
-    # oracle times PAIRED to the per-query drain series (same-window
-    # pairing for the LEGACY accounting, r9 review second pass: the
-    # headline pairs its oracle to the shared-scan unit's best rep,
-    # so reusing that number against per_query_drain_sec would mix
-    # windows and reintroduce the skew min-of-pairs removes).
-    oracle_pq_timings: dict[str, float] = {}
-
-    def per_query_drain_rep(name: str) -> tuple[float, float]:
-        """One rep of a drained view's per-query audit fn (the
-        state-store twin where one exists, else the REGISTRY fn),
-        with the standard trigger credit: credited = wall − drain_wall
-        + trigger (see the per-query run_once below)."""
-        from master_airflow_spark.streaming import events as stream_events
-
-        stream_events.reset_drain_trigger_seconds()
-        t0 = time.perf_counter()
-        df = registry.REGISTRY[PQ_AUDIT.get(name, name)].fn(spark, sf_dir)
-        materialize(df)
-        wall = time.perf_counter() - t0
-        trig = stream_events.drain_trigger_seconds()
-        dwall = stream_events.drain_wall_seconds()
-        credited = wall
-        if trig > 0:
-            credited = min(wall, wall - dwall + trig)
-        registry.release_caches()
-        return credited, wall
-
     def run_drain_group() -> None:
         """v6: the two drained window views are timed as ONE unit
         running the production deployment shape — a single
@@ -182,10 +145,8 @@ def main() -> None:
         wall (v7 — per-view minima across reps could sum BELOW the
         fastest actually-measured unit, round-8 ADVICE), so the wall
         sum also recovers one real rep's total exactly.
-        v7 also interleaves, inside the same rep loop: the DuckDB
-        oracle reps for both views (ABAB drift cancellation) and one
-        rep of each view's certified per-query state-store drain
-        (legacy accounting + BENCH_DETAIL audit)."""
+        v7 also interleaves the DuckDB oracle reps for both views
+        inside the same rep loop (ABAB drift cancellation)."""
 
         def run_once():
             t0 = time.perf_counter()
@@ -207,46 +168,23 @@ def main() -> None:
             return credited, wall, tm, merges
 
         runs = []
-        pq_creds: dict[str, list[float]] = {v: [] for v in drain_group}
-        pq_walls: dict[str, list[float]] = {v: [] for v in drain_group}
         duck: dict[str, list[float]] = {v: [] for v in drain_group}
-        duck_pq: dict[str, list[float]] = {v: [] for v in drain_group}
-        def ducks_ok(series: dict[str, list[float]]) -> bool:
+
+        def ducks_ok() -> bool:
             # r10 (r9 ADVICE): paired oracle series must converge too,
             # not just ride along — see series_done in the batch loop.
             # An empty series (no oracle ran yet / --no-oracle) passes.
-            return all(not s or converged(s) for s in series.values())
+            return all(not s or converged(s) for s in duck.values())
 
-        for _ in range(REPS_MAX):
-            # Per-series convergence (r9 review): the unit and each
-            # per-query drain stop sampling once THEIR two fastest
-            # agree — one noisy series must not force extra reps of
-            # the others (together ~4s/iteration at sf0.1). The view
-            # oracles are NOT independent series: they ride along
-            # with every unit rep so each unit rep is a PAIR from one
-            # contention window (min-of-pairs crediting below).
-            if not (converged([r[0] for r in runs]) and ducks_ok(duck)):
-                runs.append(run_once())
-                for v in drain_group:
-                    o = oracle_rep(v)
-                    if o is not None:
-                        duck[v].append(o)
+        # The view oracles are NOT independent series: they ride along
+        # with every unit rep so each unit rep is a PAIR from one
+        # contention window (min-of-pairs crediting below).
+        while not (converged([r[0] for r in runs]) and ducks_ok()) and len(runs) < REPS_MAX:
+            runs.append(run_once())
             for v in drain_group:
-                if not (converged(pq_creds[v]) and ducks_ok({v: duck_pq[v]})):
-                    c, w = per_query_drain_rep(v)
-                    pq_creds[v].append(c)
-                    pq_walls[v].append(w)
-                    o = oracle_rep(v)  # the pq series' own pair
-                    if o is not None:
-                        duck_pq[v].append(o)
-            done = (
-                converged([r[0] for r in runs])
-                and ducks_ok(duck)
-                and all(converged(pq_creds[v]) for v in drain_group)
-                and ducks_ok(duck_pq)
-            )
-            if done:
-                break
+                o = oracle_rep(v)
+                if o is not None:
+                    duck[v].append(o)
         credited, wall, tm, merges = min(runs, key=lambda r: r[0])
         views = tm["views"]
         tot_views = sum(views.values()) or 1.0
@@ -280,9 +218,6 @@ def main() -> None:
             # run the credit was computed from)
             drain_wall_sec[v] = round(best_wall_split[v], 4)
             reps_used[v] = len(runs)
-            pq_best = min(range(len(pq_creds[v])), key=lambda k: pq_creds[v][k])
-            per_query_drain_sec[v] = round(pq_creds[v][pq_best], 4)
-            per_query_drain_wall[v] = round(min(pq_walls[v]), 4)
             if duck[v]:
                 # min-of-pairs: the oracle time from the same
                 # iteration as the credited-min unit run
@@ -292,14 +227,9 @@ def main() -> None:
                 if len(duck[v]) >= 2:
                     srt = sorted(duck[v])
                     oracle_spread[v] = round(srt[1] / srt[0], 3)
-            if duck_pq[v]:
-                # the legacy accounting's pair: oracle time from the
-                # same iteration as the per-query drain's credited min
-                oracle_pq_timings[v] = round(duck_pq[v][pq_best], 4)
             print(
                 f"# {v}: {timings[v]:.3f}s rows={n_rows[v]}"
-                f" reps={len(runs)} (shared drain;"
-                f" per-query drain {per_query_drain_sec[v]:.3f}s)",
+                f" reps={len(runs)} (shared drain)",
                 file=sys.stderr,
             )
         drain_detail.update(
@@ -409,96 +339,6 @@ def main() -> None:
     )
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    legacy = [n for n in HEADLINE_LEGACY if n in timings]
-    # Methodology notes (stable across rounds; "methodology" versions
-    # them so cross-round tooling can detect changes mechanically):
-    # v2 (round 4): per-query time is the min of REPS back-to-back runs
-    # (Spark and DuckDB oracle alike, adaptive up to REPS_MAX until the
-    # two fastest agree within 15%) and totals are sums of those minima
-    # — single runs on this box swing 2-3× with neighbor load. Queries
-    # in "rebuilt" re-run fn() inside the timed pass (their fn performs
-    # Spark work); the rest re-execute a prepared plan (count() repeats
-    # the full scan/join/agg; only py4j plan construction is
-    # amortized). The headline set is 26 queries since round 4;
-    # "legacy_total" is the round-1-3 19-query set for cross-round
-    # comparability. v3 (round 5): identical timing; the stdout line is
-    # compacted (<1500 chars) and per-query oracle/speedup/reps detail
-    # moved to BENCH_DETAIL.json + stderr. v4 (round 6): REPS 3 /
-    # REPS_MAX 8 (see the REPS comment — two simultaneously-stalled
-    # runs can no longer fake convergence), and streaming drains are
-    # timed by their Spark-measured per-trigger execution cost
-    # (recurring planning+addBatch+commit — the throughput number a
-    # long-lived stream pays per micro-batch) instead of wall-clock
-    # that includes one-time query start/stop (see run_once).
-    # v5 (round 7), three changes, all to the Spark side's detriment
-    # or neutral: (a) FULL materialization — every timed pass writes
-    # the result to the noop sink instead of count()ing it, closing
-    # the count-pruning asymmetry described in the module docstring
-    # (raises wide-agg query times up to 3x vs v4 on identical code);
-    # (b) the drain credit is made auditable and symmetric — credited
-    # = wall − drain_wall + trigger (fn() plan construction and the
-    # post-drain batch step are recurring and now stay IN the credited
-    # time); per-drain wall-clock ships in BENCH_DETAIL
-    # (drain_wall_sec) and the headline JSON carries
-    # `value_wall_drains` / `legacy_total_wall` — the same totals with
-    # drains at raw wall-clock (no credit) — so the gate can be read
-    # under either accounting; (c) progress history is uncapped during
-    # drains (numRecentProgressUpdates) so multi-trigger drains can't
-    # under-credit.
-    # v6 (round 8), two changes: (a) the two drained window views are
-    # timed as ONE unit executing the shared-scan multi-view drain
-    # (streaming/shared_drain.py) — one foreachBatch pass over one
-    # events scan feeding both views via partial-aggregate-then-merge,
-    # the deployment shape a production multi-view pipeline runs; the
-    # unit's time is attributed back to the two query keys from
-    # measured per-view handler + merge seconds so the reported sum
-    # equals the unit's real total under both accountings (see
-    # run_drain_group; per-path equality is pinned in
-    # tests/test_shared_drain.py). (b) drain trigger credit comes from
-    # a StreamingQueryListener (uncapped by construction, round-7
-    # ADVICE); BENCH_DETAIL records listener vs recentProgress
-    # agreement per run.
-    # v7 (round 9), three changes, all methodology-integrity items
-    # from the round-8 verdict/ADVICE: (a) ABAB min-of-pairs — every
-    # Spark rep is immediately followed by its DuckDB rep (one
-    # contention window per PAIR), and the reported oracle time is
-    # the one from the SAME rep as the reported (min) Spark time —
-    # two separate phases minutes apart let box drift move the totals
-    # ±10-20% in OPPOSITE directions on identical code (r7-r8), and
-    # independent minima let a burst that hits only one engine's best
-    # window skew the ratio either way; the independent oracle min
-    # still ships as `oracle_total_min` so the pairing's effect is
-    # auditable. (b) the two drained views' certified PER-QUERY
-    # state-store drains are timed again every round and feed
-    # legacy_total/legacy_total_wall (cross-round comparability — v6
-    # had moved those totals onto the shared-scan unit) and
-    # BENCH_DETAIL.per_query_drain_sec; the shared-scan unit stays
-    # the headline `value` accounting with its unit time reported
-    # separately; (c) the no-credit wall split of the drain unit
-    # comes from the single rep with minimum unit wall (v6 mixed
-    # per-view minima across reps, which could sum below any
-    # actually-measured unit wall).
-    # r10 FREEZE: crediting rules are frozen at v7 (round-9 verdict
-    # #2 — three crediting changes in three rounds was itself a
-    # methodology smell). The only r10 additions change NO credited
-    # number's definition: (a) the paired DuckDB series must also
-    # converge before sampling stops (r9 ADVICE — previously the
-    # oracle got exactly as many reps as Spark needed, with no
-    # criterion of its own), with per-query oracle spread recorded in
-    # BENCH_DETAIL; (b) a pairing-fairness guard — the run reports
-    # pairing_fairness = oracle_total/oracle_total_min and is flagged
-    # unfair above 1.10; unfair runs do not qualify as official
-    # passes (the credited ratio must hold under BOTH denominators).
-    legacy_t = round(
-        sum(per_query_drain_sec.get(n, timings[n]) for n in legacy), 4
-    )
-    legacy_t_wall = round(
-        sum(
-            per_query_drain_wall.get(n, wall_timings.get(n, timings[n]))
-            for n in legacy
-        ),
-        4,
-    )
     out = {
         "metric": "headline_queries_total",
         "value": total,
@@ -506,9 +346,7 @@ def main() -> None:
         "queries": {n: round(t, 3) for n, t in timings.items()},
         "sf": float(sf) if sf.replace(".", "", 1).isdigit() else sf,
         "methodology": "v7-abab-min-of-pairs",
-        "legacy_total": legacy_t,
         "value_wall_drains": total_wall,
-        "legacy_total_wall": legacy_t_wall,
         # Parallelism Spark ACTUALLY ran with (round-16, additions-only):
         # local[$SPARK_GRAFT_CPUS] makes this equal the env contract, so
         # a scaling harness can verify the core count was honored rather
@@ -523,8 +361,6 @@ def main() -> None:
         "queries": timings,
         "drain_wall_sec": drain_wall_sec,
         "wall_timings_drains": wall_timings,
-        "per_query_drain_sec": per_query_drain_sec,
-        "per_query_drain_wall_sec": per_query_drain_wall,
         "drain_group": drain_detail,
     }
 
@@ -536,7 +372,6 @@ def main() -> None:
             for n in oracle_timings
             if timings.get(n)
         }
-        detail["oracle_queries_pq_drain_paired"] = oracle_pq_timings
         detail["oracle_spread"] = oracle_spread
         out["oracle_total"] = round(sum(oracle_timings.values()), 4)
         out["oracle_total_min"] = round(sum(oracle_min_timings.values()), 4)
@@ -565,16 +400,6 @@ def main() -> None:
                 f" the independent min; do not credit this run as a pass",
                 file=sys.stderr,
             )
-        # legacy: Spark side uses the per-query drains, so its oracle
-        # uses the times PAIRED to those reps (same-window rule)
-        out["oracle_legacy_total"] = round(
-            sum(
-                oracle_pq_timings.get(n, t)
-                for n, t in oracle_timings.items()
-                if n in set(legacy)
-            ),
-            4,
-        )
 
     detail.update({k: v for k, v in out.items() if k != "queries"})
     detail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json")
@@ -592,8 +417,6 @@ def main() -> None:
     print(line)
 
 
-# Names of headline queries (filtered to what's registered, so bench
-# never breaks while coverage widens).
 # Queries never served from a prepared plan, always rebuilt and re-run,
 # because fn() itself performs Spark work: stream drains run the query
 # inside fn(); cosine_topk materializes its bounded query set into an
@@ -613,14 +436,10 @@ REBUILD = {
 # methodology v6 (see run_drain_group) instead of two independent
 # drains re-scanning the same events landing dir. Since round 13 the
 # registered stream_session_window is itself the partial-spool drain
-# (single view of the same machinery); the per-query audit series for
-# it therefore times the STATE-STORE twin (stream_session_window_state
-# — see PQ_AUDIT) so BENCH_DETAIL keeps comparing the two forms.
-# tests/test_shared_drain.py pins all paths equal.
+# (single view of the same machinery). tests/test_shared_drain.py pins
+# it equal to the per-query drains, with the state-store twin
+# stream_session_window_state as the session view's reference.
 DRAIN_GROUP = ("stream_tumbling_agg", "stream_session_window")
-# Per-view audit fn for the legacy per-query series: the registered
-# name unless a state-store twin exists for the view.
-PQ_AUDIT = {"stream_session_window": "stream_session_window_state"}
 
 # Timed repetitions per query (min reported): at least REPS runs,
 # continuing up to REPS_MAX until the two fastest agree within 15% —
@@ -641,8 +460,13 @@ PQ_AUDIT = {"stream_session_window": "stream_session_window_state"}
 REPS = 3
 REPS_MAX = 8
 
-# The rounds-1-3 headline set, kept intact for cross-round totals.
-HEADLINE_LEGACY = [
+# Names of headline queries (filtered to what's registered, so bench
+# never breaks while coverage widens): the rounds-1-3 set, then the
+# round-4 additions — the most expensive certified relational shapes
+# (multi-fact TPC-H joins) plus the heaviest text/ANN operators.
+# perfbench/metrics.py keeps its own frozen copy; tests/test_tools.py
+# pins the two equal.
+HEADLINE = [
     "top1_price_today",
     "top1_price_alltime",
     "daily_high_low",
@@ -662,12 +486,6 @@ HEADLINE_LEGACY = [
     "training_corpus_pipeline",
     "stream_tumbling_agg",
     "stream_session_window",
-]
-
-# Round-4 additions: the most expensive certified relational shapes
-# (multi-fact TPC-H joins) plus the heaviest text/ANN operators, so the
-# perf gate measures what the engine now is, not its round-1 surface.
-HEADLINE = HEADLINE_LEGACY + [
     "q5_local_supplier_volume",
     "q8_market_share",
     "q9_product_profit",

@@ -41,12 +41,14 @@ def table_path(sf_dir: str, name: str) -> str:
 
 def parquet_part_stats(path: str) -> list[tuple[str, int, int, int]]:
     """Driver-side (os.stat, no Spark job) identity of a parquet table
-    at ``path`` — a single file or a directory of part files — as
-    sorted (name, mtime_ns, size, ino) tuples. Empty list if the path
-    is missing. The ONE walker behind every cheap table fingerprint in
-    the repo (near-dup probe cache invalidation, size-adaptive state
-    partitioning, scale-probe staging markers), so a future change —
-    nested partition dirs, atomicity markers — lands once.
+    at ``path`` — a single file, or a directory tree of part files
+    (``partitionBy`` layouts nest them under ``k=v/`` dirs) — as
+    (name, mtime_ns, size, ino) tuples sorted by name, where name is
+    the part's path relative to ``path`` (the basename for a single
+    file). Empty list if the path is missing. The ONE walker behind
+    every table fingerprint and size gate in the repo (near-dup probe
+    cache invalidation, size-adaptive state partitioning, scale-probe
+    staging markers, table_bytes, the ns-column footer probe).
 
     st_ino is folded in (round-11 ADVICE) so a corpus replaced by a
     timestamp-preserving copy (cp -p / rsync -t, same names and sizes)
@@ -57,11 +59,14 @@ def parquet_part_stats(path: str) -> list[tuple[str, int, int, int]]:
     try:
         if os.path.isdir(path):
             out = []
-            for name in sorted(os.listdir(path)):
-                if name.endswith(".parquet"):
-                    st = os.stat(os.path.join(path, name))
-                    out.append((name, st.st_mtime_ns, st.st_size, st.st_ino))
-            return out
+            for root, _, files in os.walk(path):
+                for f in files:
+                    if f.endswith(".parquet"):
+                        full = os.path.join(root, f)
+                        st = os.stat(full)
+                        name = os.path.relpath(full, path)
+                        out.append((name, st.st_mtime_ns, st.st_size, st.st_ino))
+            return sorted(out)
         st = os.stat(path)
         return [(os.path.basename(path), st.st_mtime_ns, st.st_size, st.st_ino)]
     except OSError:
@@ -70,13 +75,22 @@ def parquet_part_stats(path: str) -> list[tuple[str, int, int, int]]:
 
 def table_bytes(sf_dir: str, name: str) -> int:
     """Total on-disk parquet bytes of a table — single file OR a
-    directory of part files (summed via parquet_part_stats, the one
-    walker). Size gates MUST use this instead of os.path.getsize: on
+    directory tree of part files (summed via parquet_part_stats, the
+    one walker). Size gates MUST use this instead of os.path.getsize: on
     a directory-layout table (any Spark-written output, e.g. the
     scale-probe replicas) getsize returns the directory inode's size
     (~4-16 KB), which would silently hold a "small side" broadcast
     hint open at any data volume."""
     return sum(s[2] for s in parquet_part_stats(table_path(sf_dir, name)))
+
+
+# Fact-probe broadcast gate (q5 and revenue_by_nation): hint the pruned
+# (orders ⋈ customer-keys) build side only while the orders parquet is
+# under this many table_bytes. Past it the hint drops and the bushy
+# join tree shuffles both fact legs, the only plan that works at
+# 100 TB. 64 MB of orders parquet is well under a 10 MB hashed
+# relation after the region prune and 2-column projection.
+FACT_BROADCAST_ORDERS_BYTES = 64 << 20
 
 
 def ensure_session_defaults(spark: SparkSession) -> None:
@@ -107,15 +121,10 @@ def _nanos_timestamp_cols(path: str) -> list[str]:
     a directory of part files (the production layout Spark writes) —
     every part shares the footer schema, so the first one answers."""
     if os.path.isdir(path):
-        parts = sorted(
-            os.path.join(r, f)
-            for r, _, files in os.walk(path)
-            for f in files
-            if f.endswith(".parquet")
-        )
+        parts = parquet_part_stats(path)
         if not parts:
             return []
-        path = parts[0]
+        path = os.path.join(path, parts[0][0])
     schema = pq.read_schema(path)
     return [
         f.name

@@ -22,7 +22,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from master_airflow_spark.catalog import load_table, table_bytes
+from master_airflow_spark.catalog import (
+    FACT_BROADCAST_ORDERS_BYTES,
+    load_table,
+    table_bytes,
+)
 from master_airflow_spark.functions.exact import (
     cents,
     dsum,
@@ -35,14 +39,6 @@ from master_airflow_spark.functions.exact import (
     sql_lsum_money,
 )
 from master_airflow_spark.registry import register
-
-# revenue_by_nation's fact-probe broadcast gate: hint the pruned
-# (orders ⋈ customer-keys) build side only while the orders parquet is
-# under this bound (file metadata — no job). Past it the hint drops and
-# the bushy join tree shuffles both fact legs, the only plan that
-# works at 100 TB. 64 MB of orders parquet ≈ well under a 10 MB hashed
-# relation after the region prune + 2-column projection.
-_RBN_BROADCAST_ORDERS_BYTES = 64 << 20
 
 _QTY_C = sql_cents("l_quantity")
 _PRICE_C = sql_cents("l_extendedprice")
@@ -122,7 +118,7 @@ def revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     (partial sums are guarded longs; integer addition associative —
     bit-identical, collect-compared and oracle-verified at three SFs).
     The o2 broadcast hint is SIZE-GATED on the orders parquet bytes
-    (metadata only, no extra job): past _RBN_BROADCAST_ORDERS_BYTES
+    (metadata only, no extra job): past catalog.FACT_BROADCAST_ORDERS_BYTES
     the hint drops and the bushy tree runs the same two fact shuffles
     (o⋈c2 on custkey — region-pruned, orders-cardinality — then li⋈o2
     on orderkey) as the old chain, so the 100 TB shape is unchanged.
@@ -149,7 +145,7 @@ def revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     o2 = orders.join(c2, orders.o_custkey == c2.c_custkey).select(
         "o_orderkey", "c_nationkey"
     )
-    if table_bytes(sf_dir, "orders") < _RBN_BROADCAST_ORDERS_BYTES:
+    if table_bytes(sf_dir, "orders") < FACT_BROADCAST_ORDERS_BYTES:
         o2 = F.broadcast(o2)
     keyed = (
         lineitem.join(o2, lineitem.l_orderkey == o2.o_orderkey)

@@ -17,7 +17,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from master_airflow_spark.catalog import load_table, table_bytes
+from master_airflow_spark.catalog import (
+    FACT_BROADCAST_ORDERS_BYTES,
+    load_table,
+    table_bytes,
+)
 from master_airflow_spark.functions.exact import (
     cents,
     lavg_money,
@@ -31,19 +35,14 @@ from master_airflow_spark.registry import register
 # revenue term price*(1-disc) in exact scaled-long form (scale 100^2)
 _REV_C = f"{sql_cents('l_extendedprice')} * (100 - {sql_cents('l_discount')})"
 
-# Fact-probe broadcast gate (q5, r16): hint the pruned
-# (orders ⋈ customer-keys) build side only while the orders parquet is
-# under this bound (file metadata, no job). Past it the hint drops and
-# the bushy tree shuffles both fact legs — the 100 TB plan. Matches
-# relational._RBN_BROADCAST_ORDERS_BYTES.
-_FACT_BROADCAST_ORDERS_BYTES = 64 << 20
-
 # q18 mid-scale band (r16): broadcast-hint the HAVING-filtered order
 # aggregate — whose ~1.5% selectivity Catalyst/AQE cannot see — only
-# while orders sits between "Catalyst broadcasts the orders side
-# itself" (below) and "the aggregate's WORST-case cardinality is no
-# longer a safe broadcast relation" (above). See q18's docstring for
-# the sf0.1/x50 measurements behind both edges.
+# while MIN <= table_bytes(orders) < MAX (half-open). Below MIN
+# Catalyst broadcasts the orders side itself (under the default 10 MB
+# autoBroadcastJoinThreshold), and the 10-16 MB sub-band keeps the
+# exchange plan on purpose. From MAX up the aggregate's WORST-case
+# cardinality is no longer a safe broadcast relation. See q18's
+# docstring for the sf0.1/x50 measurements behind both edges.
 _Q18_AGG_BROADCAST_MIN_ORDERS = 16 << 20
 _Q18_AGG_BROADCAST_MAX_ORDERS = 256 << 20
 
@@ -488,7 +487,7 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_custkey", "c_nationkey"
     )
     o2 = o.join(c2, o.o_custkey == c2.c_custkey).select("o_orderkey", "c_nationkey")
-    if table_bytes(sf_dir, "orders") < _FACT_BROADCAST_ORDERS_BYTES:
+    if table_bytes(sf_dir, "orders") < FACT_BROADCAST_ORDERS_BYTES:
         o2 = F.broadcast(o2)
     keyed = (
         li.join(o2, li.l_orderkey == o2.o_orderkey)
@@ -627,16 +626,19 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     of orders (aggregate+filter defeats size estimation, and AQE's
     runtime stats measure the agg exchange's INPUT, pre-final-agg/
     filter), so past the orders auto-broadcast size both fact sides
-    shuffle. Inside the [16 MB, 256 MB] orders-bytes band the filtered
-    aggregate gets an explicit broadcast hint instead: orders never
-    shuffles (x50 measured: 2.01 → 1.52 s min-of-5, −25%, plan SMJ +
-    orders Exchange → BHJ with the agg as build). The band is bounded
-    both ways, measured at sf0.1 and x50:
-    - below 16 MB Catalyst broadcasts the orders side itself and the
-      hint would SERIALIZE the heavy agg into a broadcast build
-      (sf0.1 interleaved A/B: 0.662 → 0.746 s med, hint lost 8/8
-      pairs — so the bench plan keeps the current shape);
-    - above 256 MB the qualifying set's WORST case (a non-selective
+    shuffle. Inside the half-open [16 MB, 256 MB) orders-bytes band the
+    filtered aggregate gets an explicit broadcast hint instead: orders
+    never shuffles (x50 measured: 2.01 → 1.52 s min-of-5, −25%, plan
+    SMJ + orders Exchange → BHJ with the agg as build). The band is
+    bounded both ways, measured at sf0.1 and x50:
+    - below 16 MB the hint would SERIALIZE the heavy agg into a
+      broadcast build (sf0.1 interleaved A/B: 0.662 → 0.746 s med,
+      hint lost 8/8 pairs — so the bench plan keeps the current
+      shape). Under the default 10 MB autoBroadcastJoinThreshold
+      Catalyst broadcasts the orders side itself; the 10-16 MB
+      sub-band, where neither broadcast fires, keeps the exchange
+      plan on purpose;
+    - at 256 MB and above the qualifying set's WORST case (a non-selective
       dataset where every order qualifies) could exceed a safe
       broadcast relation, so the exchange plan returns — at 100 TB
       q18 runs exactly the r15 shape (agg exchange reused by the

@@ -66,11 +66,12 @@ def register(
 #     approx_distinct_users, approx_percentiles, and the two
 #     alphabetically-early stragglers), name order. After this window
 #     the oldest stamp anywhere in the registry is r12.
-# (2) slots 32-33: queries whose CODE changed this round —
-#     q18_large_orders (the X36 bloom-prune wired into its
-#     large-orders semi-join, gated on input size) and
-#     jaccard_block_pairs (round-15 verdict #6 candidate-volume
-#     pass).
+# (2) slots 32-33: queries planned for code changes this round —
+#     q18_large_orders and jaccard_block_pairs. Neither the X36
+#     bloom-prune for q18 nor the jaccard candidate-volume pass
+#     landed: the bloom was measured and rejected, and q18 got the
+#     band-gated broadcast of its HAVING-filtered aggregate instead
+#     (OPTIMIZATION_r16.md §5). jaccard_block_pairs is unchanged.
 # (3) remaining 17 slots: the oldest r12 stamps, name order
 #     (apply_in_pandas_scale .. event_transition_matrix); the r12
 #     remainder (events_rollup_grids .. top_customers_per_segment,

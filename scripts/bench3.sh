@@ -27,7 +27,7 @@ except Exception as ex:
 o = d.get('oracle_total')
 if not o:
     print(f\"run$i: value={d['value']} wall={d['value_wall_drains']}\"
-          f\" legacy={d['legacy_total']} (NO ORACLE — ratios unavailable)\")
+          f\" (NO ORACLE — ratios unavailable)\")
 else:
     omin = d.get('oracle_total_min', o)
     fair = 'FAIR' if d.get('pairing_fair', True) else 'UNFAIR-REJECT'
@@ -35,5 +35,5 @@ else:
           f\" oracle_min={omin} ratio_credited={d['value']/o:.3f}\"
           f\" ratio_vs_min={d['value']/omin:.3f}\"
           f\" ratio_wall={d['value_wall_drains']/o:.3f}\"
-          f\" legacy={d['legacy_total']} pairing={fair}\")"
+          f\" pairing={fair}\")"
 done

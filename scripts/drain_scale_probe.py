@@ -143,8 +143,8 @@ def _stage_single_file(spark, k: int) -> str:
 
 
 def drain_rep(spark, name: str, sf_dir: str) -> tuple[float, float]:
-    """One rep of the certified per-query state-store drain — same
-    credited accounting as bench.py's per_query_drain_rep."""
+    """One rep of the certified per-query state-store drain, credited
+    like bench.py's per-query run_once: wall − drain_wall + trigger."""
     from master_airflow_spark.streaming import events as stream_events
 
     stream_events.reset_drain_trigger_seconds()

@@ -12,13 +12,11 @@ sys.path.insert(0, ".")
 SHARED_DRAIN_DOC = """### shared-scan multi-view drain (bench methodology v6/v7)
 
 Since round 8 the bench times the two drained views as ONE unit
-(and since v7 it ALSO times a certified per-query drain every round
-— BENCH_DETAIL per_query_drain_sec, feeding legacy_total, which for
-the session view audits the STATE-STORE twin
-stream_session_window_state since round 13, the registered
-stream_session_window having become the partial-spool drain itself)
 running streaming/shared_drain.py — the deployment shape a
-production multi-view pipeline runs:
+production multi-view pipeline runs (the registered
+stream_session_window has itself been the partial-spool drain since
+round 13; its state-store twin stream_session_window_state is the
+reference tests/test_shared_drain.py compares against):
 
 - ONE AvailableNow foreachBatch pass over the events landing dir;
   each micro-batch is persisted once, then every view's BATCH partial

@@ -3,7 +3,7 @@ prepared plan N times against the noop sink with the event log on,
 then parses the log into per-job and per-stage timing with task
 counts — the UI-less equivalent of guide §7.1.
 
-Run: python scripts/r15_profile.py <query> [reps]
+Run: python scripts/query_profile.py <query> [reps]
 """
 
 from __future__ import annotations
@@ -11,19 +11,22 @@ from __future__ import annotations
 import json
 import os
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, ".")
-
-EVDIR = "/tmp/mas_eventlog_r15"
 
 
 def main() -> int:
     name = sys.argv[1]
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 4
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    os.environ["SPARK_GRAFT_EVENTLOG_DIR"] = EVDIR
+    with tempfile.TemporaryDirectory(prefix="mas_eventlog_") as evdir:
+        os.environ["SPARK_GRAFT_EVENTLOG_DIR"] = evdir
+        return profile(name, reps, sf_dir, evdir)
 
+
+def profile(name: str, reps: int, sf_dir: str, evdir: str) -> int:
     from master_airflow_spark import registry
     from master_airflow_spark.session import get_spark
 
@@ -67,9 +70,9 @@ def main() -> int:
     spark.stop()
 
     # parse event log (Spark 4 rolling layout: eventlog_v2_<app>/events_*)
-    path = os.path.join(EVDIR, app_id)
+    path = os.path.join(evdir, app_id)
     if not os.path.exists(path):
-        d = os.path.join(EVDIR, f"eventlog_v2_{app_id}")
+        d = os.path.join(evdir, f"eventlog_v2_{app_id}")
         parts = sorted(
             os.path.join(d, p) for p in os.listdir(d) if p.startswith("events_")
         )

@@ -694,25 +694,33 @@ def test_q18_band_gated_agg_broadcast(spark, sf_dir, monkeypatch):
     ~1.5% selectivity is invisible to Catalyst/AQE size estimation),
     so orders never shuffles; outside the band the hint must be
     absent — below it Catalyst broadcasts the orders side itself, and
-    at 100 TB the aggregate's worst case is not a safe broadcast."""
+    at 100 TB the aggregate's worst case is not a safe broadcast.
+    Auto-broadcast is off for both plans, so only the hint can put a
+    BroadcastExchange over the aggregate."""
+    import re
+
     import master_airflow_spark.operators.tpch_like as t
 
     def plan_at(orders_bytes):
         monkeypatch.setattr(t, "table_bytes", lambda d, n: orders_bytes)
         return formatted(_q(spark, sf_dir, "q18_large_orders"))
 
-    mid = plan_at(64 << 20)
-    # build side is the aggregate: a BroadcastExchange directly over
-    # the HashAggregate/Filter subtree, and no orders-key shuffle
-    assert "hashpartitioning(o_orderkey" not in mid, mid
-    assert "BroadcastExchange" in mid, mid
-
-    # past the band: the agg is NOT hinted; with auto-broadcast off the
-    # orders join plans its shuffle again (the 100 TB shape)
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
+        mid = plan_at(64 << 20)
         big = plan_at(1 << 40)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    # build side is the aggregate: a BroadcastExchange directly over
+    # the Filter(HAVING) / HashAggregate subtree, and no orders-key shuffle
+    agg_build = re.compile(
+        r"BroadcastExchange \(\d+\)\n[ :|]*\+- Filter \(\d+\)\n[ :|]*\+- HashAggregate"
+    )
+    assert agg_build.search(mid.split("\n\n")[0]), mid
+    assert "hashpartitioning(o_orderkey" not in mid, mid
+
+    # past the band: the agg is NOT hinted, and the orders join plans
+    # its shuffle again (the 100 TB shape)
+    assert "BroadcastExchange" not in big, big
     assert "hashpartitioning(o_orderkey" in big, big

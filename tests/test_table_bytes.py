@@ -12,7 +12,11 @@ from __future__ import annotations
 
 import os
 
-from master_airflow_spark.catalog import table_bytes
+from master_airflow_spark.catalog import (
+    _nanos_timestamp_cols,
+    parquet_part_stats,
+    table_bytes,
+)
 
 
 def test_single_file_table(tmp_path):
@@ -34,3 +38,23 @@ def test_directory_table_sums_parts_not_inode(tmp_path):
 
 def test_missing_table_is_zero(tmp_path):
     assert table_bytes(str(tmp_path), "orders") == 0
+
+
+def test_partitioned_table_walks_nested_dirs(tmp_path):
+    """partitionBy layout (k=v/part-*.parquet): every part sits one
+    level down, so a flat listing would size the table at 0 bytes."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path / "orders.parquet"
+    for k in (1, 2):
+        (d / f"k={k}").mkdir(parents=True)
+        ts = pa.array([k], pa.timestamp("ns"))
+        pq.write_table(pa.table({"ts": ts}), str(d / f"k={k}" / "part-0.parquet"))
+    stats = parquet_part_stats(str(d))
+    assert [s[0] for s in stats] == ["k=1/part-0.parquet", "k=2/part-0.parquet"]
+    total = sum(os.path.getsize(d / s[0]) for s in stats)
+    assert total > 0
+    assert table_bytes(str(tmp_path), "orders") == total
+    # the ns-column footer probe reads its first part from the same walk
+    assert _nanos_timestamp_cols(str(d)) == ["ts"]
