@@ -93,6 +93,19 @@ def table_bytes(sf_dir: str, name: str) -> int:
 FACT_BROADCAST_ORDERS_BYTES = 64 << 20
 
 
+def broadcast_if(
+    df: DataFrame, sf_dir: str, table: str, lo: int, hi: int
+) -> DataFrame:
+    """``df`` with a broadcast hint while ``table``'s table_bytes lie in
+    [lo, hi), else ``df`` unchanged. Fails safe: 0 bytes means the size
+    is unknown (a missing table, or part files without a ``.parquet``
+    suffix that the walker does not count), and an unknown size is
+    never hinted, whatever ``lo`` is. The one gate behind every
+    size-based broadcast hint (q5, revenue_by_nation, q18's band)."""
+    n = table_bytes(sf_dir, table)
+    return F.broadcast(df) if 0 < n and lo <= n < hi else df
+
+
 def ensure_session_defaults(spark: SparkSession) -> None:
     """Set the runtime-settable confs the engine's semantics depend on.
 

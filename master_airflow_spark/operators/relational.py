@@ -24,8 +24,8 @@ from pyspark.sql import functions as F
 
 from master_airflow_spark.catalog import (
     FACT_BROADCAST_ORDERS_BYTES,
+    broadcast_if,
     load_table,
-    table_bytes,
 )
 from master_airflow_spark.functions.exact import (
     cents,
@@ -145,8 +145,7 @@ def revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     o2 = orders.join(c2, orders.o_custkey == c2.c_custkey).select(
         "o_orderkey", "c_nationkey"
     )
-    if table_bytes(sf_dir, "orders") < FACT_BROADCAST_ORDERS_BYTES:
-        o2 = F.broadcast(o2)
+    o2 = broadcast_if(o2, sf_dir, "orders", 0, FACT_BROADCAST_ORDERS_BYTES)
     keyed = (
         lineitem.join(o2, lineitem.l_orderkey == o2.o_orderkey)
         .groupBy("c_nationkey")

@@ -1,15 +1,23 @@
 """Similarity search over embeddings (SURVEY.md §2.7 X25).
 
-Two plans for the same API:
-- ``cosine_topk`` — exact brute force: broadcast the query set against
-  the corpus, JVM-side dot products via zip_with/aggregate (no UDF, no
-  Arrow hop). Right answer at any SF where |queries| is modest; cost
-  is |Q|×|corpus|.
-- ``lsh_bucketed_ann`` — the 100 TB path: random-hyperplane LSH
-  (SimHash for vectors) buckets the corpus; candidates only join
-  within a bucket, turning O(|Q|·N) into O(|Q|·N/2^bits) expected.
-  Hyperplanes are deterministic (hash-derived pseudo-gaussians), so
-  results are reproducible without seeds.
+Three families answer the same top-k question for one bounded query
+set (_query_subset):
+- exact: ``cosine_topk`` — brute force. The query matrix ships as a
+  broadcast and the corpus streams through a numpy kernel; cost is
+  |Q|×|corpus|.
+- LSH: ``lsh_bucketed_ann`` — random-hyperplane buckets (SimHash for
+  vectors); only pairs that share a bucket in some table are scored.
+  The hyperplanes are hash-derived constants, so the whole chain
+  replays in DuckDB and carries an exact oracle.
+- filter-and-refine ANN: ``_ann_topk`` — one streaming pass behind IVF,
+  PQ and IVF-PQ. Coarse cells filter which (query, row) pairs are
+  scored; the score is exact (IVF) or product-quantized ADC lookups
+  (PQ, IVF-PQ), and PQ candidates are refined by an exact re-rank.
+  Each configuration has an ``*_ann_exhaustive`` twin that provably
+  equals cosine_topk and carries its oracle; ``*_recall_eval`` measure
+  the approximate ones.
+The module also holds the near-duplicate pair searches (exact
+all-pairs and LSH-verified) and SemDeDup.
 
 Float determinism: elements are cast float→double (exact) before
 multiply; both Spark's ``aggregate`` fold and DuckDB's ``list_sum``
@@ -217,8 +225,9 @@ def _pairs_kernel(
 
 
 # Brute-force cosine top-k ground truth over the bounded query set —
-# the oracle for cosine_topk AND for ivf_ann_exhaustive (whose all-cells
-# probe provably degenerates to the same result).
+# the oracle for cosine_topk AND for the three *_ann_exhaustive
+# configurations of _ann_topk (which provably degenerate to the same
+# result).
 _COSINE_TOPK_ORACLE = f"""
 WITH e AS (
     SELECT vec_id, embedding, {_SQL_NORM.format(e='embedding')} AS nrm
@@ -298,47 +307,29 @@ def _query_subset(e: DataFrame) -> DataFrame:
     )
 
 
-def _probe_matrix(Q, C, n_probe: int) -> "np.ndarray":
-    """(n_queries, n_probe) int matrix of each query's n_probe nearest
-    coarse cells by stable argsort (deterministic). ONE definition of
-    the probe-selection rule feeding the inverted cell→queries map
-    (_cell_to_queries) that both IVF and IVF-PQ ship in their kernel
-    broadcasts."""
+def _cell_to_queries(Q, C, n_probe: int) -> dict[int, "np.ndarray"]:
+    """Each query probes its n_probe nearest coarse cells (stable
+    argsort, deterministic); this is that assignment INVERTED: cell id
+    → ascending int array of the query POSITIONS probing it. Shipped
+    in the _ann_topk broadcast so probe pruning happens INSIDE the
+    scoring kernel — no (query, cell-member) row explosion ever
+    materializes."""
     import numpy as np
 
     qd2 = ((Q[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-    return np.stack(
-        [np.argsort(qd2[qi], kind="stable")[:n_probe] for qi in range(len(Q))]
-    )
-
-
-def _cell_to_queries(Q, C, n_probe: int) -> dict[int, "np.ndarray"]:
-    """The probe assignment INVERTED: cell id → sorted int array of
-    query POSITIONS probing that cell. Shipped inside the IVF and
-    IVF-PQ kernel broadcasts so probe pruning happens INSIDE the
-    scoring kernel — no (query, cell-member) row explosion ever
-    materializes (the round-14 verdict's weak cell)."""
-    import numpy as np
-
-    P = _probe_matrix(Q, C, n_probe)
-    out: dict[int, list[int]] = {}
-    for qi in range(len(Q)):
-        for c in P[qi]:
-            out.setdefault(int(c), []).append(qi)
-    return {c: np.asarray(qs, dtype=np.int64) for c, qs in out.items()}
+    probes = np.argsort(qd2, axis=1, kind="stable")[:, :n_probe]
+    return {
+        int(c): np.nonzero((probes == c).any(axis=1))[0] for c in np.unique(probes)
+    }
 
 
 def _exact_rerank(e: DataFrame, cand: DataFrame, q_ids, Q) -> DataFrame:
     """Exact cosine re-rank of (q_id, n_id) candidates to the global
     top-TOP_K: join candidates back to corpus embeddings and a
     broadcast query-matrix frame, score with _pair_cosine_kernel (the
-    oracle-bit-identical fold), total-order window (cosine desc, n_id)
-    — the tail the PQ-coded indexes share (round-14 review: the PQ
-    and IVF-PQ pipelines carried verbatim copies, the drift class the
-    _lloyd extraction already bit once; the third copy — _ivf_topk's
-    inline tail, the round-14 ADVICE item — was removed in round 15
-    when IVF's exact scoring moved INTO its grouped kernel and
-    stopped needing a re-rank join at all)."""
+    oracle-bit-identical fold), total-order window (cosine desc, n_id).
+    The refine step of every PQ-coded configuration of _ann_topk;
+    exact-scored IVF needs no re-rank join."""
     spark = e.sparkSession
     qmat = F.broadcast(
         spark.createDataFrame(
@@ -583,7 +574,33 @@ def lsh_bucketed_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairs.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= TOP_K)
 
 
-# -- IVF (inverted-file) ANN -------------------------------------------------
+# -- Filter-and-refine ANN: IVF, PQ and IVF-PQ ------------------------------
+#
+# One pipeline, three configurations of _ann_topk (REPOSE's filter then
+# refine; one index whose probe width varies, not one index per
+# configuration):
+# - FILTER: a deterministic k-means coarse quantizer splits the corpus
+#   into cells and each query scores only the members of its n_probe
+#   nearest cells — the searched fraction. At 100 TB the cell id is the
+#   partition key, so the probed-cell union partition-prunes the scan.
+# - SCORE: either the exact dimension-ordered fold (IVF, bit-identical
+#   to cosine_topk) or ADC over product-quantized residual codes (PQ,
+#   IVF-PQ; Jegou et al., TPAMI'11): each vector is stored as PQ_M
+#   small ints (4-bit codes at PQ_K = 16, a 64x cut vs float32 dim 64),
+#   and its approximate cosine is PQ_M table lookups per query.
+# - REFINE: ADC scores are approximate, so the top PQ_RERANK candidates
+#   per query are re-scored exactly (_exact_rerank).
+#
+# ADC algebra: with x̂ = c + r̂ (cell centroid plus quantized residual)
+# and subspaces partitioning the dims exactly,
+#   <q, x̂>   = <q, c>                       (per (query, cell) scalar)
+#            + Σ_m T[q, m, code_m]          (query-residual tables)
+#   ||x̂||²  = ||c||²                       (per-cell scalar)
+#            + 2·Σ_m CC[cell, m, code_m]    (centroid-residual tables)
+#            + Σ_m cn2[m, code_m]           (residual-norm tables)
+# so the approximate cosine of the RECONSTRUCTED vector is exact in the
+# lookups. Flat PQ is the one-cell case with a ZERO centroid: x - 0.0
+# is x exactly, and <q, c>, CC and ||c||² are exact zeros in the sums.
 
 N_CELLS = 16
 KMEANS_ITERS = 3
@@ -597,6 +614,24 @@ KMEANS_ITERS = 3
 # same recall. The LSH index (above) is the stronger ANN path here.
 N_PROBE = 6
 IVF_SAMPLE = 4096  # k-means training sample cap — bounds driver memory
+PQ_M = 8  # subspaces (dim 64 -> 8 dims each)
+PQ_K = 16  # centroids per subspace -> 4-bit codes
+# Re-rank width (measured sweep, round 14, flat PQ): recall@5 vs R on
+# the near-isotropic synthetic corpus —
+#   sf0.01: R=32/64/128/256 -> 0.64/0.76/0.92/1.00
+#   sf0.1:  R=32/64/128/256 -> 0.47/0.58/0.705/0.835
+# R=128 lands IVF-grade recall (0.92/0.705 vs IVF's 0.74/0.775 at
+# N_PROBE=6) while paying the exact dot product on 6.4% of the sf0.1
+# corpus vs IVF's 37.5% probed fraction — the ADC table lookups do
+# the other 93.6%. Same caveat as IVF: clusterless synthetic vectors
+# are ANN's worst case; clustered real corpora need smaller R.
+PQ_RERANK = 128  # ADC candidates per query kept for the exact re-rank
+
+
+def _nearest(X: "np.ndarray", C: "np.ndarray") -> "np.ndarray":
+    """Row index of each row of X's nearest row of C (squared L2,
+    first index on ties): coarse-cell assignment and PQ encoding."""
+    return ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
 
 
 def _lloyd(X: "np.ndarray", k: int) -> "np.ndarray":
@@ -605,17 +640,15 @@ def _lloyd(X: "np.ndarray", k: int) -> "np.ndarray":
     same centroids every run. Degrades gracefully on tiny inputs
     (fewer rows than k → fewer centroids), so callers must size
     downstream structures from the RETURNED shape, not from k. ONE
-    implementation shared by the IVF coarse quantizer and the PQ
-    subspace quantizers (round-14 review: the hand-copied PQ loop had
-    already drifted to a crashing range(PQ_K) on short seed lists)."""
+    implementation behind the coarse quantizer, the PQ subspace
+    quantizers and SemDeDup's cells."""
     import numpy as np
 
     stride = max(1, len(X) // k)
     cents = [X[i] for i in range(0, len(X), stride)[:k]][:k]
     for _ in range(KMEANS_ITERS):
         C = np.stack(cents)
-        d2 = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-        assign = d2.argmin(axis=1)
+        assign = _nearest(X, C)
         cents = [
             X[assign == c].mean(axis=0) if (assign == c).any() else C[c]
             for c in range(len(cents))
@@ -624,7 +657,7 @@ def _lloyd(X: "np.ndarray", k: int) -> "np.ndarray":
 
 
 def _quantizer_sample(e: DataFrame) -> "np.ndarray":
-    """The bounded deterministic training sample both quantizers draw
+    """The bounded deterministic training sample every quantizer draws
     from: first IVF_SAMPLE vectors by vec_id — at most
     O(IVF_SAMPLE·dim) on the driver no matter the corpus size. A
     quantizer trained on a few thousand points is the standard recipe
@@ -640,131 +673,239 @@ def _quantizer_sample(e: DataFrame) -> "np.ndarray":
     ).astype(np.float64)
 
 
-@register("ivf_ann_topk", oracle=None, tags=("X25",))
-def ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF approximate nearest neighbors: a deterministic k-means
-    coarse quantizer partitions the corpus into cells; each query
-    probes its N_PROBE nearest cells and is scored EXACTLY against
-    their members inside one grouped streaming kernel (~
-    N_PROBE/N_CELLS of the corpus per query; see _ivf_topk for the
-    round-15 no-join shape). The cell id is the partition/cluster key
-    at 100 TB — the probed-cell union partition-prunes the scan.
-    Rows-only (recall < 1 by design); the exact ground truth is
-    cosine_topk, and the SAME machinery is exactly certified by
-    ivf_ann_exhaustive."""
-    return _ivf_topk(spark, sf_dir, N_PROBE)
+def _quantizers(X: "np.ndarray", n_cells: int, pq: bool):
+    """(C, books) trained by _lloyd on the sample X: coarse centroids C
+    (n_cells_eff, dim) and, when pq, residual codebooks
+    (PQ_M, k_eff, dim // PQ_M) — None otherwise. n_cells == 1 is flat
+    PQ: one zero centroid, so the residuals are X itself. k_eff ==
+    PQ_K except on corpora smaller than PQ_K, where every consumer
+    sizes itself from the returned shape (tiny corpora degrade to
+    coarser codes instead of crashing)."""
+    import numpy as np
+
+    dim = X.shape[1]
+    C = _lloyd(X, n_cells) if n_cells > 1 else np.zeros((1, dim))
+    if not pq:
+        return C, None
+    if dim % PQ_M:
+        raise ValueError(f"embedding dim {dim} not divisible by PQ_M={PQ_M}")
+    dsub = dim // PQ_M
+    R = X - C[_nearest(X, C)]
+    return C, np.stack(
+        [_lloyd(R[:, m * dsub : (m + 1) * dsub], PQ_K) for m in range(PQ_M)]
+    )
 
 
-@register(
-    "ivf_ann_exhaustive",
-    oracle=_COSINE_TOPK_ORACLE,
-    tags=("X25",),
-)
-def ivf_ann_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The IVF pipeline with every cell probed (n_probe = N_CELLS):
-    every query scores every cell group, so the kernel computes every
-    (row, query) pair with cosine_topk's exact arithmetic and the
-    result PROVABLY equals brute-force cosine top-k — which is exactly
-    what the oracle states. This certifies the whole IVF machinery
-    (sampled k-means quantizer, in-kernel cell assignment, inverted
-    probe map, grouped exact-scoring fold) under the driver's
-    hash-diff, while ivf_ann_topk keeps the approximate (recall < 1)
-    configuration the recall tests pin."""
-    return _ivf_topk(spark, sf_dir, N_CELLS)
+def _ann_topk(
+    spark: SparkSession,
+    sf_dir: str,
+    n_cells: int,
+    n_probe: int,
+    pq: bool,
+    rerank: int | None,
+) -> DataFrame:
+    """The ANN pipeline (see the section comment). One streaming
+    mapInPandas pass over the corpus; per Arrow batch it
+    1. assigns each row to its nearest coarse cell,
+    2. when pq, encodes the row's residual inline (no encode pass),
+    3. scores each cell group against only the queries probing it (the
+       inverted _cell_to_queries map, shipped in the one broadcast):
+       the exact fold for IVF, the ADC lookup algebra for PQ codes,
+    4. self-excludes and cuts each query to its top W under the total
+       order (score desc, n_id asc), then cuts the whole batch again.
+    W is TOP_K for IVF (its scores are already exact) and rerank for
+    PQ; rerank=None keeps every candidate. A global window then takes
+    the top W — valid because any global top-W row is in its batch's
+    top W — and PQ candidates go to _exact_rerank. The corpus never
+    shuffles; the exchange carries at most W·|Q| rows per batch.
 
-
-def _ivf_topk(spark: SparkSession, sf_dir: str, n_probe: int) -> DataFrame:
-    """One streaming kernel pass: assign each corpus batch to coarse
-    cells, then score each cell group EXACTLY (the _pairs_kernel
-    dimension-ordered fold, so emitted cosines are bit-identical to
-    cosine_topk and to the DuckDB oracle) against only the queries
-    probing that cell, with per-batch top-K pruning.
-
-    This is the round-15 grouped-kernel shape that already cleared
-    the IVF-PQ weak cell, applied to the exact-scoring IVF path: the
-    previous form joined a (q_id, cell) probe frame against a
-    (corpus ⋈ cell-assignment) frame, materializing one exchanged row
-    per (query, probed-cell member) — each carrying a dim-64
-    embedding — plus a corpus-wide vec_id join just to attach the
-    assignment. Both joins are gone; the corpus streams ONCE, never
-    shuffles, and the only exchanged rows are per-batch top-K
-    candidates (≤ K·|Q| per batch). At 100 TB the corpus is laid out
-    cell-partitioned and the probed-cell union partition-prunes the
-    scan, so unprobed cells never leave disk — the pruning the probe
-    join used to provide, without its exchange.
-
-    With n_probe = N_CELLS every query probes every cell, the kernel
-    scores every (row, query) pair with cosine_topk's exact
-    arithmetic, and the result PROVABLY equals brute-force top-k —
-    the ivf_ann_exhaustive certification anchor."""
+    Exhaustive anchors: with n_probe = n_cells every query scores every
+    row, so IVF computes brute-force cosine top-k with cosine_topk's
+    exact arithmetic, and PQ with rerank=None re-ranks every row
+    exactly — either way the result PROVABLY equals cosine_topk."""
     import numpy as np
     import pandas as pd
 
     e = load_table(spark, sf_dir, "embeddings")
-    C = _lloyd(_quantizer_sample(e), N_CELLS)
+    C, books = _quantizers(_quantizer_sample(e), n_cells, pq)
     q_ids, Q = _collect_queries(_query_subset(e))
-    cell_to_q = _cell_to_queries(Q, C, n_probe)
-    qn = _seq_norms(Q)
-    dim = Q.shape[1]
-    # ONE tracked broadcast (not closure capture — the per-task plan
-    # re-serialization anti-pattern _pairs_kernel's docstring names).
+    width = rerank if pq else TOP_K
+    tables = None
+    if pq:
+        dsub = books.shape[2]
+        tables = (
+            np.einsum("qmd,mkd->qmk", Q.reshape(len(Q), PQ_M, dsub), books),  # T
+            Q @ C.T,  # <q, c>
+            np.einsum("cmd,mkd->cmk", C.reshape(len(C), PQ_M, dsub), books),  # CC
+            (books**2).sum(axis=2),  # cn2
+            (C**2).sum(axis=1),  # ||c||²
+        )
+        qn = np.sqrt((Q**2).sum(axis=1))
+    else:
+        qn = _seq_norms(Q)
     bc = track_broadcast(
-        spark.sparkContext.broadcast((q_ids, Q, qn, C, cell_to_q))
+        spark.sparkContext.broadcast(
+            (q_ids, Q, qn, C, books, tables, _cell_to_queries(Q, C, n_probe))
+        )
     )
 
     def run(batches):
-        q_ids, Q, qn, C, cell_to_q = bc.value
+        q_ids, Q, qn, C, books, tables, cell_to_q = bc.value
         for pdf in batches:
             if not len(pdf):
                 continue
             X = _to_matrix(pdf["embedding"])
             ids = pdf["vec_id"].to_numpy()
-            d2 = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-            cell = d2.argmin(axis=1)
-            xn = _seq_norms(X)
-            out = []
+            cell = _nearest(X, C)
+            if pq:
+                T, qc, CC, cn2, c2 = tables
+                R = X - C[cell]
+                codes = np.stack(
+                    [
+                        _nearest(R[:, m * dsub : (m + 1) * dsub], books[m])
+                        for m in range(PQ_M)
+                    ],
+                    axis=1,
+                )
+            else:
+                xn = _seq_norms(X)
+            qs, ns, ss = [], [], []
             for cv in np.unique(cell):
                 qidx = cell_to_q.get(int(cv))
                 if qidx is None:  # cell probed by no query
                     continue
                 rows = np.nonzero(cell == cv)[0]
-                Xi = X[rows]
-                acc = np.zeros((len(rows), len(qidx)))
-                for i in range(dim):
-                    # in-place += keeps the sequential-over-dim order
-                    # (bit-exact vs the oracle's list fold)
-                    acc += Xi[:, i : i + 1] * Q[qidx, i][None, :]
-                cos = acc / (xn[rows][:, None] * qn[qidx][None, :])
-                n_idx, q_idx = np.nonzero(np.ones_like(cos, dtype=bool))
-                df = pd.DataFrame(
-                    {
-                        "q_id": q_ids[qidx[q_idx]],
-                        "n_id": ids[rows][n_idx],
-                        "cosine": cos[n_idx, q_idx],
-                    }
-                )
-                out.append(df[df.q_id != df.n_id])
-            if not out:
+                if pq:
+                    # (probing queries × rows) dot block; the norm
+                    # terms are per row (query-independent)
+                    S = np.repeat(qc[qidx, cv][:, None], len(rows), axis=1)
+                    n2 = np.full(len(rows), c2[cv])
+                    for m in range(PQ_M):
+                        code = codes[rows, m]
+                        S += T[qidx[:, None], m, code[None, :]]
+                        n2 += 2.0 * CC[cv, m, code] + cn2[m, code]
+                    S /= np.sqrt(np.maximum(n2, 1e-30))[None, :] * qn[qidx][:, None]
+                else:
+                    Qp, Xr = Q[qidx], X[rows]
+                    S = np.zeros((len(qidx), len(rows)))
+                    for i in range(Q.shape[1]):
+                        # in-place += keeps the sequential-over-dim order
+                        # (bit-exact vs the oracle's list fold)
+                        S += Qp[:, i : i + 1] * Xr[:, i][None, :]
+                    S /= qn[qidx][:, None] * xn[rows][None, :]
+                v = ids[rows]
+                self_q = q_ids[qidx][:, None]
+                if width is None:
+                    qi, ni = np.nonzero(v[None, :] != self_q)
+                else:
+                    # per-query (score desc, n_id asc); one extra slot
+                    # covers the dropped self-pair
+                    order = np.lexsort((np.broadcast_to(v, S.shape), -S))
+                    order = order[:, : width + 1]
+                    keep = v[order] != self_q
+                    keep &= np.cumsum(keep, axis=1) <= width
+                    qi, pos = np.nonzero(keep)
+                    ni = order[qi, pos]
+                qs.append(qidx[qi])
+                ns.append(v[ni])
+                ss.append(S[qi, ni])
+            if not qs:
                 continue
-            res = pd.concat(out, ignore_index=True)
-            if len(res):
-                # per-batch top-K across cell groups — a superset of
-                # every query's global top-K (same total order)
-                res = (
-                    res.sort_values(
-                        ["q_id", "cosine", "n_id"],
-                        ascending=[True, False, True],
-                    )
-                    .groupby("q_id", sort=False)
-                    .head(TOP_K)
-                )
-            yield res
+            q, n, s = (np.concatenate(a) for a in (qs, ns, ss))
+            if width is not None:
+                # per-batch cut across cell groups, same total order
+                o = np.lexsort((n, -s, q))
+                q, n, s = q[o], n[o], s[o]
+                keep = np.arange(len(q)) - np.searchsorted(q, q) < width
+                q, n, s = q[keep], n[keep], s[keep]
+            yield pd.DataFrame({"q_id": q_ids[q], "n_id": n, "cosine": s})
 
     pairs = e.select("vec_id", "embedding").mapInPandas(
         run, "q_id long, n_id long, cosine double"
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("n_id"))
-    return pairs.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= TOP_K)
+    if width is not None:
+        w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("n_id"))
+        pairs = pairs.withColumn("rn", F.row_number().over(w)).where(
+            F.col("rn") <= width
+        )
+    return _exact_rerank(e, pairs, q_ids, Q) if pq else pairs
+
+
+@register("ivf_ann_topk", oracle=None, tags=("X25",))
+def ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF: each query is scored EXACTLY against the members of its
+    N_PROBE nearest of N_CELLS cells (~N_PROBE/N_CELLS of the corpus).
+    Rows-only (recall < 1 by design); ivf_recall_eval measures it and
+    ivf_ann_exhaustive certifies the same machinery."""
+    return _ann_topk(spark, sf_dir, N_CELLS, N_PROBE, False, None)
+
+
+@register("ivf_ann_exhaustive", oracle=_COSINE_TOPK_ORACLE, tags=("X25",))
+def ivf_ann_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF with every cell probed: provably brute-force cosine top-k,
+    so it carries cosine_topk's oracle and certifies the quantizer,
+    cell assignment, probe map and exact-scoring fold under the
+    oracle hash-diff."""
+    return _ann_topk(spark, sf_dir, N_CELLS, N_CELLS, False, None)
+
+
+@register("ivf_recall_eval", oracle=None, tags=("X25", "quality"))
+def ivf_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-query recall@k of ivf_ann_topk vs the exact ground truth
+    (_recall_eval). Deterministic end to end, but the quantizer is
+    iterative (not ANSI-SQL-expressible), so rows-only; the floors live
+    in tests/test_similarity.py and SCALE.md."""
+    return _recall_eval(cosine_topk(spark, sf_dir), ivf_ann_topk(spark, sf_dir))
+
+
+@register("pq_ann_topk", oracle=None, tags=("X25",))
+def pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Flat PQ: ADC top-PQ_RERANK candidates per query over the whole
+    corpus, exact re-rank to top-k. Rows-only (recall < 1 by design);
+    pq_recall_eval measures it and pq_ann_exhaustive certifies the same
+    machinery."""
+    return _ann_topk(spark, sf_dir, 1, 1, True, PQ_RERANK)
+
+
+@register("pq_ann_exhaustive", oracle=_COSINE_TOPK_ORACLE, tags=("X25",))
+def pq_ann_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Flat PQ with every row kept as a candidate: the exact re-rank
+    provably returns brute-force cosine top-k, certifying codebooks,
+    encoding, ADC lookups and the re-rank under the oracle
+    hash-diff."""
+    return _ann_topk(spark, sf_dir, 1, 1, True, None)
+
+
+@register("pq_recall_eval", oracle=None, tags=("X25", "quality"))
+def pq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-query recall@k of pq_ann_topk vs the exact ground truth
+    (_recall_eval; rows-only, pytest floor in tests/test_similarity.py)."""
+    return _recall_eval(cosine_topk(spark, sf_dir), pq_ann_topk(spark, sf_dir))
+
+
+@register("ivfpq_ann_topk", oracle=None, tags=("X25",))
+def ivfpq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF-PQ, the FAISS-style composed index: probe N_PROBE cells,
+    ADC-score their members' residual codes, exact re-rank of the top
+    PQ_RERANK. Rows-only; ivfpq_recall_eval measures it and
+    ivfpq_ann_exhaustive certifies the same machinery."""
+    return _ann_topk(spark, sf_dir, N_CELLS, N_PROBE, True, PQ_RERANK)
+
+
+@register("ivfpq_ann_exhaustive", oracle=_COSINE_TOPK_ORACLE, tags=("X25",))
+def ivfpq_ann_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF-PQ with every cell probed and every candidate re-ranked:
+    provably brute-force cosine top-k, certifying the composed
+    machinery (coarse assign, residual encode, probe map, per-cell
+    ADC algebra, re-rank)."""
+    return _ann_topk(spark, sf_dir, N_CELLS, N_CELLS, True, None)
+
+
+@register("ivfpq_recall_eval", oracle=None, tags=("X25", "quality"))
+def ivfpq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-query recall@k of ivfpq_ann_topk vs the exact ground truth
+    (_recall_eval; rows-only, pytest floor in tests/test_similarity.py)."""
+    return _recall_eval(cosine_topk(spark, sf_dir), ivfpq_ann_topk(spark, sf_dir))
 
 
 def _threshold_pair_chunks(pdf, Bm, b_norms, b_ids):
@@ -955,10 +1096,10 @@ hits AS (
     FROM lsh l JOIN exact e ON e.q_id = l.q_id AND e.n_id = l.n_id
     GROUP BY l.q_id
 ),
-qs AS (SELECT DISTINCT q_id FROM exact)
+qs AS (SELECT q_id, count(*) AS n_true FROM exact GROUP BY q_id)
 SELECT qs.q_id,
        COALESCE(h.n_hits, 0) AS n_hits,
-       CAST(COALESCE(h.n_hits, 0) AS DOUBLE) / {TOP_K} AS recall_at_k
+       CAST(COALESCE(h.n_hits, 0) AS DOUBLE) / qs.n_true AS recall_at_k
 FROM qs LEFT JOIN hits h ON h.q_id = qs.q_id
 """
 
@@ -967,36 +1108,21 @@ FROM qs LEFT JOIN hits h ON h.q_id = qs.q_id
 def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@k of the LSH ANN index against the exact cosine ground
     truth, per query — the evaluation harness an ANN deployment runs
-    after every index build (recall drift = rebuild signal). Composes
-    the two certified operators and reduces their outputs with one
-    (q_id, n_id) equi-join + a query-sized aggregate, so the eval
-    costs one extra join over the index queries themselves. Both
+    after every index build (recall drift = rebuild signal). Both
     sides are deterministic (hash-derived hyperplanes; total-ordered
     top-k), so even this quality METRIC carries an exact oracle —
     recall is reproducible, not a point estimate."""
-    exact = cosine_topk(spark, sf_dir).select("q_id", "n_id")
-    lsh = lsh_bucketed_ann(spark, sf_dir).select("q_id", "n_id")
-    hits = lsh.join(exact, ["q_id", "n_id"]).groupBy("q_id").agg(
-        F.count(F.lit(1)).alias("n_hits")
-    )
-    qs = exact.select("q_id").distinct()
-    return qs.join(hits, "q_id", "left").select(
-        "q_id",
-        F.coalesce(F.col("n_hits"), F.lit(0)).alias("n_hits"),
-        (F.coalesce(F.col("n_hits"), F.lit(0)).cast("double") / F.lit(TOP_K)).alias(
-            "recall_at_k"
-        ),
-    )
+    return _recall_eval(cosine_topk(spark, sf_dir), lsh_bucketed_ann(spark, sf_dir))
 
 
 def _recall_eval(exact: DataFrame, ann: DataFrame) -> DataFrame:
     """Per-query recall@k of ``ann`` against ``exact`` ground truth:
-    one (q_id, n_id) equi-join + a query-sized aggregate, divided by
-    the PER-QUERY ground-truth size (round-13 ADVICE — a TOP_K-literal
-    denominator understates recall when the exact side returns fewer
-    than k neighbors). ONE implementation shared by ivf_recall_eval
-    and pq_recall_eval (round-14 review: the two had verbatim copies,
-    so a denominator fix would have had to land twice)."""
+    one (q_id, n_id) equi-join + a query-sized aggregate, so the eval
+    costs one extra join over the index queries themselves. Divides
+    by the PER-QUERY ground-truth size: a TOP_K-literal denominator
+    understates recall when the exact side returns fewer than k
+    neighbors (a corpus smaller than TOP_K). The one evaluator behind
+    every *_recall_eval query."""
     exact = exact.select("q_id", "n_id")
     ann = ann.select("q_id", "n_id")
     hits = ann.join(exact, ["q_id", "n_id"]).groupBy("q_id").agg(
@@ -1009,33 +1135,6 @@ def _recall_eval(exact: DataFrame, ann: DataFrame) -> DataFrame:
         (
             F.coalesce(F.col("n_hits"), F.lit(0)).cast("double") / F.col("n_true")
         ).alias("recall_at_k"),
-    )
-
-
-@register("ivf_recall_eval", oracle=None, tags=("X25", "quality"))
-def ivf_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@k of the IVF index (n_probe = N_PROBE) against the exact
-    cosine ground truth, per query — the IVF counterpart of
-    ann_recall_eval (round-12 verdict #5: ivf_ann_topk was the one ANN
-    path with no measured recall row). Same reduction: one (q_id,
-    n_id) equi-join between the two certified operators plus a
-    query-sized aggregate. Both inputs are deterministic (sampled
-    k-means quantizer with fixed seeding, stable cell argsort,
-    total-ordered top-k), so the recall numbers are reproducible —
-    but the IVF side itself is not ANSI-SQL-expressible (the
-    quantizer is iterative), so this is a rows-only registry entry;
-    the quantitative floor lives in tests/test_similarity.py
-    (mean recall and per-query minimum at test SF) and SCALE.md
-    (x10 replica measurement).
-
-    Denominator (round-13 ADVICE): recall divides by the PER-QUERY
-    exact ground-truth size, not the TOP_K literal — on a corpus
-    smaller than TOP_K (or a degenerate one) the exact side returns
-    fewer than k neighbors and a constant denominator would
-    understate recall; on the bench corpus the two are equal, so the
-    registered numbers are unchanged."""
-    return _recall_eval(
-        cosine_topk(spark, sf_dir), ivf_ann_topk(spark, sf_dir)
     )
 
 
@@ -1216,388 +1315,6 @@ def embedding_near_dup_lsh_verified(spark: SparkSession, sf_dir: str) -> DataFra
     return scored.where(F.col("cosine") >= 0.95).select(
         F.col("q_id").alias("a_id"), F.col("n_id").alias("b_id"), "cosine"
     )
-
-
-# -- Product-quantization ANN (the memory-bounded 100 TB path) ---------------
-#
-# IVF bounds the SEARCHED fraction of the corpus; PQ bounds its MEMORY:
-# each vector is quantized subspace-by-subspace to PQ_M codebook ids, so
-# the search structure holds PQ_M small ints per vector (4-bit codes at
-# PQ_K = 16 — a 64x cut vs the raw float32 dim-64 vectors) and the full
-# embedding is only ever touched for the exact re-rank of a bounded
-# candidate set. Scoring is ADC (asymmetric distance computation,
-# Jegou et al., TPAMI'11 "Product Quantization for Nearest Neighbor
-# Search"): per query, one (PQ_M x PQ_K) table of query-subvector /
-# centroid dot products is broadcast, and each corpus vector's
-# approximate dot is PQ_M table lookups — no per-pair float math.
-
-PQ_M = 8  # subspaces (dim 64 -> 8 dims each)
-PQ_K = 16  # centroids per subspace -> 4-bit codes
-# Re-rank width (measured sweep, round 14): recall@5 vs R on the
-# near-isotropic synthetic corpus —
-#   sf0.01: R=32/64/128/256 -> 0.64/0.76/0.92/1.00
-#   sf0.1:  R=32/64/128/256 -> 0.47/0.58/0.705/0.835
-# R=128 lands IVF-grade recall (0.92/0.705 vs IVF's 0.74/0.775 at
-# N_PROBE=6) while paying the exact dot product on 6.4% of the sf0.1
-# corpus vs IVF's 37.5% probed fraction — the ADC table lookups do
-# the other 93.6%. Same caveat as IVF: clusterless synthetic vectors
-# are ANN's worst case; clustered real corpora need smaller R.
-PQ_RERANK = 128  # ADC candidates per query kept for the exact re-rank
-
-
-def _pq_codebooks(e: DataFrame) -> "np.ndarray":
-    """(PQ_M, k_eff, dsub) codebooks — _lloyd (the shared deterministic
-    sampled quantizer, see its docstring) run independently per
-    subspace over the shared _quantizer_sample. k_eff == PQ_K except
-    on corpora smaller than PQ_K, where _lloyd returns fewer
-    centroids and every consumer sizes itself from the returned shape
-    (codes argmin, ADC tables, cn2) — tiny corpora degrade to coarser
-    codes instead of crashing. Driver cost is O(IVF_SAMPLE * dim)
-    whatever the corpus size."""
-    import numpy as np
-
-    X = _quantizer_sample(e)
-    dim = X.shape[1]
-    if dim % PQ_M:
-        raise ValueError(f"embedding dim {dim} not divisible by PQ_M={PQ_M}")
-    dsub = dim // PQ_M
-    return np.stack(
-        [_lloyd(X[:, m * dsub : (m + 1) * dsub], PQ_K) for m in range(PQ_M)]
-    )
-
-
-def _pq_topk(spark: SparkSession, sf_dir: str, rerank: int | None) -> DataFrame:
-    """Shared PQ pipeline: encode -> ADC candidate generation -> exact
-    re-rank. rerank=None keeps EVERY corpus vector as a candidate, so
-    the exact re-rank provably returns brute-force cosine top-k
-    whatever the ADC scores say — the certification anchor
-    (pq_ann_exhaustive), same trick as ivf_ann_exhaustive's all-cells
-    probe. With rerank=PQ_RERANK only the ADC top-R per query pays the
-    exact dot product.
-
-    100 TB shape: codebooks + per-query ADC tables broadcast
-    (PQ_M*PQ_K doubles per query); the corpus streams once through the
-    encode kernel and once through the ADC kernel with per-batch top-R
-    pruning, so the candidate exchange carries <= R rows per (query,
-    batch) — bounded by the query cap, not the corpus; the re-rank
-    join touches R*|Q| embeddings. The corpus never shuffles."""
-    import numpy as np
-    import pandas as pd
-
-    e = load_table(spark, sf_dir, "embeddings")
-    books = _pq_codebooks(e)
-    dsub = books.shape[2]
-
-    def encode(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = _to_matrix(pdf["embedding"])
-            codes = np.zeros((len(pdf), PQ_M), dtype=np.int32)
-            for m in range(PQ_M):
-                S = X[:, m * dsub : (m + 1) * dsub]
-                d2 = ((S[:, None, :] - books[m][None, :, :]) ** 2).sum(axis=2)
-                codes[:, m] = d2.argmin(axis=1)
-            yield pd.DataFrame({"vec_id": pdf["vec_id"], "codes": list(codes)})
-
-    codes_df = e.select("vec_id", "embedding").mapInPandas(
-        encode, "vec_id long, codes array<int>"
-    )
-
-    q_ids, Q = _collect_queries(_query_subset(e))
-    # ADC tables: T[qi, m, k] = <q_sub, centroid>; subspaces partition
-    # the dims, so sum_m lookups = <q, reconstruction(x)>. cn2[m, k] =
-    # ||centroid||^2 gives the reconstructed norm the approximate
-    # cosine divides by (subspace orthogonality makes the sum exact
-    # for the RECONSTRUCTED vector). The tables ship as ONE tracked
-    # SparkContext broadcast read via .value INSIDE the kernel —
-    # ~1 MB at the query cap, which in a closure would re-serialize
-    # with the plan for every task (the anti-pattern _pairs_kernel's
-    # docstring names; round-14 review catch).
-    T = np.einsum("qmd,mkd->qmk", Q.reshape(len(q_ids), PQ_M, dsub), books)
-    cn2 = (books**2).sum(axis=2)  # (M, k_eff)
-    qn = np.sqrt((Q**2).sum(axis=1))
-    bc_adc = track_broadcast(spark.sparkContext.broadcast((q_ids, T, cn2, qn)))
-
-    def adc(batches):
-        q_ids, T, cn2, qn = bc_adc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            Cd = np.stack(pdf["codes"].to_numpy()).astype(np.int64)  # (n, M)
-            score = np.zeros((len(pdf), len(q_ids)))
-            n2 = np.zeros(len(pdf))
-            for m in range(PQ_M):
-                score += T[:, m, Cd[:, m]].T
-                n2 += cn2[m, Cd[:, m]]
-            approx = score / (np.sqrt(np.maximum(n2, 1e-30))[:, None] * qn[None, :])
-            vids = pdf["vec_id"].to_numpy()
-            out = []
-            for qi in range(len(q_ids)):
-                mask = vids != q_ids[qi]
-                s = approx[mask, qi]
-                v = vids[mask]
-                order = np.lexsort((v, -s))  # (adc desc, n_id asc): total order
-                if rerank is not None:
-                    order = order[:rerank]  # per-batch cut; global cut below
-                out.append(
-                    pd.DataFrame(
-                        {"q_id": int(q_ids[qi]), "n_id": v[order], "adc": s[order]}
-                    )
-                )
-            if out:
-                yield pd.concat(out, ignore_index=True)
-
-    cand = codes_df.mapInPandas(adc, "q_id long, n_id long, adc double")
-    if rerank is not None:
-        # per-batch top-R union -> global top-R under the SAME total
-        # order: a valid reduction (any global top-R row is in its
-        # batch's top-R), partition-layout-invariant by the n_id tiebreak
-        wv = Window.partitionBy("q_id").orderBy(F.col("adc").desc(), F.col("n_id"))
-        cand = cand.withColumn("crn", F.row_number().over(wv)).where(
-            F.col("crn") <= rerank
-        )
-    return _exact_rerank(e, cand, q_ids, Q)
-
-
-@register("pq_ann_topk", oracle=None, tags=("X25",))
-def pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization ANN: ADC top-PQ_RERANK candidates per
-    query, exact cosine re-rank to top-k. Rows-only by design (the
-    subspace k-means quantizer is iterative, recall < 1); the exact
-    ground truth is cosine_topk, the recall row is pq_recall_eval,
-    and the SAME machinery is exactly certified by
-    pq_ann_exhaustive."""
-    return _pq_topk(spark, sf_dir, PQ_RERANK)
-
-
-@register("pq_ann_exhaustive", oracle=_COSINE_TOPK_ORACLE, tags=("X25",))
-def pq_ann_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PQ pipeline with rerank=None: every corpus vector survives
-    candidate generation, so the exact re-rank PROVABLY equals
-    brute-force cosine top-k — which is exactly what the oracle
-    states. Certifies the whole PQ machinery (subspace codebooks,
-    encode kernel, ADC tables and lookups, candidate union, re-rank
-    kernel) under the driver's hash-diff, while pq_ann_topk keeps the
-    approximate configuration the recall tests pin."""
-    return _pq_topk(spark, sf_dir, None)
-
-
-@register("pq_recall_eval", oracle=None, tags=("X25", "quality"))
-def pq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@k of pq_ann_topk against the exact cosine ground truth,
-    per query — the PQ counterpart of ivf_recall_eval (same reduction,
-    same per-query ground-truth denominator). Deterministic end to
-    end, but the quantizer is iterative, so rows-only; the pytest
-    floor lives in tests/test_similarity.py."""
-    return _recall_eval(
-        cosine_topk(spark, sf_dir), pq_ann_topk(spark, sf_dir)
-    )
-
-
-# -- IVF-PQ: the composed production index (cells x residual codes) ----------
-#
-# The FAISS-style 100 TB recipe: the IVF coarse quantizer bounds the
-# SEARCHED fraction (probe n_probe of N_CELLS cells per query — probe
-# pruning happens inside the ADC kernel via an inverted
-# cell → probing-queries map, and at scale the cell id is the
-# partition key so the probed-cell union partition-prunes the scan;
-# unprobed cells never leave disk), and PQ bounds
-# MEMORY inside each cell (vectors stored as PQ_M residual codes, not
-# floats). Residual encoding (x - cell_centroid quantized, not x)
-# keeps codebook resolution where the data actually is. Scoring is
-# pure table lookups: with x̂ = c + r̂ and subspaces partitioning the
-# dims exactly,
-#   <q, x̂>   = <q, c>            (per (query, cell) scalar)
-#            + Σ_m T[q, m, code_m]        (query-residual tables)
-#   ||x̂||²  = ||c||²                     (per-cell scalar)
-#            + 2·Σ_m CC[cell, m, code_m]  (centroid-residual tables)
-#            + Σ_m cn2[m, code_m]         (residual-norm tables)
-# so the approximate cosine of the RECONSTRUCTED vector is exact in
-# the lookups — no per-pair float math until the final re-rank.
-
-IVFPQ_RERANK = 128  # exact re-rank width (same sweep logic as PQ_RERANK)
-
-
-def _ivfpq_topk(
-    spark: SparkSession, sf_dir: str, n_probe: int, rerank: int | None
-) -> DataFrame:
-    """Shared IVF-PQ pipeline. n_probe=N_CELLS with rerank=None keeps
-    every (query, cell) pair probed and every candidate exactly
-    re-ranked, so the result PROVABLY equals brute-force cosine top-k
-    (the certification anchor, ivfpq_ann_exhaustive) — the same
-    double-degeneration trick as ivf_ann_exhaustive + pq_ann_exhaustive,
-    here certifying the composed machinery: coarse assign, residual
-    encode, inverted probe map, per-cell grouped ADC lookup algebra,
-    re-rank."""
-    import numpy as np
-    import pandas as pd
-
-    e = load_table(spark, sf_dir, "embeddings")
-    X = _quantizer_sample(e)
-    dim = X.shape[1]
-    if dim % PQ_M:
-        raise ValueError(f"embedding dim {dim} not divisible by PQ_M={PQ_M}")
-    dsub = dim // PQ_M
-    C = _lloyd(X, N_CELLS)  # coarse centroids (n_cells_eff, dim)
-    n_cells = C.shape[0]
-    # residual codebooks: train on the SAMPLE's residuals vs its
-    # assigned cells — same bounded-sample recipe as every quantizer
-    d2s = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-    R = X - C[d2s.argmin(axis=1)]
-    books = np.stack(
-        [_lloyd(R[:, m * dsub : (m + 1) * dsub], PQ_K) for m in range(PQ_M)]
-    )
-
-    def encode(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = _to_matrix(pdf["embedding"])
-            d2 = ((V[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-            cell = d2.argmin(axis=1)
-            res = V - C[cell]
-            codes = np.zeros((len(pdf), PQ_M), dtype=np.int32)
-            for m in range(PQ_M):
-                S = res[:, m * dsub : (m + 1) * dsub]
-                dd = ((S[:, None, :] - books[m][None, :, :]) ** 2).sum(axis=2)
-                codes[:, m] = dd.argmin(axis=1)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "cell": cell.astype(np.int32),
-                    "codes": list(codes),
-                }
-            )
-
-    codes_df = e.select("vec_id", "embedding").mapInPandas(
-        encode, "vec_id long, cell int, codes array<int>"
-    )
-
-    q_ids, Q = _collect_queries(_query_subset(e))
-    nq = len(q_ids)
-    # Probe pruning lives INSIDE the ADC kernel as an inverted
-    # cell → probing-query-positions map (round-15, clearing the
-    # round-14 verdict's weak cell): the old form equi-joined a
-    # (q_id, cell) probe frame against the corpus codes, which
-    # materialized one exchanged row per (query, probed-cell member)
-    # — |Q| × probed-fraction of the corpus, a 3.7×-vs-flat-PQ row
-    # explosion at x50. Here the corpus codes stream through ONE
-    # kernel pass (exactly like flat PQ); each Arrow batch is grouped
-    # by cell and scored only against the queries probing that cell,
-    # so the scored-pair WORK is still the probed fraction but the
-    # only exchanged rows are per-batch top-R candidates — bounded by
-    # R×|Q| per batch, never by corpus size. At 100 TB with the
-    # corpus laid out cell-partitioned, the same kernel runs after
-    # partition pruning on the probed-cell union, so unprobed cells
-    # never leave disk — the pruning the probe join used to provide,
-    # now without its shuffle.
-    cell_to_q = _cell_to_queries(Q, C, n_probe)
-
-    # lookup tables (all tiny, one tracked broadcast): see the module
-    # comment for the algebra each term serves.
-    T = np.einsum("qmd,mkd->qmk", Q.reshape(nq, PQ_M, dsub), books)
-    qc = Q @ C.T  # (nq, n_cells): <q, c>
-    CC = np.einsum(
-        "cmd,mkd->cmk", C.reshape(n_cells, PQ_M, dsub), books
-    )  # (n_cells, PQ_M, PQ_K): <c_sub, book>
-    cn2 = (books**2).sum(axis=2)  # (PQ_M, k_eff)
-    c2 = (C**2).sum(axis=1)  # (n_cells,)
-    qn = np.sqrt((Q**2).sum(axis=1))
-    bc_adc = track_broadcast(
-        spark.sparkContext.broadcast((q_ids, cell_to_q, T, qc, CC, cn2, c2, qn))
-    )
-
-    def adc(batches):
-        q_ids, cell_to_q, T, qc, CC, cn2, c2, qn = bc_adc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = []
-            for cv, grp in pdf.groupby("cell", sort=False):
-                qidx = cell_to_q.get(int(cv))
-                if qidx is None:  # cell probed by no query
-                    continue
-                Cd = np.stack(grp["codes"].to_numpy()).astype(np.int64)  # (n, M)
-                vids = grp["vec_id"].to_numpy()
-                # residual-norm terms are per-ROW (query-independent);
-                # dot terms are (probing-queries × rows) dense blocks
-                n2 = np.full(len(grp), c2[cv])
-                dot = np.repeat(qc[qidx, cv][:, None], len(grp), axis=1)
-                for m in range(PQ_M):
-                    code = Cd[:, m]
-                    dot += T[qidx[:, None], m, code[None, :]]  # (p, n)
-                    n2 += 2.0 * CC[cv, m, code] + cn2[m, code]
-                approx = dot / (
-                    np.sqrt(np.maximum(n2, 1e-30))[None, :] * qn[qidx][:, None]
-                )
-                for j in range(len(qidx)):
-                    mask = vids != q_ids[qidx[j]]  # self-exclusion
-                    s = approx[j][mask]
-                    v = vids[mask]
-                    order = np.lexsort((v, -s))  # (adc desc, n_id asc)
-                    if rerank is not None:
-                        order = order[:rerank]  # per-cell-group cut
-                    out.append(
-                        pd.DataFrame(
-                            {
-                                "q_id": int(q_ids[qidx[j]]),
-                                "n_id": v[order],
-                                "adc": s[order],
-                            }
-                        )
-                    )
-            if not out:
-                continue
-            res = pd.concat(out, ignore_index=True)
-            if rerank is not None:
-                # per-batch cut across cell groups (same total order);
-                # valid: any global top-R row is in its cell group's
-                # top-R, hence in its batch's top-R. Global cut below.
-                res = (
-                    res.sort_values(
-                        ["q_id", "adc", "n_id"], ascending=[True, False, True]
-                    )
-                    .groupby("q_id", sort=False)
-                    .head(rerank)
-                )
-            yield res
-
-    cand = codes_df.mapInPandas(adc, "q_id long, n_id long, adc double")
-    if rerank is not None:
-        wv = Window.partitionBy("q_id").orderBy(F.col("adc").desc(), F.col("n_id"))
-        cand = cand.withColumn("crn", F.row_number().over(wv)).where(
-            F.col("crn") <= rerank
-        )
-    return _exact_rerank(e, cand, q_ids, Q)
-
-
-@register("ivfpq_ann_topk", oracle=None, tags=("X25",))
-def ivfpq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ ANN: probe N_PROBE coarse cells, ADC-score only their
-    members via residual-code lookups, exact cosine re-rank of the
-    top-IVFPQ_RERANK. Rows-only by design (two iterative quantizers,
-    recall < 1); ground truth cosine_topk, recall row
-    ivfpq_recall_eval, exact anchor ivfpq_ann_exhaustive."""
-    return _ivfpq_topk(spark, sf_dir, N_PROBE, IVFPQ_RERANK)
-
-
-@register("ivfpq_ann_exhaustive", oracle=_COSINE_TOPK_ORACLE, tags=("X25",))
-def ivfpq_ann_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ with every cell probed AND rerank=None: every corpus
-    vector survives to the exact re-rank, so the result provably
-    equals brute-force cosine top-k — the oracle's statement. The
-    third exactly-certified ANN anchor (after ivf_ann_exhaustive and
-    pq_ann_exhaustive), this one covering the COMPOSED machinery."""
-    return _ivfpq_topk(spark, sf_dir, N_CELLS, None)
-
-
-@register("ivfpq_recall_eval", oracle=None, tags=("X25", "quality"))
-def ivfpq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-query recall@k of ivfpq_ann_topk vs the exact ground truth
-    (shared _recall_eval reduction; rows-only — the quantizers are
-    iterative; pytest floor in tests/test_similarity.py)."""
-    return _recall_eval(cosine_topk(spark, sf_dir), ivfpq_ann_topk(spark, sf_dir))
 
 
 # -- SemDeDup: embedding-space semantic dedup (round 15) ---------------------

@@ -19,8 +19,8 @@ from pyspark.sql import functions as F
 
 from master_airflow_spark.catalog import (
     FACT_BROADCAST_ORDERS_BYTES,
+    broadcast_if,
     load_table,
-    table_bytes,
 )
 from master_airflow_spark.functions.exact import (
     cents,
@@ -487,8 +487,7 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_custkey", "c_nationkey"
     )
     o2 = o.join(c2, o.o_custkey == c2.c_custkey).select("o_orderkey", "c_nationkey")
-    if table_bytes(sf_dir, "orders") < FACT_BROADCAST_ORDERS_BYTES:
-        o2 = F.broadcast(o2)
+    o2 = broadcast_if(o2, sf_dir, "orders", 0, FACT_BROADCAST_ORDERS_BYTES)
     keyed = (
         li.join(o2, li.l_orderkey == o2.o_orderkey)
         .join(
@@ -659,12 +658,13 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(cents("l_quantity", 1)).alias("qty_l"))
         .where(F.col("qty_l") > 250)
     )
-    if (
-        _Q18_AGG_BROADCAST_MIN_ORDERS
-        <= table_bytes(sf_dir, "orders")
-        < _Q18_AGG_BROADCAST_MAX_ORDERS
-    ):
-        agg = F.broadcast(agg)
+    agg = broadcast_if(
+        agg,
+        sf_dir,
+        "orders",
+        _Q18_AGG_BROADCAST_MIN_ORDERS,
+        _Q18_AGG_BROADCAST_MAX_ORDERS,
+    )
     return (
         agg.join(o, o.o_orderkey == agg.l_orderkey)
         .join(c, c.c_custkey == o.o_custkey)

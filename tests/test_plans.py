@@ -58,8 +58,6 @@ def test_revenue_by_nation_fact_probes_int_key_agg(spark, sf_dir):
     hint survives (orders parquet is under the gate at test SFs), the
     unhinted o⋈c2 leg plans its shuffle, and lineitem must still not
     sit under any BroadcastExchange."""
-    import re
-
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
@@ -69,31 +67,63 @@ def test_revenue_by_nation_fact_probes_int_key_agg(spark, sf_dir):
     assert "hashpartitioning(c_nationkey" in plan, (
         "aggregate must key on the c_nationkey int, not the name string"
     )
-    # map scan node ids to tables, then assert the lineitem scan's id
-    # is never the child subtree of a BroadcastExchange in the tree
+    assert _scans_under_broadcast(plan, "lineitem.parquet") == []
+
+
+def test_revenue_by_nation_no_hint_at_unknown_orders_size(spark, sf_dir, tmp_path):
+    """An orders table whose part file lacks the .parquet suffix sizes
+    at 0 bytes: an unknown size, which must mean NO broadcast hint
+    (catalog.broadcast_if fails safe). With auto-broadcast off,
+    nothing may then put the orders scan under a BroadcastExchange."""
+    import os
+    import shutil
+
+    from master_airflow_spark.catalog import TABLES, table_bytes, table_path
+
+    out = str(tmp_path)
+    for t in TABLES:
+        if t != "orders":
+            os.symlink(table_path(sf_dir, t), table_path(out, t))
+    orders = table_path(out, "orders")
+    os.mkdir(orders)
+    shutil.copy(table_path(sf_dir, "orders"), os.path.join(orders, "part-0"))
+    assert table_bytes(out, "orders") == 0
+
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        plan = formatted(_q(spark, out, "revenue_by_nation"))
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert _scans_under_broadcast(plan, orders) == []
+
+
+def _scans_under_broadcast(plan: str, table: str) -> list[str]:
+    """BroadcastExchange lines of a formatted() plan whose subtree holds
+    a Scan parquet node reading ``table`` (a path fragment)."""
+    import re
+
     blocks = re.split(r"^(?=\(\d+\) )", plan, flags=re.M)
-    li_ids = {
+    scan_ids = {
         m.group(1)
         for b in blocks
         for m in [re.match(r"\((\d+)\) Scan parquet", b)]
-        if m and "lineitem.parquet" in b
+        if m and table in b
     }
-    assert li_ids, "lineitem scan not found"
+    assert scan_ids, f"{table} scan not found"
     tree = plan.split("\n\n")[0].splitlines()
+    hits = []
     for i, line in enumerate(tree):
-        m = re.search(r"BroadcastExchange \((\d+)\)", line)
-        if not m:
+        if not re.search(r"BroadcastExchange \(\d+\)", line):
             continue
         indent = len(line) - len(line.lstrip(" :+-"))
         for nxt in tree[i + 1 :]:
-            nindent = len(nxt) - len(nxt.lstrip(" :+-"))
-            if nindent <= indent:
+            if len(nxt) - len(nxt.lstrip(" :+-")) <= indent:
                 break
             sid = re.search(r"Scan parquet\s+\((\d+)\)", nxt)
-            if sid and sid.group(1) in li_ids:
-                raise AssertionError(
-                    f"lineitem scan ({sid.group(1)}) under BroadcastExchange:\n{line}\n{nxt}"
-                )
+            if sid and sid.group(1) in scan_ids:
+                hits.append(f"{line.strip()} over {nxt.strip()}")
+    return hits
 
 
 def test_top_customers_join_no_cartesian(spark, sf_dir):
@@ -699,10 +729,10 @@ def test_q18_band_gated_agg_broadcast(spark, sf_dir, monkeypatch):
     BroadcastExchange over the aggregate."""
     import re
 
-    import master_airflow_spark.operators.tpch_like as t
+    import master_airflow_spark.catalog as catalog
 
     def plan_at(orders_bytes):
-        monkeypatch.setattr(t, "table_bytes", lambda d, n: orders_bytes)
+        monkeypatch.setattr(catalog, "table_bytes", lambda d, n: orders_bytes)
         return formatted(_q(spark, sf_dir, "q18_large_orders"))
 
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")

@@ -289,11 +289,15 @@ def test_ivf_recall_eval_query(spark):
     assert mean >= 0.7, f"ivf recall@5 regressed: {mean}"
 
 
-def test_pq_exhaustive_equals_cosine_topk(spark):
-    """pq_ann_exhaustive (rerank=None keeps every corpus vector as a
-    candidate) must equal the certified brute-force cosine_topk
-    row-for-row — the provable-equality anchor for the PQ machinery
-    (round-14; same pattern as ivf_ann_exhaustive)."""
+@pytest.mark.parametrize(
+    "anchor", ["ivf_ann_exhaustive", "pq_ann_exhaustive", "ivfpq_ann_exhaustive"]
+)
+def test_ann_exhaustive_equals_cosine_topk(spark, anchor):
+    """Each exhaustive configuration of the filter-and-refine pipeline
+    (every cell probed; PQ candidates all kept for the exact re-rank)
+    must equal the certified brute-force cosine_topk row-for-row,
+    cosine doubles included — the provable-equality anchor for the
+    IVF, PQ and composed IVF-PQ machinery."""
     sfd = "/root/testdata/sf0.01"
 
     def rows(name):
@@ -306,7 +310,7 @@ def test_pq_exhaustive_equals_cosine_topk(spark):
         release_caches()
         return out
 
-    assert rows("pq_ann_exhaustive") == rows("cosine_topk")
+    assert rows(anchor) == rows("cosine_topk")
 
 
 def test_pq_recall_eval_query(spark):
@@ -338,8 +342,9 @@ def test_pq_recall_eval_query(spark):
 
 def test_pq_codebooks_deterministic_and_shaped(spark):
     """The sampled subspace Lloyd's quantizer is seedless-deterministic:
-    two independent builds on the same corpus produce bit-identical
-    codebooks of shape (PQ_M, PQ_K, dim/PQ_M)."""
+    two independent flat-PQ builds (one zero-centroid cell) on the same
+    corpus produce bit-identical codebooks of shape
+    (PQ_M, PQ_K, dim/PQ_M)."""
     import numpy as np
 
     from master_airflow_spark.catalog import load_table
@@ -347,34 +352,15 @@ def test_pq_codebooks_deterministic_and_shaped(spark):
         DIM,
         PQ_K,
         PQ_M,
-        _pq_codebooks,
+        _quantizer_sample,
+        _quantizers,
     )
 
     e = load_table(spark, "/root/testdata/sf0.01", "embeddings")
-    b1 = _pq_codebooks(e)
-    b2 = _pq_codebooks(e)
+    _, b1 = _quantizers(_quantizer_sample(e), 1, True)
+    _, b2 = _quantizers(_quantizer_sample(e), 1, True)
     assert b1.shape == (PQ_M, PQ_K, DIM // PQ_M)
     assert np.array_equal(b1, b2)
-
-
-def test_ivfpq_exhaustive_equals_cosine_topk(spark):
-    """ivfpq_ann_exhaustive (all cells probed, rerank=None) must equal
-    brute-force cosine_topk row-for-row — the provable-equality anchor
-    for the COMPOSED IVF-PQ machinery (coarse assign, residual encode,
-    per-cell ADC lookup algebra, probe join, re-rank)."""
-    sfd = "/root/testdata/sf0.01"
-
-    def rows(name):
-        from master_airflow_spark.registry import release_caches
-
-        out = sorted(
-            (r.q_id, r.n_id, r.cosine, r.rn)
-            for r in REGISTRY[name].fn(spark, sfd).collect()
-        )
-        release_caches()
-        return out
-
-    assert rows("ivfpq_ann_exhaustive") == rows("cosine_topk")
 
 
 def test_ivfpq_recall_floor(spark):

@@ -14,6 +14,7 @@ import os
 
 from master_airflow_spark.catalog import (
     _nanos_timestamp_cols,
+    broadcast_if,
     parquet_part_stats,
     table_bytes,
 )
@@ -38,6 +39,19 @@ def test_directory_table_sums_parts_not_inode(tmp_path):
 
 def test_missing_table_is_zero(tmp_path):
     assert table_bytes(str(tmp_path), "orders") == 0
+
+
+def test_broadcast_if_never_hints_an_unknown_size(tmp_path):
+    """0 bytes (missing table, or parts without a .parquet suffix) is an
+    unknown size: broadcast_if returns its input unhinted even when the
+    band starts at 0. The sentinel stands in for a DataFrame, since an
+    unhinted input is returned untouched."""
+    df = object()
+    assert broadcast_if(df, str(tmp_path), "orders", 0, 1 << 40) is df
+    d = tmp_path / "orders.parquet"
+    d.mkdir()
+    (d / "part-0").write_bytes(b"x" * 100)
+    assert broadcast_if(df, str(tmp_path), "orders", 0, 1 << 40) is df
 
 
 def test_partitioned_table_walks_nested_dirs(tmp_path):

@@ -1,10 +1,10 @@
-"""The query lists bench.py shares with the benchmark, and the row
-check of scripts/ab.py.
+"""The query lists bench.py shares with the benchmark, the row check
+of scripts/ab.py, and the registry pin of the ANN anchor triples.
 
 bench.py and perfbench/metrics.py each keep a headline list; both must
 name the same registered queries in the same order, or bench.py and
 the benchmark time different work. perfbench/ is only read here, never
-edited. Only the last test needs a Spark session.
+edited. Only the ab test needs a Spark session.
 """
 
 from __future__ import annotations
@@ -48,6 +48,21 @@ def test_every_name_is_registered():
     registry._ensure_loaded()
     names = set(bench.HEADLINE) | set(bench.DRAIN_GROUP) | set(bench.REBUILD)
     assert sorted(n for n in names if n not in registry.REGISTRY) == []
+
+
+@pytest.mark.parametrize("family", ["ivf", "pq", "ivfpq"])
+def test_ann_family_keeps_its_exact_anchor(family):
+    """Each ANN family registers its approximate query, an exhaustive
+    twin that carries cosine_topk's exact oracle, and a recall
+    evaluator — so a refactor cannot silently drop an exact anchor."""
+    from master_airflow_spark import registry
+
+    registry._ensure_loaded()
+    reg = registry.REGISTRY
+    for suffix in ("ann_topk", "ann_exhaustive", "recall_eval"):
+        assert f"{family}_{suffix}" in reg
+    assert reg[f"{family}_ann_exhaustive"].oracle == reg["cosine_topk"].oracle
+    assert reg[f"{family}_ann_topk"].oracle is None
 
 
 def test_ab_refuses_to_time_candidate_with_other_rows(spark, sf_dir, monkeypatch):
