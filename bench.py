@@ -79,6 +79,7 @@ def main() -> None:
         if name not in REBUILD:
             plans[name] = df  # prepared plan; execution is NOT cached
 
+    from master_airflow_spark.streaming import events as stream_events
     from master_airflow_spark.streaming.shared_drain import drain_events_multi
 
     if drain_group:  # warm the shared-drain path (codegen, landing dir)
@@ -149,6 +150,7 @@ def main() -> None:
         inside the same rep loop (ABAB drift cancellation)."""
 
         def run_once():
+            stream_events.reset_drain_trigger_seconds()
             t0 = time.perf_counter()
             tm: dict = {}
             res = drain_events_multi(spark, sf_dir, drain_group, timings=tm)
@@ -159,13 +161,12 @@ def main() -> None:
                 merges[v] = time.perf_counter() - m0
             registry.release_caches()
             wall = time.perf_counter() - t0
-            # Same trigger>0 guard as the per-query path: if the
-            # listener bus stalled and delivered nothing, fall back to
-            # wall rather than crediting away the entire pass.
-            credited = wall
-            if tm["trigger"] > 0:
-                credited = min(wall, wall - tm["pass_wall"] + tm["trigger"])
-            return credited, wall, tm, merges
+            tm["pass"] = {
+                "pass_wall_sec": stream_events.drain_wall_seconds(),
+                "trigger_sec_listener": stream_events.drain_trigger_seconds(),
+                "trigger_sec_recent_progress": stream_events.drain_trigger_seconds_recent(),
+            }
+            return stream_events.credited_seconds(wall), wall, tm, merges
 
         runs = []
         duck: dict[str, list[float]] = {v: [] for v in drain_group}
@@ -236,9 +237,7 @@ def main() -> None:
             {
                 "unit_credited_sec": round(credited, 4),
                 "unit_wall_sec": round(wall, 4),
-                "pass_wall_sec": tm["pass_wall"],
-                "trigger_sec_listener": tm["trigger"],
-                "trigger_sec_recent_progress": tm["trigger_recent"],
+                **{k: round(x, 4) for k, x in tm["pass"].items()},
                 "view_handler_sec": views,
                 "merge_sec": {v: round(s, 4) for v, s in merges.items()},
                 "reps": len(runs),
@@ -256,23 +255,13 @@ def main() -> None:
 
         def run_once() -> tuple[float, float]:
             # Streaming drains are credited their recurring per-trigger
-            # cost (planning + addBatch + commits, Spark-measured via
-            # StreamingQueryProgress) in place of the drain's
-            # wall-clock: the query-start/stop overhead around the
-            # triggers is paid once by a long-lived production stream,
-            # exactly like the py4j plan construction the prepared-plan
-            # queries amortize. Everything OUTSIDE the drain — fn()
-            # plan construction and the post-drain batch step (the
-            # timed count(), any orderBy/limit over the drained
-            # snapshot) — is recurring per-query work and stays in the
-            # credited number (round-6 ADVICE item): credited =
-            # wall − drain_wall + trigger. Wall-clock still bounds it,
-            # the raw wall number is returned alongside for
-            # BENCH_DETAIL/`value_wall_drains`, and the progress
-            # history is uncapped during drains (see run_to_memory) so
-            # a many-trigger drain can't silently under-credit.
-            from master_airflow_spark.streaming import events as stream_events
-
+            # cost in place of their wall-clock (events.credited_seconds):
+            # the query start/stop around the triggers is paid once by a
+            # long-lived production stream, exactly like the py4j plan
+            # construction the prepared-plan queries amortize. fn() plan
+            # construction and any post-drain batch step stay in the
+            # credited number (round-6 ADVICE); the raw wall is returned
+            # alongside for BENCH_DETAIL/`value_wall_drains`.
             stream_events.reset_drain_trigger_seconds()
             t0 = time.perf_counter()
             df = plans.get(name)
@@ -280,13 +269,8 @@ def main() -> None:
                 df = spec.fn(spark, sf_dir)
             materialize(df)
             wall = time.perf_counter() - t0
-            trig = stream_events.drain_trigger_seconds()
-            drain_wall = stream_events.drain_wall_seconds()
-            dt = wall
-            if trig > 0:
-                dt = min(wall, wall - drain_wall + trig)
             registry.release_caches()
-            return dt, wall
+            return stream_events.credited_seconds(wall), wall
 
         times, walls, otimes, n = [], [], [], n_rows[name]
         has_oracle = con is not None and spec.oracle is not None

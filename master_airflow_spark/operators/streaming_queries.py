@@ -16,6 +16,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from master_airflow_spark.catalog import table_bytes
 from master_airflow_spark.functions.exact import sql_cents, sql_dsum, sql_lsum_money
 from master_airflow_spark.registry import register
 from master_airflow_spark.streaming.events import (
@@ -36,18 +37,6 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _events_bytes(sf_dir: str) -> int:
-    """Driver-side (os.stat, no Spark job) byte size of the events
-    table — the cheap signal the size-adaptive state-partition picks
-    key on (catalog.parquet_part_stats — the shared walker)."""
-    from master_airflow_spark.catalog import parquet_part_stats
-
-    return sum(
-        st[2]  # (name, mtime_ns, size, ino)
-        for st in parquet_part_stats(os.path.join(sf_dir, "events.parquet"))
-    )
-
-
 def _session_state_partitions(sf_dir: str) -> int:
     """Size-adaptive state-partition count for the session drain.
     Session state is per-SESSION (≈ per event on sparse data), so the
@@ -59,7 +48,7 @@ def _session_state_partitions(sf_dir: str) -> int:
     medians 13.2/9.1/14.1s — round-11 sweep). Threshold at 16MB,
     between the two regimes; a long-lived cluster deployment sizes to
     key cardinality instead (see run_to_memory)."""
-    return 16 if _events_bytes(sf_dir) > (16 << 20) else 8
+    return 16 if table_bytes(sf_dir, "events") > (16 << 20) else 8
 
 
 @register(

@@ -19,13 +19,16 @@ from __future__ import annotations
 
 import hashlib
 import os
+import shutil
 import tempfile
 import threading
+import time
 import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQueryListener
 
 from master_airflow_spark.functions.exact import cents, dsum, lsum_money
 
@@ -347,26 +350,26 @@ def _assert_local_scratch(spark, what: str) -> None:
         )
 
 
-# run_to_memory temporarily rewrites the session-global shuffle-
-# partition conf; two concurrent drains on one session could capture
-# each other's temporary value as `prev` and leave the session latched.
-# Serializing drains through this lock makes the save/restore safe
-# (drains are bounded, so the serialization cost is the drain itself).
+# Every drain rewrites session-global confs for its duration (state
+# partitions, noDataMicroBatches, the progress-history cap). Two
+# concurrent drains on one session could each capture the other's
+# TEMPORARY value as `prev` and restore it permanently: a shared drain
+# overlapping a complete-mode drain would latch noDataMicroBatches=false
+# session-wide, and every later append-mode drain would silently never
+# flush closed windows. _drain serializes all drains on this lock, so
+# the save/restore is safe (drains are bounded, so the serialization
+# cost is the drain itself).
 _DRAIN_LOCK = threading.Lock()
 
 
-from pyspark.sql.streaming import StreamingQueryListener
-
-
 class _TriggerListener(StreamingQueryListener):
-    """StreamingQueryListener accumulating per-run triggerExecution
-    totals — uncapped BY CONSTRUCTION (every progress event is summed
-    as it arrives), unlike recentProgress whose history is bounded by
-    numRecentProgressUpdates and only complete because run_to_memory
-    raises that cap. Adopted per the round-7 ADVICE/verdict: the
-    listener is the primary drain-credit source; the recentProgress
-    sum is kept alongside as a cross-check (BENCH_DETAIL records the
-    agreement)."""
+    """Session-wide StreamingQueryListener summing triggerExecution per
+    run. Uncapped BY CONSTRUCTION (every progress event is summed as it
+    arrives), unlike recentProgress, whose history is bounded by
+    numRecentProgressUpdates and complete only because _drain raises
+    that cap. The listener is the primary drain-credit source; _drain
+    sums recentProgress alongside as a cross-check (round-7 ADVICE;
+    BENCH_DETAIL records the agreement)."""
 
     def __init__(self) -> None:
         self.lock = threading.Lock()
@@ -392,6 +395,26 @@ class _TriggerListener(StreamingQueryListener):
         with self.lock:
             self.terminated.add(str(event.runId))
 
+    def runs(self) -> set[str]:
+        with self.lock:
+            return set(self.trigger_ms)
+
+    def trigger_seconds(self, before: set[str]) -> float:
+        """Trigger seconds of the runs started since the ``before``
+        snapshot (drains are lock-serialized, so the attribution is
+        unambiguous). Waits up to 10 s for the bus to deliver each run's
+        termination event: a run's progress events precede it, so a
+        seen termination proves the sum complete. On timeout returns
+        what has arrived (the recentProgress cross-check would expose a
+        shortfall)."""
+        deadline = time.perf_counter() + 10.0
+        while True:
+            with self.lock:
+                runs = set(self.trigger_ms) - before
+                if (runs and runs <= self.terminated) or time.perf_counter() >= deadline:
+                    return sum(self.trigger_ms[r] for r in runs) / 1000.0
+            time.sleep(0.02)
+
 
 _LISTENERS: dict[str, _TriggerListener] = {}  # session id -> listener
 
@@ -406,63 +429,18 @@ def _ensure_listener(spark: SparkSession) -> _TriggerListener:
     return lst
 
 
-class track_drain_progress:
-    """Context manager attributing listener-measured triggerExecution
-    seconds to the queries STARTED inside the with-block (drains are
-    lock-serialized and bench is single-threaded, so the attribution
-    is unambiguous). ``trigger_seconds()`` waits briefly for the
-    listener bus to deliver the termination event of every tracked run
-    — progress events for a run precede its termination event on the
-    bus, so a seen termination proves the sum is complete; on timeout
-    it returns what has arrived (the recentProgress cross-check in
-    run_to_memory would expose a shortfall)."""
-
-    def __init__(self, spark: SparkSession, timeout: float = 10.0) -> None:
-        self._listener = _ensure_listener(spark)
-        self._timeout = timeout
-
-    def __enter__(self) -> "track_drain_progress":
-        with self._listener.lock:
-            self._before = set(self._listener.trigger_ms)
-        return self
-
-    def __exit__(self, *exc) -> None:
-        return None
-
-    def _new_runs(self) -> set[str]:
-        with self._listener.lock:
-            return set(self._listener.trigger_ms) - self._before
-
-    def trigger_seconds(self) -> float:
-        import time as _t
-
-        deadline = _t.perf_counter() + self._timeout
-        while _t.perf_counter() < deadline:
-            with self._listener.lock:
-                runs = set(self._listener.trigger_ms) - self._before
-                if runs and runs <= self._listener.terminated:
-                    break
-            _t.sleep(0.02)
-        with self._listener.lock:
-            runs = set(self._listener.trigger_ms) - self._before
-            return sum(self._listener.trigger_ms[r] for r in runs) / 1000.0
-
 # Cumulative trigger-execution and wall-clock seconds of drains since
-# the last reset. A drain's wall-clock = one-time query start/stop
-# (checkpoint dir, offset WAL init, listener wiring — paid ONCE by a
-# long-lived production stream) + the recurring per-trigger cost
-# (incremental query planning, addBatch, state-store/offset commits —
-# paid per micro-batch forever). The bench credits drains by the
-# recurring part, which is the throughput number that scales;
-# triggerExecution from StreamingQueryProgress is exactly that
-# (planning + addBatch + walCommit + commitOffsets, measured by Spark
-# itself), accumulated from the session-wide _TriggerListener
-# (uncapped by construction — round-7 ADVICE). The recentProgress sum
-# is accumulated in parallel as a cross-check (its completeness
-# depends on the numRecentProgressUpdates cap raised below); bench
-# records both so disagreement is visible in BENCH_DETAIL.json. The
-# WALL accumulator is recorded alongside so the size of the credit is
-# auditable (round-6 verdict / ADVICE item).
+# the last reset, fed only by _drain. A drain's wall-clock = one-time
+# query start/stop (checkpoint dir, offset WAL init, listener wiring —
+# paid ONCE by a long-lived production stream) + the recurring
+# per-trigger cost (incremental query planning, addBatch,
+# state-store/offset commits — paid per micro-batch forever).
+# triggerExecution from StreamingQueryProgress is exactly the recurring
+# part (planning + addBatch + walCommit + commitOffsets, measured by
+# Spark itself); credited_seconds credits drains by it, which is the
+# throughput number that scales. The listener total is primary; the
+# recentProgress sum is its cross-check; the wall total keeps the size
+# of the credit auditable (round-6 verdict).
 _DRAIN_TRIGGER_SEC = 0.0
 _DRAIN_TRIGGER_SEC_RECENT = 0.0
 _DRAIN_WALL_SEC = 0.0
@@ -486,9 +464,61 @@ def drain_trigger_seconds_recent() -> float:
 
 
 def drain_wall_seconds() -> float:
-    """Wall-clock spent inside run_to_memory (query build + start +
-    triggers + stop + checkpoint cleanup) since the last reset."""
+    """Wall-clock spent inside drains since the last reset: for each
+    run_to_memory or drain_events_multi pass, lock wait + conf setup +
+    query start + triggers + stop + checkpoint cleanup."""
     return _DRAIN_WALL_SEC
+
+
+def credited_seconds(wall: float) -> float:
+    """``wall`` with the drains since the last reset credited at their
+    recurring trigger time instead of their wall-clock:
+    min(wall, wall − drain_wall + trigger). Work outside the drains
+    (plan construction, post-drain batch steps) stays in. Returns
+    ``wall`` when the trigger total is 0 — a stalled listener bus must
+    not credit away the whole drain."""
+    if _DRAIN_TRIGGER_SEC <= 0:
+        return wall
+    return min(wall, wall - _DRAIN_WALL_SEC + _DRAIN_TRIGGER_SEC)
+
+
+def _drain(spark: SparkSession, writer, ckpt: str, confs: dict[str, str]) -> None:
+    """Run one bounded drain: start ``writer`` (a DataStreamWriter with
+    its sink set) under Trigger.AvailableNow with checkpoint ``ckpt``
+    and wait for it. Holds _DRAIN_LOCK and sets ``confs`` for the drain;
+    restores them and removes ``ckpt`` even when the query fails. Also
+    raises the recentProgress history cap (default 100): a many-file
+    landing dir (one trigger per file) would drop early triggers and
+    leave the cross-check short. Adds the listener and recentProgress
+    trigger seconds and the wall-clock to the module accumulators."""
+    global _DRAIN_TRIGGER_SEC, _DRAIN_TRIGGER_SEC_RECENT, _DRAIN_WALL_SEC
+    confs = {**confs, "spark.sql.streaming.numRecentProgressUpdates": "100000"}
+    listener = _ensure_listener(spark)
+    t0 = time.perf_counter()
+    with _DRAIN_LOCK:
+        prev = {k: spark.conf.get(k) for k in confs}
+        try:
+            for k, v in confs.items():
+                spark.conf.set(k, v)
+            before = listener.runs()
+            q = writer.option("checkpointLocation", ckpt).trigger(availableNow=True).start()
+            q.awaitTermination()
+            _DRAIN_TRIGGER_SEC += listener.trigger_seconds(before)
+            _DRAIN_TRIGGER_SEC_RECENT += sum(
+                p["durationMs"].get("triggerExecution", 0) for p in q.recentProgress
+            ) / 1000.0
+        finally:
+            for k, v in prev.items():
+                spark.conf.set(k, v)
+            shutil.rmtree(ckpt, ignore_errors=True)
+            _DRAIN_WALL_SEC += time.perf_counter() - t0
+
+
+# The trailing no-data micro-batch exists to flush append-mode windows
+# past the watermark. Drains that emit only at the end (complete mode,
+# the shared drain's merge-after-stream) skip it: it would add a full
+# state-store commit cycle and no rows.
+_NO_TRAILING_BATCH = {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
 
 
 def run_to_memory(
@@ -507,69 +537,24 @@ def run_to_memory(
     for a bounded drain is pure overhead (4 measures slightly faster
     than 8 at sf0.1, and each halving halves checkpoint file count).
     On a real cluster with a long-lived query, size
-    ``state_partitions`` to the key cardinality instead. Not
+    ``state_partitions`` to the key cardinality instead. Complete-mode
+    drains skip the trailing no-data batch (see _NO_TRAILING_BATCH);
+    append drains keep it, or closed windows would never emit. Not
     reentrant: drains on the same session serialize on a module lock
     (see _DRAIN_LOCK). The memory-sink table is registered with
     registry.track_memory_table, so the NEXT registered query (or an
     explicit release_caches) drops it — the driver's 50-query loop
     must not accumulate one driver-resident table per drain."""
-    import shutil
+    from master_airflow_spark.registry import track_memory_table
 
     qname = name or f"q_{uuid.uuid4().hex[:10]}"
     spark = stream_df.sparkSession
     _assert_local_scratch(spark, "run_to_memory's drain checkpoint")
-    ckpt = os.path.join(_checkpoint_root(), "mas_ckpt", qname)
-    t_enter = __import__("time").perf_counter()
-    with _DRAIN_LOCK:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        prev_nodata = spark.conf.get(
-            "spark.sql.streaming.noDataMicroBatches.enabled", "true"
-        )
-        # recentProgress is capped at numRecentProgressUpdates (default
-        # 100); a drain over a many-file landing dir would drop early
-        # triggers from the history and under-credit _DRAIN_TRIGGER_SEC.
-        # Raise the cap for the drain so the sum is always complete.
-        prev_nprog = spark.conf.get(
-            "spark.sql.streaming.numRecentProgressUpdates", "100"
-        )
-        spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "100000")
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-        if output_mode == "complete":
-            # Complete mode re-emits full state every trigger, so the
-            # trailing no-data micro-batch (whose purpose is flushing
-            # append-mode results past the watermark) adds a full
-            # state-store commit cycle and no rows — skip it. Append
-            # drains keep it: closed windows would otherwise never emit.
-            spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-        try:
-            global _DRAIN_TRIGGER_SEC, _DRAIN_TRIGGER_SEC_RECENT, _DRAIN_WALL_SEC
-            with track_drain_progress(spark) as progress:
-                q = (
-                    stream_df.writeStream.format("memory")
-                    .queryName(qname)
-                    .outputMode(output_mode)
-                    .option("checkpointLocation", ckpt)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination()
-            _DRAIN_TRIGGER_SEC += progress.trigger_seconds()
-            for p in q.recentProgress:
-                _DRAIN_TRIGGER_SEC_RECENT += (
-                    p["durationMs"].get("triggerExecution", 0) / 1000.0
-                )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-            spark.conf.set(
-                "spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata
-            )
-            spark.conf.set(
-                "spark.sql.streaming.numRecentProgressUpdates", prev_nprog
-            )
-            shutil.rmtree(ckpt, ignore_errors=True)
-            _DRAIN_WALL_SEC += __import__("time").perf_counter() - t_enter
-    from master_airflow_spark.registry import track_memory_table
-
+    confs = {"spark.sql.shuffle.partitions": str(state_partitions)}
+    if output_mode == "complete":
+        confs.update(_NO_TRAILING_BATCH)
+    writer = stream_df.writeStream.format("memory").queryName(qname).outputMode(output_mode)
+    _drain(spark, writer, os.path.join(_checkpoint_root(), "mas_ckpt", qname), confs)
     out = spark.table(qname)  # analyzed now; survives the view drop
     track_memory_table(spark, qname)
     return out

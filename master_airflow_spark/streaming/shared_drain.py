@@ -283,17 +283,20 @@ def drain_events_multi(
     (schemas identical to the per-query drains).
 
     ``timings``, when given, receives a per-view in-handler seconds
-    map under "views", the whole pass's wall under "pass_wall", and
-    Spark's own per-trigger execution time under "trigger" — the same
-    accounting surface the per-query drains expose, so bench.py can
-    attribute the shared cost from measured numbers instead of an
-    assumed split."""
+    map under "views", so bench.py can attribute the shared cost to
+    the views from measured numbers instead of an assumed split. The
+    pass runs through events._drain like the per-query drains, so its
+    wall and trigger seconds land in the same accumulators
+    (events.drain_wall_seconds, events.drain_trigger_seconds) and
+    events.credited_seconds credits it the same way."""
+    from master_airflow_spark.registry import track_scratch_dir
     from master_airflow_spark.streaming.events import (
+        _NO_TRAILING_BATCH,
         _assert_local_scratch,
         _checkpoint_root,
+        _drain,
         landing_dir_for,
         read_events_stream,
-        track_drain_progress,
     )
 
     # Validate BEFORE the stream/checkpoint exist: an unknown view
@@ -318,8 +321,13 @@ def drain_events_multi(
     stream = read_events_stream(spark, events_dir, max_files=max_files)
     run_id = uuid.uuid4().hex[:10]
     root = os.path.join(_checkpoint_root(), "mas_shared_drain", run_id)
+    # Registered before the stream starts, so a failed drain's spool
+    # and checkpoint are released too. The merge plans read the spool
+    # lazily, so it stays on disk until release_caches() — callers
+    # materialize every view before the next registered query runs
+    # (the lifecycle contract of run_to_memory's memory-sink tables).
+    track_scratch_dir(root)
     spools = {v: os.path.join(root, "spool", v) for v in view_names}
-    ckpt = os.path.join(root, "ckpt")
     view_sec: dict[str, float] = dict.fromkeys(view_names, 0.0)
 
     n_batches = [0]
@@ -366,82 +374,17 @@ def drain_events_multi(
             for f in [ex.submit(write_view, v) for v in view_names]:
                 f.result()
 
-    t_pass = time.perf_counter()
-    # The trailing no-data micro-batch exists to flush append-mode
-    # windows past the watermark; this drain merges AFTER the stream,
-    # so the extra trigger is a full commit cycle producing two empty
-    # spool files — skip it (same reasoning as run_to_memory's
-    # complete-mode drains). The recentProgress history cap is raised
-    # for the same reason run_to_memory raises it: a many-file landing
-    # dir (one trigger per file) would silently truncate the
-    # trigger_recent cross-check below — the check must not be the
-    # broken side of the listener/recentProgress comparison.
-    # The conf save/mutate/restore must hold the SAME lock
-    # run_to_memory's drains hold (events._DRAIN_LOCK): two unlocked
-    # drains on one session could each capture the other's TEMPORARY
-    # conf value as `prev` and restore it permanently — e.g. a shared
-    # drain overlapping a complete-mode drain would latch
-    # noDataMicroBatches=false session-wide, and every later
-    # append-mode drain would silently never flush closed windows.
-    from master_airflow_spark.streaming.events import _DRAIN_LOCK
-
-    with _DRAIN_LOCK:
-        prev_nodata = spark.conf.get(
-            "spark.sql.streaming.noDataMicroBatches.enabled", "true"
-        )
-        prev_nprog = spark.conf.get(
-            "spark.sql.streaming.numRecentProgressUpdates", "100"
-        )
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", "false"
-        )
-        spark.conf.set(
-            "spark.sql.streaming.numRecentProgressUpdates", "100000"
-        )
-        try:
-            with track_drain_progress(spark) as progress:
-                q = (
-                    stream.writeStream.foreachBatch(handle)
-                    .option("checkpointLocation", ckpt)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination()
-        finally:
-            spark.conf.set(
-                "spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata
-            )
-            spark.conf.set(
-                "spark.sql.streaming.numRecentProgressUpdates", prev_nprog
-            )
-    pass_wall = time.perf_counter() - t_pass
-    trigger_recent = sum(
-        p["durationMs"].get("triggerExecution", 0) / 1000.0
-        for p in q.recentProgress
+    # The merge runs after the stream, so the trailing no-data batch
+    # would only add a commit cycle and two empty spool files.
+    _drain(
+        spark,
+        stream.writeStream.foreachBatch(handle),
+        os.path.join(root, "ckpt"),
+        _NO_TRAILING_BATCH,
     )
-    trigger_sec = progress.trigger_seconds()
-    # Feed the same session-wide drain accumulators run_to_memory
-    # feeds, so a REGISTERED query built on this drain (the
-    # partial-spool stream_session_window) gets the standard
-    # credited = wall − drain_wall + trigger accounting in bench.py /
-    # scripts/drain_scale_probe.py without either caller special-casing
-    # the drain form. Callers that pass `timings` (bench's shared
-    # unit) keep their own copy; the globals are reset-before-read by
-    # every consumer, so double-accumulating here is harmless there.
-    from master_airflow_spark.streaming import events as _ev
-
-    _ev._DRAIN_TRIGGER_SEC += trigger_sec
-    _ev._DRAIN_TRIGGER_SEC_RECENT += trigger_recent
-    _ev._DRAIN_WALL_SEC += pass_wall
-
-    from master_airflow_spark.registry import track_scratch_dir
-
-    # The merge plans read the spool lazily; the spool stays on disk
-    # until release_caches() — callers materialize every view before
-    # the next registered query runs (same lifecycle contract as
-    # run_to_memory's memory-sink tables). A single-batch drain (the
-    # common shape for periodic ingests of one landing file) takes the
-    # projection fast path: its partials are already final per group.
+    # A single-batch drain (the common shape for periodic ingests of
+    # one landing file) takes the projection fast path: its partials
+    # are already final per group.
     if n_batches[0] == 0:
         out = {
             v: spark.createDataFrame([], VIEW_SCHEMAS[v]) for v in view_names
@@ -452,12 +395,6 @@ def drain_events_multi(
             v: VIEWS[v][merge_ix](spark.read.parquet(spools[v]))
             for v in view_names
         }
-    track_scratch_dir(root)
     if timings is not None:
         timings["views"] = {v: round(s, 4) for v, s in view_sec.items()}
-        timings["pass_wall"] = round(pass_wall, 4)
-        timings["trigger"] = round(trigger_sec, 4)
-        # recentProgress cross-check of the listener total (round-7
-        # ADVICE: the two must agree; bench records both).
-        timings["trigger_recent"] = round(trigger_recent, 4)
     return out

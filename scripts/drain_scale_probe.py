@@ -8,9 +8,9 @@ measured. This script measures it: at x1/x10/x50 key-shifted
 replicas of sf0.1 (the same dirs scripts/scale_probe.py builds) it
 times, per view:
 
-- the certified PER-QUERY state-store drain (the exact registry fn
-  the driver certifies), both credited (wall − drain_wall + trigger,
-  bench.py's standard accounting) and raw wall;
+- the certified PER-QUERY drain (the exact registry fn the driver
+  certifies), both credited (events.credited_seconds, bench.py's
+  standard accounting) and raw wall;
 - the DuckDB oracle on the same replica dir (single-threaded batch
   reference);
 
@@ -143,8 +143,9 @@ def _stage_single_file(spark, k: int) -> str:
 
 
 def drain_rep(spark, name: str, sf_dir: str) -> tuple[float, float]:
-    """One rep of the certified per-query state-store drain, credited
-    like bench.py's per-query run_once: wall − drain_wall + trigger."""
+    """One rep of a registered drain query (fn() plus a noop write):
+    (credited, wall), credited by events.credited_seconds exactly as
+    bench.py's per-query reps are."""
     from master_airflow_spark.streaming import events as stream_events
 
     stream_events.reset_drain_trigger_seconds()
@@ -152,13 +153,8 @@ def drain_rep(spark, name: str, sf_dir: str) -> tuple[float, float]:
     df = registry.REGISTRY[name].fn(spark, sf_dir)
     df.write.format("noop").mode("overwrite").save()
     wall = time.perf_counter() - t0
-    trig = stream_events.drain_trigger_seconds()
-    dwall = stream_events.drain_wall_seconds()
-    credited = wall
-    if trig > 0:
-        credited = min(wall, wall - dwall + trig)
     registry.release_caches()
-    return credited, wall
+    return stream_events.credited_seconds(wall), wall
 
 
 def main() -> None:

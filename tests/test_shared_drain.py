@@ -9,6 +9,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from master_airflow_spark.streaming.shared_drain import drain_events_multi
@@ -31,10 +33,13 @@ def test_shared_drain_equals_per_query_drains(spark, sf_dir):
     against the state-store twin (stream_session_window_state) — the
     independent code path this test exists to pin."""
     from master_airflow_spark import registry
+    from master_airflow_spark.streaming import events
 
     registry._ensure_loaded()
     timings: dict = {}
+    events.reset_drain_trigger_seconds()
     shared = drain_events_multi(spark, sf_dir, VIEW_NAMES, timings=timings)
+    pass_wall, trigger = events.drain_wall_seconds(), events.drain_trigger_seconds()
     got = {v: _rows(shared[v]) for v in VIEW_NAMES}
     registry.release_caches()
 
@@ -44,11 +49,12 @@ def test_shared_drain_equals_per_query_drains(spark, sf_dir):
         registry.release_caches()
         assert got[v] == want, f"{v}: shared drain diverges from per-query drain"
 
-    # Accounting surface: per-view handler seconds, pass wall, and the
-    # listener-measured trigger total must all be present and sane.
+    # Accounting surface: per-view handler seconds, and the pass wall
+    # and listener-measured trigger total in the events accumulators,
+    # must all be present and sane.
     assert set(timings["views"]) == set(VIEW_NAMES)
-    assert timings["pass_wall"] > 0
-    assert 0 < timings["trigger"] <= timings["pass_wall"] + 0.5
+    assert pass_wall > 0
+    assert 0 < trigger <= pass_wall + 0.5
 
 
 def test_shared_drain_multibatch_merge(spark, sf_dir, tmp_path):
@@ -499,3 +505,29 @@ def test_below_watermark_divergence_direction(spark, tmp_path):
     # (3) spool ⊇ state on event coverage, equal on the on-time subset
     assert sum(r[3] for r in state) <= sum(r[3] for r in spool)
     assert [r for r in spool if r in on_time] == on_time
+
+
+def test_failed_shared_drain_releases_its_scratch_root(spark, sf_dir, monkeypatch):
+    """A shared drain whose view partial raises leaves no spool or
+    checkpoint root behind once the caches are released."""
+    from master_airflow_spark import registry
+    from master_airflow_spark.streaming import shared_drain
+    from master_airflow_spark.streaming.events import _checkpoint_root
+
+    def boom(batch):
+        raise RuntimeError("view-partial-boom")
+
+    _, merge, project = shared_drain.VIEWS["stream_tumbling_agg"]
+    monkeypatch.setitem(
+        shared_drain.VIEWS, "stream_tumbling_agg", (boom, merge, project)
+    )
+    base = os.path.join(_checkpoint_root(), "mas_shared_drain")
+
+    def run_dirs() -> set[str]:
+        return set(os.listdir(base)) if os.path.isdir(base) else set()
+
+    before = run_dirs()
+    with pytest.raises(StreamingQueryException, match="view-partial-boom"):
+        drain_events_multi(spark, sf_dir, VIEW_NAMES)
+    registry.release_caches()
+    assert run_dirs() - before == set()

@@ -16,6 +16,8 @@ import time
 
 import pandas as pd
 import pyspark.sql.functions as F
+import pytest
+from pyspark.errors import StreamingQueryException
 
 from master_airflow_spark.streaming.events import (
     dedup_within_watermark,
@@ -467,3 +469,60 @@ def test_session_drain_rocksdb_provider_equal(spark, sf_dir):
     finally:
         spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     assert rocks == base
+
+
+def test_failed_drain_restores_session_lock_and_checkpoint(spark, tmp_path):
+    """A drain whose query fails on every row leaves the session as it
+    found it: the drain confs read as before, the drain lock is free
+    and the checkpoint is gone."""
+    from master_airflow_spark.streaming import events
+
+    confs = (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.streaming.noDataMicroBatches.enabled",
+        "spark.sql.streaming.numRecentProgressUpdates",
+    )
+    d = _stage(tmp_path, [[(1, "2024-01-01 10:05:00", 1, "click", 1.0, "{}")]])
+    failing = read_events_stream(spark, d, max_files=1).withColumn(
+        "event_type", F.raise_error(F.lit("drain-harness-boom")).cast("string")
+    )
+    before = {k: spark.conf.get(k) for k in confs}
+    with pytest.raises(StreamingQueryException, match="drain-harness-boom"):
+        run_to_memory(
+            tumbling_agg(failing), "complete", name="harness_fail", state_partitions=2
+        )
+    assert {k: spark.conf.get(k) for k in confs} == before
+    assert not events._DRAIN_LOCK.locked()
+    ckpt = os.path.join(events._checkpoint_root(), "mas_ckpt", "harness_fail")
+    assert not os.path.exists(ckpt)
+
+
+def test_drain_accumulators_and_credit(spark, sf_dir):
+    """Both drain forms feed the same accumulators: trigger time is
+    positive and inside the drain wall, and the credited time never
+    exceeds the measured wall. With nothing drained, no credit."""
+    from master_airflow_spark import registry
+    from master_airflow_spark.streaming import events
+    from master_airflow_spark.streaming.shared_drain import drain_events_multi
+
+    events.reset_drain_trigger_seconds()
+    assert events.credited_seconds(1.5) == 1.5
+
+    def check(drain) -> None:
+        events.reset_drain_trigger_seconds()
+        t0 = time.perf_counter()
+        drain()
+        wall = time.perf_counter() - t0
+        registry.release_caches()
+        assert 0 < events.drain_trigger_seconds() <= events.drain_wall_seconds()
+        assert events.credited_seconds(wall) <= wall
+
+    landing = events.landing_dir_for(os.path.join(sf_dir, "events.parquet"))
+    check(
+        lambda: run_to_memory(
+            tumbling_agg(read_events_stream(spark, landing)),
+            "complete",
+            state_partitions=2,
+        ).count()
+    )
+    check(lambda: drain_events_multi(spark, sf_dir))

@@ -1,5 +1,6 @@
-"""The query lists bench.py shares with the benchmark, the row check
-of scripts/ab.py, and the registry pin of the ANN anchor triples.
+"""The query lists bench.py shares with the benchmark, the package
+functions the benchmark binds, the row check of scripts/ab.py, and the
+registry pin of the ANN anchor triples.
 
 bench.py and perfbench/metrics.py each keep a headline list; both must
 name the same registered queries in the same order, or bench.py and
@@ -9,6 +10,7 @@ edited. Only the ab test needs a Spark session.
 
 from __future__ import annotations
 
+import importlib
 import importlib.util
 import os
 
@@ -63,6 +65,24 @@ def test_ann_family_keeps_its_exact_anchor(family):
         assert f"{family}_{suffix}" in reg
     assert reg[f"{family}_ann_exhaustive"].oracle == reg["cosine_topk"].oracle
     assert reg[f"{family}_ann_topk"].oracle is None
+
+
+@pytest.mark.parametrize(
+    "module, name",
+    [
+        ("master_airflow_spark.streaming.events", "run_to_memory"),
+        ("master_airflow_spark.streaming.shared_drain", "drain_events_multi"),
+        ("master_airflow_spark.catalog", "load_table"),
+        ("master_airflow_spark.streaming.events", "reset_drain_trigger_seconds"),
+        ("master_airflow_spark.streaming.events", "drain_wall_seconds"),
+        ("master_airflow_spark.streaming.events", "drain_trigger_seconds"),
+    ],
+)
+def test_benchmark_binds_package_functions(module, name):
+    """perfbench/query_suite.py wraps the first three by identity in
+    its traced pass and reads the drain accumulators through the last
+    three; a rename would break the benchmark, not this package."""
+    assert callable(getattr(importlib.import_module(module), name))
 
 
 def test_ab_refuses_to_time_candidate_with_other_rows(spark, sf_dir, monkeypatch):
