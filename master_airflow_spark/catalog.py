@@ -2,9 +2,22 @@
 
 The reference declares its schema implicitly per sink (SURVEY.md §1.2);
 here the parquet footer is the single schema authority and tables are
-exposed uniformly as DataFrames / temp views. Reads are plain
-``spark.read.parquet`` so Catalyst gets predicate pushdown, column
-pruning, and (on partitioned layouts) partition pruning for free.
+exposed uniformly as DataFrames / temp views. Reads are
+``spark.read.schema(s).parquet`` so Catalyst gets predicate pushdown,
+column pruning, and (on partitioned layouts) partition pruning for free.
+
+``s`` comes from one process-wide schema cache (``parquet_schema``).
+Inferring a parquet schema is a Spark job (~75-115 ms of driver time
+per table open at any scale); a cache hit reads with the schema the
+inference returned and launches none. The entry is keyed on the table
+path, its ``table_fingerprint`` (the part files' name, mtime, size and
+inode), ``spark.version`` and the session confs that steer parquet
+schema inference, so a rewritten table or a flipped conf re-infers.
+The entry also holds the ``_nanos_timestamp_cols`` footer result. A
+table with an empty fingerprint (missing or unreadable) is never
+cached. The cache holds no Spark state, only schemas that invalidate
+themselves, so it survives ``registry.release_caches()`` and session
+restarts: releasing it per query would give the saving back.
 """
 
 from __future__ import annotations
@@ -14,6 +27,7 @@ import os
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -46,9 +60,10 @@ def parquet_part_stats(path: str) -> list[tuple[str, int, int, int]]:
     (name, mtime_ns, size, ino) tuples sorted by name, where name is
     the part's path relative to ``path`` (the basename for a single
     file). Empty list if the path is missing. The ONE walker behind
-    every table fingerprint and size gate in the repo (near-dup probe
-    cache invalidation, size-adaptive state partitioning, scale-probe
-    staging markers, table_bytes, the ns-column footer probe).
+    every table fingerprint and size gate in the repo (the schema cache,
+    near-dup probe cache invalidation, size-adaptive state partitioning,
+    scale-probe staging markers, table_bytes, the ns-column footer
+    probe).
 
     st_ino is folded in (round-11 ADVICE) so a corpus replaced by a
     timestamp-preserving copy (cp -p / rsync -t, same names and sizes)
@@ -71,6 +86,14 @@ def parquet_part_stats(path: str) -> list[tuple[str, int, int, int]]:
         return [(os.path.basename(path), st.st_mtime_ns, st.st_size, st.st_ino)]
     except OSError:
         return []
+
+
+def table_fingerprint(path: str) -> tuple:
+    """Driver-side identity of the parquet table at ``path``: its
+    parquet_part_stats as a tuple, empty if the path is missing. The
+    one key every fingerprint-keyed cache compares (the schema cache
+    below, the near-dup probe cache)."""
+    return tuple(parquet_part_stats(path))
 
 
 def table_bytes(sf_dir: str, name: str) -> int:
@@ -146,14 +169,63 @@ def _nanos_timestamp_cols(path: str) -> list[str]:
     ]
 
 
+# Session confs whose value changes the schema parquet inference
+# returns for the same files (ns timestamps as longs, binary as string,
+# INT96 as timestamp, timestamp NTZ inference, schema merging across
+# parts, typed partition values). Part of every schema-cache key.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+
+# path -> (key, inferred schema, ns-timestamp columns). One entry per
+# path: a rewritten table or a flipped conf replaces it. An entry is
+# stored whole by one assignment, so threads racing on a miss (the
+# HTTP server's request threads) at worst infer twice.
+_SCHEMA_CACHE: dict[str, tuple[tuple, StructType, tuple[str, ...]]] = {}
+
+
+def _schema_key(spark: SparkSession, path: str) -> tuple:
+    return (
+        table_fingerprint(path),
+        spark.version,
+        tuple(spark.conf.get(k, None) for k in _SCHEMA_CONFS),
+    )
+
+
+def parquet_schema(
+    spark: SparkSession, path: str
+) -> tuple[StructType, tuple[str, ...]]:
+    """(schema, ns-timestamp columns) of the parquet table at ``path``,
+    as ``spark.read.parquet(path)`` infers it under the session's
+    current confs. Served from the schema cache while the key matches;
+    otherwise inferred (one Spark job; raises on a missing table as the
+    plain read does) and cached when the fingerprint is non-empty and
+    unchanged across the inference."""
+    key = _schema_key(spark, path)
+    hit = _SCHEMA_CACHE.get(path)
+    if hit is not None and hit[0] == key:
+        return hit[1], hit[2]
+    schema = spark.read.parquet(path).schema
+    ns_cols = tuple(_nanos_timestamp_cols(path))
+    if key[0] and _schema_key(spark, path) == key:
+        _SCHEMA_CACHE[path] = (key, schema, ns_cols)
+    return schema, ns_cols
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     ensure_session_defaults(spark)
     path = table_path(sf_dir, name)
-    df = spark.read.parquet(path)
-    ns_cols = _nanos_timestamp_cols(path)
-    if ns_cols and dict(df.dtypes).get(ns_cols[0]) == "bigint":
+    schema, ns_cols = parquet_schema(spark, path)
+    df = spark.read.schema(schema).parquet(path)
+    dtypes = {f.name: f.dataType.simpleString() for f in schema.fields}
+    if ns_cols and dtypes.get(ns_cols[0]) == "bigint":
         # Legacy nanosAsLong read: integer ns→µs floor (`div`, not `/`:
         # ns values exceed double's 2^53 integer range), matching
         # DuckDB's read-time truncation.

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from master_airflow_spark.catalog import load_table
+from master_airflow_spark.catalog import load_table, table_fingerprint, table_path
 from master_airflow_spark.registry import register, track_broadcast
 
 QUERY_STRIDE = 50  # vec_id % 50 == 0 → deterministic query subset
@@ -54,16 +54,6 @@ NEAR_DUP_BROADCAST_MAX_BYTES = 32 << 20
 # sf_dir — instead of steering a now-too-large corpus onto the
 # driver-collect broadcast plan.
 _NEAR_DUP_PROBE_CACHE: dict[str, tuple[tuple, int, int | None]] = {}
-
-
-def _corpus_fingerprint(sf_dir: str) -> tuple:
-    """Cheap (no-Spark) identity of the embeddings table under sf_dir
-    (catalog.parquet_part_stats — the shared walker)."""
-    import os
-
-    from master_airflow_spark.catalog import parquet_part_stats
-
-    return tuple(parquet_part_stats(os.path.join(sf_dir, "embeddings.parquet")))
 
 
 DIM = 64  # embedding dimensionality of the driver tables
@@ -1004,7 +994,7 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # just to learn one integer). The (n, dim) result is cached per
     # sf_dir (r9 ADVICE): repeated invocations — the bench sampling
     # loop, the certification loop — skip both driver-blocking jobs.
-    fp = _corpus_fingerprint(sf_dir)
+    fp = table_fingerprint(table_path(sf_dir, "embeddings"))
     cached = _NEAR_DUP_PROBE_CACHE.get(sf_dir)
     n, dim = (cached[1], cached[2]) if cached and cached[0] == fp else (None, None)
     if n is None:

@@ -27,6 +27,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from master_airflow_spark.catalog import parquet_part_stats
+
 
 def write_append(df: DataFrame, path: str) -> None:
     """Append semantics: re-runs duplicate (the Mongo/Postgres/ES
@@ -59,12 +61,16 @@ def write_keyed_upsert(
     Batch-merge implementation: read-merge-overwrite. On a real
     deployment this is a Delta/Iceberg MERGE INTO keyed on the same
     columns; the dedup window (shuffle on the key) is identical.
+
+    "First write" means no parquet part under ``path``. Any other
+    failure to read or merge the existing data (a batch whose columns
+    drifted from the sink's, an unreadable part) raises and leaves the
+    sink untouched: overwriting it with the incoming batch alone would
+    delete its history.
     """
-    spark = df.sparkSession
-    try:
-        existing = spark.read.parquet(path)
-        merged = existing.unionByName(df)
-    except Exception:  # first write — nothing to merge
+    if parquet_part_stats(path):
+        merged = df.sparkSession.read.parquet(path).unionByName(df)
+    else:  # first write — nothing to merge
         merged = df
     result = latest_per_key(merged, keys, order).localCheckpoint(eager=True)
     writer = result.write.mode("overwrite")

@@ -54,18 +54,14 @@ def _vsum(alias: str):
 
 # ts slot depends on Spark version: 4.1+ reads parquet TIMESTAMP(NANOS)
 # natively as timestamp_ntz; older versions need nanosAsLong (bigint).
+# read_events_stream fills it from catalog.parquet_schema, the one
+# fingerprint-keyed schema cache: inferring it is a Spark job worth
+# doing once per dir, and the fingerprint keys out a REGENERATED dir
+# whose writer changed the physical ts type.
 EVENTS_SCHEMA_TEMPLATE = (
     "event_id bigint, ts {ts_type}, user_id bigint, event_type string, "
     "value double, props string"
 )
-
-# events_dir -> (part-stat fingerprint, how this runtime surfaces the
-# parquet ts column). Footer-only probe, but still a Spark job worth
-# doing once per dir; the fingerprint keys out a REGENERATED dir whose
-# writer changed the physical ts type (same staleness class as the
-# landing-dir reconcile / near-dup probe cache — round-10 ADVICE
-# pattern, applied uniformly).
-_TS_TYPE_CACHE: dict[str, tuple[tuple, str]] = {}
 
 
 def landing_dir_for(parquet_file: str) -> str:
@@ -126,9 +122,9 @@ def read_events_stream(
 ) -> DataFrame:
     """File-source stream over a directory of events parquet files.
     The explicit schema must match how this Spark version surfaces
-    parquet ns timestamps (see catalog._nanos_timestamp_cols), so probe
-    with a footer-only batch read; ts is normalized to TimestampType —
-    one rule for batch and stream.
+    parquet ns timestamps (see catalog._nanos_timestamp_cols), so ts's
+    type comes from the cached batch inference (catalog.parquet_schema);
+    ts is normalized to TimestampType — one rule for batch and stream.
 
     File batching (round-11 default flip): the SHIPPING default batches
     ALL available files into each trigger (maxFilesPerTrigger unset —
@@ -146,17 +142,10 @@ def read_events_stream(
     SPARK_GRAFT_MAX_FILES_PER_TRIGGER=N (values < 1 or garbage fall
     back to the batched default rather than failing the session —
     round-10 ADVICE)."""
-    from master_airflow_spark.catalog import ensure_session_defaults
+    from master_airflow_spark.catalog import ensure_session_defaults, parquet_schema
 
     ensure_session_defaults(spark)
-    from master_airflow_spark.catalog import parquet_part_stats
-
-    fp = tuple(parquet_part_stats(events_dir))
-    cached = _TS_TYPE_CACHE.get(events_dir)
-    ts_type = cached[1] if cached and cached[0] == fp else None
-    if ts_type is None:
-        ts_type = dict(spark.read.parquet(events_dir).dtypes)["ts"]
-        _TS_TYPE_CACHE[events_dir] = (fp, ts_type)
+    ts_type = parquet_schema(spark, events_dir)[0]["ts"].dataType.simpleString()
     if max_files is None:
         raw_env = os.environ.get("SPARK_GRAFT_MAX_FILES_PER_TRIGGER", "").strip()
         if raw_env:

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 import pytest
+from pyspark.errors import AnalysisException
 
 from master_airflow_spark.operators.ingest import RUN_DATE, SAMPLE_PAGES
 from master_airflow_spark.sinks.writers import (
@@ -82,6 +83,19 @@ def test_keyed_upsert_last_write_wins(spark, tmp_path):
     write_keyed_upsert(v2, path, ["date", "station"], ["seq"])
     rows = spark.read.parquet(path).collect()
     assert len(rows) == 1 and rows[0].price == 120.0
+
+
+def test_keyed_upsert_drifted_batch_raises_and_keeps_history(spark, tmp_path):
+    """A batch whose columns drifted from the sink's cannot be merged.
+    The upsert must raise, not overwrite the sink with the batch alone."""
+    path = str(tmp_path / "drift")
+    v1 = spark.createDataFrame([(1, 10.0), (2, 20.0)], "k int, price double")
+    write_keyed_upsert(v1, path, ["k"], ["price"])
+    drifted = spark.createDataFrame([(3, 30.0, "x")], "k int, price double, extra string")
+    with pytest.raises(AnalysisException):
+        write_keyed_upsert(drifted, path, ["k"], ["price"])
+    rows = sorted(tuple(r) for r in spark.read.parquet(path).collect())
+    assert rows == [(1, 10.0), (2, 20.0)]
 
 
 def test_latest_per_key_tie_order(spark):
