@@ -62,10 +62,6 @@ def sql_dsum(expr: str) -> str:
     return f"CAST(SUM(CAST({expr} AS DECIMAL(28,4))) AS DOUBLE)"
 
 
-def sql_davg(expr: str) -> str:
-    return f"CAST(SUM(CAST({expr} AS DECIMAL(28,4))) AS DOUBLE) / COUNT({expr})"
-
-
 def sql_dmul(a: str, b: str) -> str:
     return (
         f"CAST(CAST({a} AS DECIMAL(18,4)) * CAST({b} AS DECIMAL(18,4))"

@@ -134,29 +134,6 @@ def _fold(parts: list[Column]) -> Column:
     return acc
 
 
-def shingle_hashes(text_col: str, k: int = SHINGLE_K) -> Column:
-    """Portable hash per word-k-gram, built without materializing
-    shingle strings: hash each token once (md5-derived, mod P_MIN),
-    then combine k consecutive token hashes with a polynomial fold.
-    Every position gets a shingle; the trailing k-1 partials pad with
-    the sentinel j (same rule as the exploded pipeline, so both forms
-    produce identical hash streams).
-
-    PERF TRAP: this is a pure Column, so the token-hash array `th` is
-    an inline expression — the outer transform() re-evaluates it per
-    shingle, i.e. quadratic in document length. Fine for bounded test
-    rows; corpus-scale callers must use doc_shingle_arrays (the
-    materialized-token-column form)."""
-    toks = F.split(F.trim(F.regexp_replace(text_col, r"\s+", " ")), " ")
-    th = F.transform(toks, _tok_hash)
-    n = F.size(toks)
-    idx = F.sequence(F.lit(1), n)
-    combine = lambda i: _fold(  # noqa: E731
-        [F.coalesce(F.try_element_at(th, i + j), F.lit(j)) for j in range(k)]
-    )
-    return F.transform(idx, combine)
-
-
 def minhash_signature(hash_col: Column) -> Column:
     """N_HASHES-wide MinHash signature over pre-hashed shingles: lane i
     re-mixes each shingle hash with the fixed affine map (Aᵢ·h + Bᵢ)
@@ -218,42 +195,9 @@ def doc_shingle_arrays(docs: DataFrame, k: int = SHINGLE_K) -> DataFrame:
 def minhash_signatures(docs: DataFrame, k: int = SHINGLE_K) -> DataFrame:
     """(doc_id, sig) via per-row array expressions — ZERO shuffle: the
     shingle arrays come from doc_shingle_arrays (linear form), then the
-    16 affine-min lanes run inside WholeStageCodegen at scan speed.
-    Preferred form for bounded-length documents;
-    minhash_signatures_exploded below is the shuffle-based shape for
-    corpora with pathologically long rows."""
+    16 affine-min lanes run inside WholeStageCodegen at scan speed."""
     return doc_shingle_arrays(docs, k).select(
         "doc_id", minhash_signature(F.col("sh")).alias("sig")
-    )
-
-
-def minhash_signatures_exploded(docs: DataFrame, k: int = 5) -> DataFrame:
-    """(doc_id, sig) via the shuffle-based shingling pipeline — the
-    shape that scales: posexplode tokens → ONE string hash per token →
-    k-gram shingle hash from k consecutive token hashes (lead() over a
-    per-doc window; trailing partials padded with sentinels) → per-lane
-    MIN as a hash aggregate with map-side partial combine. One shuffle
-    keyed on doc_id (window + groupBy share it); only 8-byte hashes
-    cross the wire, never text. Avoids the array-lambda trap where an
-    outer array expression referenced inside transform() re-evaluates
-    per element (quadratic in document length)."""
-    toks = F.split(F.trim(F.regexp_replace("text", r"\s+", " ")), " ")
-    tok_rows = docs.select("doc_id", F.posexplode(toks).alias("pos", "tok"))
-    h = tok_rows.select("doc_id", "pos", _tok_hash(F.col("tok")).alias("h0"))
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    for j in range(1, k):
-        h = h.withColumn(f"h{j}", F.coalesce(F.lead("h0", j).over(w), F.lit(j)))
-    sh = h.select(
-        "doc_id", _fold([F.col(f"h{j}") for j in range(k)]).alias("sh")
-    )
-    lanes = sh.groupBy("doc_id").agg(
-        *[
-            F.min(F.pmod(F.lit(LANE_A[i]) * F.col("sh") + F.lit(LANE_B[i]), F.lit(P_MIN))).alias(f"m{i}")
-            for i in range(N_HASHES)
-        ]
-    )
-    return lanes.select(
-        "doc_id", F.array(*[f"m{i}" for i in range(N_HASHES)]).alias("sig")
     )
 
 
@@ -277,7 +221,7 @@ _ROWS_PER_BAND = N_HASHES // N_BANDS
 
 # shared CTE chain: documents → token hashes → shingle hashes →
 # 16-lane signature → 4 LSH bands → distinct candidate pairs.
-# Mirrors minhash_signatures_exploded + with_bands value-for-value.
+# Mirrors minhash_signatures + with_bands value-for-value.
 SQL_MINHASH_CTES = f"""
 d AS (SELECT doc_id, {_SQL_TH} AS th FROM documents),
 shs AS (SELECT doc_id,
@@ -845,11 +789,7 @@ def minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The shingle rows come from doc_shingle_arrays — the SAME builder
     minhash_signatures derives the signatures from, so the estimate
-    and its audit can't disagree about the shingle rule. (Building
-    them with the shingle_hashes() column helper instead re-evaluates
-    the token-hash array once PER SHINGLE inside the outer transform()
-    — the quadratic array-lambda trap; 27 s vs ~2 s on the x10 scale
-    replica.)"""
+    and its audit can't disagree about the shingle rule."""
     docs = (
         load_table(spark, sf_dir, "documents")
         .select("doc_id", "text")

@@ -27,6 +27,8 @@ matches without any rounding fudge.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -393,21 +395,38 @@ def lsh_bucket(emb: str | Column, dim: int, table: int) -> Column:
     return out
 
 
-def _bucket_matrix(A: "np.ndarray", dim: int = DIM) -> "np.ndarray":
-    """(n, dim) float64 matrix → (n, N_TABLES) int bucket ids, folding
-    projections dimension-by-dimension (acc += A[:,i] * H[i,:]) — the
-    same left-to-right reduction as lsh_bucket / the DuckDB oracle, so
-    driver-side and executor-side callers produce identical buckets."""
+@functools.lru_cache(maxsize=None)
+def _plane_matrix(dim: int, tables: int, planes: int, ns: int) -> "np.ndarray":
+    """(dim, tables*planes) hyperplane matrix of one LSH index, built
+    once per process: table t of the index is _hyperplane table ns + t,
+    so indexes in disjoint namespaces stay decorrelated."""
     import numpy as np
 
     H = np.array(
-        [_hyperplane(dim, t, p) for t in range(N_TABLES) for p in range(N_PLANES)]
+        [_hyperplane(dim, ns + t, p) for t in range(tables) for p in range(planes)]
     ).T
-    weights = np.array([1 << p for p in range(N_PLANES)])
+    H.flags.writeable = False
+    return H
+
+
+def _bucket_matrix(
+    A: "np.ndarray", tables: int = N_TABLES, planes: int = N_PLANES, ns: int = 0
+) -> "np.ndarray":
+    """(n, dim) float64 matrix → (n, tables) int bucket ids of the LSH
+    index (tables, planes, ns), folding projections dimension-by-
+    dimension (acc += A[:,i] * H[i,:]) — the same left-to-right
+    reduction as lsh_bucket / the DuckDB oracle, so driver-side and
+    executor-side callers produce identical buckets. The defaults are
+    the ANN index; the near-dup bands pass their own (tables, planes,
+    ns)."""
+    import numpy as np
+
+    H = _plane_matrix(A.shape[1], tables, planes, ns)
+    weights = np.array([1 << p for p in range(planes)])
     acc = np.zeros((A.shape[0], H.shape[1]))
     for i in range(A.shape[1]):
         acc += A[:, i][:, None] * H[i, :][None, :]
-    bits = (acc >= 0).reshape(A.shape[0], N_TABLES, N_PLANES)
+    bits = (acc >= 0).reshape(A.shape[0], tables, planes)
     return (bits * weights[None, None, :]).sum(axis=2)
 
 
@@ -1150,46 +1169,24 @@ ND_LSH_TABLES = 40
 _ND_LSH_NS = 1000  # hyperplane namespace offset (disjoint from the ANN tables)
 
 
-def _nd_hyperplanes(dim: int) -> "np.ndarray":
-    """(dim, tables*planes) deterministic hyperplane matrix for the
-    near-dup bands — same splitmix64 derivation as the ANN tables but
-    offset into its own namespace so the two indexes stay decorrelated."""
-    import numpy as np
-
-    return np.array(
-        [
-            _hyperplane(dim, _ND_LSH_NS + t, p)
-            for t in range(ND_LSH_TABLES)
-            for p in range(ND_LSH_PLANES)
-        ]
-    ).T
-
-
 def _nd_band_rows(e: DataFrame) -> DataFrame:
     """embeddings → exploded (vec_id, table, bucket) band rows, one
-    Arrow kernel pass: project each batch onto all tables*planes
-    hyperplanes with the module's dimension-ordered fold, pack sign
-    bits into int buckets, and emit ND_LSH_TABLES rows per vector.
+    Arrow kernel pass: _bucket_matrix bands each batch into the
+    near-dup index (ND_LSH_TABLES × ND_LSH_PLANES, namespace
+    _ND_LSH_NS) and the kernel emits ND_LSH_TABLES rows per vector.
     Band rows are 3 ints — the ONLY thing that crosses the candidate
     shuffle; vectors themselves never ride the self-join."""
     import numpy as np
     import pandas as pd
 
     def run(batches):
-        H = None
-        weights = np.array([1 << p for p in range(ND_LSH_PLANES)])
         tables = np.arange(ND_LSH_TABLES)
         for pdf in batches:
             if not len(pdf):
                 continue
-            A = _to_matrix(pdf["embedding"])
-            if H is None:
-                H = _nd_hyperplanes(A.shape[1])
-            acc = np.zeros((A.shape[0], H.shape[1]))
-            for i in range(A.shape[1]):
-                acc += A[:, i][:, None] * H[i, :][None, :]
-            bits = (acc >= 0).reshape(len(pdf), ND_LSH_TABLES, ND_LSH_PLANES)
-            buckets = (bits * weights[None, None, :]).sum(axis=2)
+            buckets = _bucket_matrix(
+                _to_matrix(pdf["embedding"]), ND_LSH_TABLES, ND_LSH_PLANES, _ND_LSH_NS
+            )
             vid = pdf["vec_id"].to_numpy()
             yield pd.DataFrame(
                 {
@@ -1275,7 +1272,7 @@ def embedding_near_dup_lsh_verified(spark: SparkSession, sf_dir: str) -> DataFra
     join (candidates × vector width) — nothing quadratic ever
     materializes. At 100 TB (table, bucket) is the natural partition
     key (same co-located layout as minhash LSH over documents,
-    operators/dedup.py:316); bucket granularity (ND_LSH_PLANES bits)
+    dedup.minhash_near_dup); bucket granularity (ND_LSH_PLANES bits)
     bounds per-reducer skew. The exact kernel reuses
     _pair_cosine_kernel's dimension-ordered fold, so emitted cosines
     are bit-identical to the oracle (and to embedding_near_dup —

@@ -57,12 +57,6 @@ def has_operator(df: DataFrame, op: str) -> bool:
     return op in formatted(df)
 
 
-def codegen_stage_count(df: DataFrame) -> int:
-    """Number of WholeStageCodegen spans (wider = fewer interpreter
-    boundaries in the hot path)."""
-    return formatted(df).count("WholeStageCodegen")
-
-
 def op_count(df: DataFrame, op: str) -> int:
     """Number of physical nodes named `op`, counted once per node via
     the formatted plan's numbered detail headers ("(3) Exchange")."""

@@ -24,7 +24,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from master_airflow_spark.catalog import parquet_part_stats
@@ -157,13 +157,6 @@ def write_mongoimport_jsonl(df: DataFrame, path: str) -> None:
     :51-66 does insert_one per row). Partition-parallel; append mode =
     the reference's duplicate-on-rerun semantics."""
     df.write.mode("append").json(path)
-
-
-def create_table_if_not_exists(
-    spark: SparkSession, name: str, ddl_schema: str, using: str = "parquet"
-) -> None:
-    """Idempotent DDL (reference dags/get_prices_load_postgres.py:15)."""
-    spark.sql(f"CREATE TABLE IF NOT EXISTS {name} ({ddl_schema}) USING {using}")
 
 
 def fan_out(df: DataFrame, writers: list[Callable[[DataFrame], None]]) -> None:

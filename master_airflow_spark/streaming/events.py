@@ -138,23 +138,12 @@ def read_events_stream(
     so wide batches are strictly cheaper for bounded drains. Callers
     that NEED the deterministic ordered multi-batch replay (the
     watermark/late-data/state-expiry tests, scale probes of the
-    per-trigger floor) pass ``max_files=1`` explicitly, or set
-    SPARK_GRAFT_MAX_FILES_PER_TRIGGER=N (values < 1 or garbage fall
-    back to the batched default rather than failing the session —
-    round-10 ADVICE)."""
+    per-trigger floor) pass ``max_files=N`` (N ≥ 1 files per trigger;
+    ``max_files=1`` replays one file per micro-batch)."""
     from master_airflow_spark.catalog import ensure_session_defaults, parquet_schema
 
     ensure_session_defaults(spark)
     ts_type = parquet_schema(spark, events_dir)[0]["ts"].dataType.simpleString()
-    if max_files is None:
-        raw_env = os.environ.get("SPARK_GRAFT_MAX_FILES_PER_TRIGGER", "").strip()
-        if raw_env:
-            try:
-                v = int(raw_env)
-            except ValueError:
-                v = 0
-            if v >= 1:
-                max_files = v
     reader = spark.readStream.format("parquet").schema(
         EVENTS_SCHEMA_TEMPLATE.format(ts_type=ts_type)
     )

@@ -329,6 +329,10 @@ def drain_events_multi(
     track_scratch_dir(root)
     spools = {v: os.path.join(root, "spool", v) for v in view_names}
     view_sec: dict[str, float] = dict.fromkeys(view_names, 0.0)
+    # Each view's spool schema, taken from its partial in the handler:
+    # reading the spool back with it is analysis only, where an
+    # inferring read would launch one Spark job per view.
+    spool_schema: dict = {}
 
     n_batches = [0]
 
@@ -367,7 +371,9 @@ def drain_events_multi(
 
         def write_view(v: str) -> None:
             t0 = time.perf_counter()
-            VIEWS[v][0](batch_df).write.mode("append").parquet(spools[v])
+            partial = VIEWS[v][0](batch_df)
+            spool_schema[v] = partial.schema
+            partial.write.mode("append").parquet(spools[v])
             view_sec[v] += time.perf_counter() - t0
 
         with ThreadPoolExecutor(len(view_names)) as ex:
@@ -392,7 +398,9 @@ def drain_events_multi(
     else:
         merge_ix = 2 if n_batches[0] == 1 else 1
         out = {
-            v: VIEWS[v][merge_ix](spark.read.parquet(spools[v]))
+            v: VIEWS[v][merge_ix](
+                spark.read.schema(spool_schema[v]).parquet(spools[v])
+            )
             for v in view_names
         }
     if timings is not None:

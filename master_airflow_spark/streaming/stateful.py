@@ -13,7 +13,13 @@ equivalent.
 State discipline at scale: state is keyed by user_id (the shuffle
 key), holds two scalars per user, and expires via processing-time
 timeout when a user goes quiet — bounded state, the thing that keeps
-a 1000-executor streaming job alive."""
+a 1000-executor streaming job alive.
+
+API choice: transformWithStateInPandas (Spark 4's successor API) is
+not used because its Python state server needs protobuf, which is not
+a dependency of this package; applyInPandasWithState carries the same
+per-key state semantics over the Arrow channel (see
+events.ewma_per_user)."""
 
 from __future__ import annotations
 
@@ -99,67 +105,3 @@ def spend_alerts(
         ),
     )
 
-
-# -- transformWithState form (Spark 4.x) --------------------------------------
-#
-# The modern replacement for applyInPandasWithState: a StatefulProcessor
-# object with named, individually-typed state variables (value/list/map),
-# TTL support, and timer callbacks — the API surface new stateful
-# operators should target. spend_alerts_tws is the same per-user spend
-# tracker as spend_alerts, so tests can pin both implementations to the
-# same output on the same stream.
-
-
-def spend_alerts_tws(events: DataFrame, threshold: float = 100.0) -> DataFrame:
-    """transformWithStateInPandas twin of ``spend_alerts``: per-user
-    running (count, total); emit one row whenever the total crosses a
-    new multiple of ``threshold``. State is a single named ValueState
-    keyed by user_id (the shuffle key) holding two scalars — same
-    bounded-state discipline, new API.
-
-    Runtime requirements beyond applyInPandasWithState: the RocksDB
-    state store provider (set spark.sql.streaming.stateStore.
-    providerClass to ...state.RocksDBStateStoreProvider) and the
-    ``protobuf`` package (the TWS Python state server's wire format) —
-    the equivalence test skips where the runtime lacks them."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class SpendProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "spend", "n_events long, total_value double"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            (user_id,) = key
-            prior = self._state.get() if self._state.exists() else None
-            n, total = (prior[0], prior[1]) if prior is not None else (0, 0.0)
-            before = int(total // threshold)
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._state.update((n, total))
-            after = int(total // threshold)
-            if after > before:
-                yield pd.DataFrame(
-                    [(user_id, n, total, after)],
-                    columns=[
-                        "user_id",
-                        "n_events",
-                        "total_value",
-                        "crossed_multiple",
-                    ],
-                )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=SpendProcessor(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="None",
-    )

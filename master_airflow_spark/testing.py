@@ -11,6 +11,7 @@ from __future__ import annotations
 import datetime
 import decimal
 import math
+import os
 from dataclasses import dataclass
 
 import duckdb
@@ -21,11 +22,16 @@ from master_airflow_spark.catalog import TABLES, table_path
 
 
 def duckdb_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """Every table of ``sf_dir`` as a DuckDB view. A table directory
+    (Spark-written parts, or partitionBy's nested ``k=v/`` dirs) is read
+    through a recursive glob: DuckDB finds no files under a bare
+    directory path, and ``<dir>/*.parquet`` misses the nested parts."""
     con = duckdb.connect()
     for name in TABLES:
-        con.execute(
-            f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{table_path(sf_dir, name)}')"
-        )
+        p = table_path(sf_dir, name)
+        if os.path.isdir(p):
+            p = os.path.join(p, "**", "*.parquet")
+        con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{p}')")
     return con
 
 

@@ -36,25 +36,8 @@ sys.path.insert(0, ".")
 
 from master_airflow_spark import registry  # noqa: E402
 from master_airflow_spark.session import get_spark  # noqa: E402
+from master_airflow_spark.testing import duckdb_connection  # noqa: E402
 
-
-def _duckdb_connection(sf_dir: str):
-    """Like testing.duckdb_connection, but replica tables are
-    Spark-WRITTEN parquet directories (name.parquet/part-*.parquet),
-    so directory paths get a glob."""
-    import duckdb
-
-    from master_airflow_spark.catalog import TABLES, table_path
-
-    con = duckdb.connect()
-    for name in TABLES:
-        p = table_path(sf_dir, name)
-        if os.path.isdir(p):
-            p = os.path.join(p, "*.parquet")
-        con.execute(
-            f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{p}')"
-        )
-    return con
 
 # Round 13: stream_session_window is now the partial-spool drain
 # (per-batch pre-sessionization, verdict #2); the state-store twin
@@ -86,13 +69,7 @@ ROCKSDB = os.environ.get("DRAIN_ROCKSDB") == "1"
 #   DRAIN_SINGLE_FILE=1    — control: events coalesced to ONE file, so
 #                            the single-trigger claim is isolated from
 #                            multi-file scan parallelism.
-#   DRAIN_ONE_FILE_PER_TRIGGER=1 — reproduces the round-10 arrival
-#                            shape (50 files = 50 micro-batches) by
-#                            exporting SPARK_GRAFT_MAX_FILES_PER_
-#                            TRIGGER=1 for the run.
 SINGLE_FILE = os.environ.get("DRAIN_SINGLE_FILE") == "1"
-if os.environ.get("DRAIN_ONE_FILE_PER_TRIGGER") == "1":
-    os.environ["SPARK_GRAFT_MAX_FILES_PER_TRIGGER"] = "1"
 STAGE_ROOT = "/tmp/mas_scale_drain1"
 _ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
@@ -177,7 +154,7 @@ def main() -> None:
             continue
         if SINGLE_FILE:
             sf_dir = _stage_single_file(spark, k)
-        con = _duckdb_connection(sf_dir)
+        con = duckdb_connection(sf_dir)
         try:
             for name in VIEWS:
                 spec = registry.REGISTRY[name]

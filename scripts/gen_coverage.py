@@ -123,7 +123,7 @@ MODULE_ROWS = [
     ("S1", "HTTP GET source", "sources/http.py (driver-side + distributed fetch)", "tests/test_http_source.py"),
     ("S3", "Inter-stage batch handoff (XCom)", "pipeline.py RunContext.outputs (lazy DataFrame handoff)", "tests/test_pipeline.py"),
     ("S4", "Table scan for serving", "catalog.py (every query); temp views for SQL", "all oracle tests"),
-    ("F3", "Existence guard (create-if-absent)", "sinks/writers.py create_table_if_not_exists", "tests/test_pipeline.py (DDL stage)"),
+    ("F3", "Existence guard (create-if-absent)", "pipeline.py gas_prices_pipeline create_tables stage (CREATE TABLE IF NOT EXISTS)", "tests/test_pipeline.py (DDL stage)"),
     ("W1-W3", "Append sinks (Mongo/Postgres/ES semantics)", "sinks/writers.py write_append", "tests/test_ingest.py"),
     ("W4", "Keyed-upsert sink (MinIO semantics)", "sinks/writers.py write_keyed_upsert", "tests/test_ingest.py, test_pipeline.py"),
     ("O1-O3", "Task graph (operators + dependency edges)", "pipeline.py Stage/Pipeline (topo order, cycles rejected)", "tests/test_pipeline.py"),

@@ -7,15 +7,13 @@ from pyspark.sql import functions as F
 
 from master_airflow_spark.operators.dedup import (
     N_HASHES,
-    minhash_signature,
-    shingle_hashes,
+    minhash_signatures,
     with_bands,
 )
 
 
 def _sig_df(spark, rows):
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    return df.select("doc_id", minhash_signature(shingle_hashes("text")).alias("sig"))
+    return minhash_signatures(spark.createDataFrame(rows, "doc_id long, text string"))
 
 
 def test_identical_docs_identical_signatures(spark):

@@ -531,3 +531,45 @@ def test_failed_shared_drain_releases_its_scratch_root(spark, sf_dir, monkeypatc
         drain_events_multi(spark, sf_dir, VIEW_NAMES)
     registry.release_caches()
     assert run_dirs() - before == set()
+
+
+def test_spool_read_launches_no_job(spark, sf_dir, monkeypatch):
+    """Reading the view spools back is analysis only: the handler's
+    partials fix each spool's schema, so no schema-inference job runs
+    after the drain. Every DataFrameReader.parquet call inside one
+    drain_events_multi runs in its own job group, and the status
+    tracker must report no job in that group."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from master_airflow_spark import registry
+    from master_airflow_spark.catalog import parquet_schema
+    from master_airflow_spark.streaming.events import landing_dir_for
+
+    # The events stream's ts type comes from the schema cache; warm it
+    # so the group sees only the spool reads.
+    parquet_schema(spark, landing_dir_for(os.path.join(sf_dir, "events.parquet")))
+    sc = spark.sparkContext
+    group = "spool-read-probe"
+    keys = ("spark.jobGroup.id", "spark.job.description")
+    real = DataFrameReader.parquet
+    calls = []
+
+    def in_group(self, *paths, **options):
+        calls.append(paths)
+        prev = [sc.getLocalProperty(k) for k in keys]
+        sc.setJobGroup(group, "DataFrameReader.parquet")
+        try:
+            return real(self, *paths, **options)
+        finally:
+            for k, v in zip(keys, prev):
+                sc.setLocalProperty(k, v)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", in_group)
+    out = drain_events_multi(spark, sf_dir, VIEW_NAMES)
+    monkeypatch.undo()
+    try:
+        assert len(calls) == len(VIEW_NAMES)  # one spool read per view
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert all(out[v].count() > 0 for v in VIEW_NAMES)
+    finally:
+        registry.release_caches()

@@ -53,52 +53,3 @@ def test_spend_tracker_accumulates_across_batches(spark, tmp_path):
         (2, 1, 250.0, 2),   # single event crossing two multiples
     }
 
-
-def test_transform_with_state_matches_apply_in_pandas(spark, sf_dir):
-    """The Spark 4 transformWithStateInPandas implementation emits the
-    same alert rows as the applyInPandasWithState one on the same
-    bounded stream. Requires protobuf (the TWS state-server wire
-    format) and the RocksDB state store — skipped where the runtime
-    lacks them."""
-    import os
-
-    import pytest
-
-    pytest.importorskip(
-        "google.protobuf.descriptor",
-        reason="transformWithState's Python state server needs protobuf",
-    )
-
-    from master_airflow_spark.streaming.events import (
-        landing_dir_for,
-        read_events_stream,
-        run_to_memory,
-    )
-    from master_airflow_spark.streaming.stateful import spend_alerts, spend_alerts_tws
-
-    d = landing_dir_for(os.path.join(sf_dir, "events.parquet"))
-    a = {
-        tuple(r)
-        for r in run_to_memory(
-            spend_alerts(read_events_stream(spark, d)), "append"
-        ).collect()
-    }
-    conf_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(conf_key, None)
-    spark.conf.set(
-        conf_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        b = {
-            tuple(r)
-            for r in run_to_memory(
-                spend_alerts_tws(read_events_stream(spark, d)), "append"
-            ).collect()
-        }
-    finally:
-        if prev is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prev)
-    assert a == b and len(a) > 0

@@ -351,17 +351,15 @@ def test_dedup_within_watermark_full_value_oracle(spark, tmp_path):
     assert got == want
 
 
-def test_max_files_per_trigger_knob_preserves_results(spark, tmp_path, monkeypatch):
-    """File batching (SPARK_GRAFT_MAX_FILES_PER_TRIGGER / the round-11
-    batch-all default) must only change batch BOUNDARIES, never
-    answers: on a time-split landing (watermark-compatible arrival —
-    the deterministic replay domain), draining the tumbling aggregate
+def test_max_files_per_trigger_knob_preserves_results(spark, tmp_path):
+    """File batching (the max_files argument / the round-11 batch-all
+    default) must only change batch BOUNDARIES, never answers: on a
+    time-split landing (watermark-compatible arrival — the
+    deterministic replay domain), draining the tumbling aggregate
     one-file-per-trigger, 1000-files-per-trigger, and under the
-    shipping default (env unset → all available files in one trigger)
-    must produce the identical row set, and all must equal the batch
-    aggregate over the same data. Garbage / non-positive env values
-    must fall back to the default, not fail the session (round-10
-    ADVICE)."""
+    shipping default (max_files unset → all available files in one
+    trigger) must produce the identical row set, and all must equal
+    the batch aggregate over the same data."""
     from master_airflow_spark.catalog import load_table
 
     ev = load_table(spark, "/root/testdata/sf0.001", "events")
@@ -374,23 +372,16 @@ def test_max_files_per_trigger_knob_preserves_results(spark, tmp_path, monkeypat
     ]
     d = _stage(tmp_path, batches)
 
-    def drain(knob: str | None):
-        if knob is None:
-            monkeypatch.delenv("SPARK_GRAFT_MAX_FILES_PER_TRIGGER", raising=False)
-        else:
-            monkeypatch.setenv("SPARK_GRAFT_MAX_FILES_PER_TRIGGER", knob)
-        out = run_to_memory(tumbling_agg(read_events_stream(spark, d)), "complete")
+    def drain(max_files: int | None):
+        stream = read_events_stream(spark, d, max_files=max_files)
+        out = run_to_memory(tumbling_agg(stream), "complete")
         return {tuple(r) for r in out.collect()}
 
-    one_per_file = drain("1")
-    one_trigger = drain("1000")
+    one_per_file = drain(1)
+    one_trigger = drain(1000)
     default_shape = drain(None)
-    garbage = drain("not-a-number")  # falls back to the batched default
-    zero = drain("0")  # non-positive → batched default too
     assert one_per_file == one_trigger and len(one_trigger) > 0
     assert default_shape == one_trigger
-    assert garbage == one_trigger
-    assert zero == one_trigger
     batch_ev = spark.read.parquet(d)
     # same ts normalization rule as read_events_stream: the staged
     # pandas parquet carries ns timestamps, surfaced as bigint under
