@@ -6,7 +6,7 @@ functions and classes that no code calls.
 bench.py and perfbench/metrics.py each keep a headline list; both must
 name the same registered queries in the same order, or bench.py and
 the benchmark time different work. perfbench/ is only read here, never
-edited. Only the ab test needs a Spark session.
+edited. Only the ab test and the fresh-plan test need a Spark session.
 """
 
 from __future__ import annotations
@@ -78,13 +78,32 @@ def test_ann_family_keeps_its_exact_anchor(family):
         ("master_airflow_spark.streaming.events", "reset_drain_trigger_seconds"),
         ("master_airflow_spark.streaming.events", "drain_wall_seconds"),
         ("master_airflow_spark.streaming.events", "drain_trigger_seconds"),
+        ("master_airflow_spark.serve", "top1_price_today"),
+        ("master_airflow_spark.serve", "top1_price_alltime"),
+        ("master_airflow_spark.serve", "get_prices_today"),
+        ("master_airflow_spark.serve", "get_prices_alltime"),
+        ("master_airflow_spark.http_api", "make_handler"),
+        ("master_airflow_spark.http_api", "PriceServer"),
     ],
 )
 def test_benchmark_binds_package_functions(module, name):
     """perfbench/query_suite.py wraps the first three by identity in
-    its traced pass and reads the drain accumulators through the last
-    three; a rename would break the benchmark, not this package."""
+    its traced pass and reads the drain accumulators through the next
+    three; perfbench/price_server.py wraps the serve names and
+    ``make_handler`` and serves through ``PriceServer``. A rename would
+    break the benchmark, not this package."""
     assert callable(getattr(importlib.import_module(module), name))
+
+
+@pytest.mark.parametrize("query", ["top1_price_today", "top1_price_alltime"])
+def test_registered_price_queries_stay_fresh(spark, sf_dir, query):
+    """The serving layer reuses prepared plans; the registered queries
+    must not, or query_suite would time a re-collect, not a plan."""
+    from master_airflow_spark import registry
+
+    registry._ensure_loaded()
+    fn = registry.REGISTRY[query].fn
+    assert fn(spark, sf_dir) is not fn(spark, sf_dir)
 
 
 def test_ab_refuses_to_time_candidate_with_other_rows(spark, sf_dir, monkeypatch):
