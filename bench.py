@@ -163,8 +163,7 @@ def main() -> None:
             wall = time.perf_counter() - t0
             tm["pass"] = {
                 "pass_wall_sec": stream_events.drain_wall_seconds(),
-                "trigger_sec_listener": stream_events.drain_trigger_seconds(),
-                "trigger_sec_recent_progress": stream_events.drain_trigger_seconds_recent(),
+                "trigger_sec": stream_events.drain_trigger_seconds(),
             }
             return stream_events.credited_seconds(wall), wall, tm, merges
 

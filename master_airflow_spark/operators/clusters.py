@@ -112,23 +112,23 @@ def _is_ram_backed(path: str) -> bool:
 
 
 def _labels_scratch_root(spark, est_bytes_fn) -> str:
-    """Scratch root for the final-labels spill. MAS_CC_SCRATCH_DIR
-    overrides everything (the large-run escape hatch, round-13
-    ADVICE) — validated eagerly so a bad path fails HERE naming the
-    env var, not as an opaque mkdtemp error deep in
-    connected_components (round-14 ADVICE). Otherwise the shared-
-    drain root is kept only while (a) it is not RAM-backed, or (b) the
-    estimated spill leaves at least half the free tmpfs bytes
-    untouched — the gate keys on actual mount type (_is_ram_backed),
-    so a TMPDIR pointed at /dev/shm is gated too. The fallback walk
-    prefers the first DISK-backed writable candidate
+    """Scratch root for the final-labels spill. MAS_STREAM_SCRATCH_DIR,
+    the one driver-local scratch override (streaming/events.py), is
+    honoured as given with no size gate: _checkpoint_root validates it
+    eagerly, so a bad path fails HERE naming the env var, not as an
+    opaque mkdtemp error deep in connected_components (round-14
+    ADVICE). Otherwise the shared-drain root is kept only while (a) it
+    is not RAM-backed, or (b) the estimated spill leaves at least half
+    the free tmpfs bytes untouched — the gate keys on actual mount type
+    (_is_ram_backed), so a TMPDIR pointed at /dev/shm is gated too. The
+    fallback walk prefers the first DISK-backed writable candidate
     (tempfile.gettempdir(), then /var/tmp — the FHS disk-backed temp
     root) and only lands back on a RAM-backed gettempdir() when no
-    disk root exists, in which case MAS_CC_SCRATCH_DIR is the escape
-    hatch. ``est_bytes_fn`` is a thunk (it costs a Spark count job),
-    invoked only on the RAM-backed branch where the estimate is
-    actually consulted (round-14 review: an eager count ran even
-    under the override and the no-tmpfs fallback)."""
+    disk root exists, in which case MAS_STREAM_SCRATCH_DIR is the
+    escape hatch. ``est_bytes_fn`` is a thunk (it costs a Spark count
+    job), invoked only on the RAM-backed branch where the estimate is
+    actually consulted (round-14 review: an eager count ran even under
+    the override and the no-tmpfs fallback)."""
     import os
     import tempfile
 
@@ -137,20 +137,12 @@ def _labels_scratch_root(spark, est_bytes_fn) -> str:
         _checkpoint_root,
     )
 
-    override = os.environ.get("MAS_CC_SCRATCH_DIR")
-    if override:
-        if not (os.path.isdir(override) and os.access(override, os.W_OK)):
-            raise ValueError(
-                f"MAS_CC_SCRATCH_DIR={override!r} is not an existing writable "
-                "directory — fix or unset the env var"
-            )
-        return override
-    # No override: the automatic roots below are all driver-local, so
-    # refuse on a non-local master (round-14 verdict #7) — a cluster
-    # run must point MAS_CC_SCRATCH_DIR at shared storage.
+    # Without the override the roots below are all driver-local, so
+    # this refuses a non-local master (round-14 verdict #7) — a cluster
+    # run must point MAS_STREAM_SCRATCH_DIR at shared storage.
     _assert_local_scratch(spark, "the connected-components labels spill")
     root = _checkpoint_root()
-    if not _is_ram_backed(root):
+    if os.environ.get("MAS_STREAM_SCRATCH_DIR") or not _is_ram_backed(root):
         return root
     try:
         st = os.statvfs(root)
@@ -272,10 +264,10 @@ def connected_components(edges: DataFrame, vertices: DataFrame) -> DataFrame:
     # the estimated spill fits in half the free tmpfs bytes — at the
     # x50/x100 replica factors a RAM-backed spill could ENOSPC or add
     # memory pressure the disk-backed default never had; larger spills
-    # (and MAS_CC_SCRATCH_DIR overrides) land on disk-backed tmp.
-    # Driver-local by design: in local[...] mode executors share the
-    # driver's filesystem. A multi-node deployment must point
-    # MAS_CC_SCRATCH_DIR at a shared store (HDFS/object store) — the
+    # land on disk-backed tmp; a MAS_STREAM_SCRATCH_DIR override is
+    # used as given. Driver-local by design: in local[...] mode
+    # executors share the driver's filesystem. A multi-node deployment
+    # must point MAS_STREAM_SCRATCH_DIR at a shared store — the
     # write/read pair is path-agnostic, and _labels_scratch_root now
     # REFUSES the automatic driver-local roots on a non-local master
     # instead of silently spilling to per-node filesystems.

@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from master_airflow_spark.catalog import load_table
+from master_airflow_spark.operators.text import _SQL_TOKS, tokens
 from master_airflow_spark.registry import register, track_cache
 
 
@@ -111,7 +112,7 @@ LANE_B = tuple(_const("minhash-b", i) for i in range(N_HASHES))
 def shingles(text_col: str, k: int = 5) -> Column:
     """Word-k-gram shingle array (string form — used where the actual
     shingle sets are needed, e.g. exact Jaccard verification)."""
-    toks = F.split(F.trim(F.regexp_replace(text_col, r"\s+", " ")), " ")
+    toks = tokens(text_col)
     n = F.size(toks)
     idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
     return F.when(n >= k, F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k)))).otherwise(
@@ -181,7 +182,7 @@ def doc_shingle_arrays(docs: DataFrame, k: int = SHINGLE_K) -> DataFrame:
     array-form pipelines: minhash_signatures and the exact-Jaccard
     side of minhash_estimate_error both derive from it, so the rule
     cannot desync between the estimate and its audit."""
-    toks = F.split(F.trim(F.regexp_replace("text", r"\s+", " ")), " ")
+    toks = tokens()
     d1 = docs.select("doc_id", F.transform(toks, _tok_hash).alias("th"))
     sh = F.transform(
         F.sequence(F.lit(1), F.size("th")),
@@ -209,7 +210,7 @@ def _sql_fold(parts: list[str]) -> str:
 
 
 _SQL_TH = (
-    "list_transform(string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' '), "
+    f"list_transform({_SQL_TOKS}, "
     f"t -> ('0x' || substr(md5(t), 1, 15))::BIGINT % {P_MIN})"
 )
 
@@ -313,6 +314,81 @@ def minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _ngram_jaccard_oracle(k: int = 5) -> str:
+    return f"""
+WITH {SQL_MINHASH_CTES},
+tk AS (SELECT doc_id, {_SQL_TOKS} AS toks FROM documents),
+shg AS (SELECT doc_id,
+               list_distinct(CASE WHEN len(toks) >= {k}
+                   THEN list_transform(range(1, len(toks) - {k - 2}),
+                                       i -> array_to_string(list_slice(toks, i, i + {k - 1}), ' '))
+                   ELSE [array_to_string(toks, ' ')] END) AS sh
+        FROM tk)
+SELECT * FROM (
+    SELECT c.a_id, c.b_id,
+           CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
+           / len(list_distinct(list_cat(a.sh, b.sh))) AS jaccard
+    FROM cand c
+    JOIN shg a ON a.doc_id = c.a_id
+    JOIN shg b ON b.doc_id = c.b_id
+) WHERE jaccard >= 0.3
+"""
+
+
+@register(
+    "ngram_jaccard_pairs",
+    oracle=_ngram_jaccard_oracle(),
+    tags=("X24", "X26"),
+)
+def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact n-gram Jaccard over MinHash-LSH candidate pairs: the
+    verify stage of the near-dup pipeline. Candidates come from the
+    per-row array signature pipeline (minhash_signatures, with a
+    doc_id repartition for scan parallelism); exact Jaccard
+    (array_intersect / array_union over distinct string shingles,
+    joined back by doc_id) runs only on candidates."""
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .select("doc_id", "text")
+        # explicit count — see minhash_near_dup: AQE would
+        # coalesce a count-less column repartition to one partition
+        .repartition(spark.sparkContext.defaultParallelism, F.col("doc_id"))
+    )
+    sigs = minhash_signatures(docs)
+    banded = with_bands(sigs)
+    left = banded.select(F.col("doc_id").alias("a_id"), "band_id", "band_hash")
+    right = banded.select(F.col("doc_id").alias("b_id"), "band_id", "band_hash")
+    pairs = (
+        left.join(right, ["band_id", "band_hash"])
+        .where(F.col("a_id") < F.col("b_id"))
+        .dropDuplicates(["a_id", "b_id"])
+    )
+    # compute the (expensive) string-shingle arrays ONLY for documents
+    # that appear in some candidate pair — a semi join first, then the
+    # array build over the tiny candidate set
+    cand_ids = (
+        pairs.select(F.col("a_id").alias("doc_id"))
+        .unionByName(pairs.select(F.col("b_id").alias("doc_id")))
+        .distinct()
+    )
+    sh = (
+        docs.join(cand_ids, "doc_id", "left_semi")
+        .select("doc_id", F.array_distinct(shingles("text")).alias("sh"))
+    )
+    sh = track_cache(sh)
+    joined = (
+        pairs.join(sh.select(F.col("doc_id").alias("a_id"), F.col("sh").alias("a_sh")), "a_id")
+        .join(sh.select(F.col("doc_id").alias("b_id"), F.col("sh").alias("b_sh")), "b_id")
+    )
+    inter = F.size(F.array_intersect("a_sh", "b_sh"))
+    union = F.size(F.array_union("a_sh", "b_sh"))
+    return joined.select(
+        "a_id",
+        "b_id",
+        (inter.cast("double") / union).alias("jaccard"),
+    ).where(F.col("jaccard") >= 0.3)
+
+
 _INCREMENTAL_MINHASH_ORACLE = f"""
 WITH {SQL_MINHASH_CTES},
 xc AS (SELECT DISTINCT a.doc_id AS index_id, b.doc_id AS new_id
@@ -384,7 +460,7 @@ _SIMHASH_CTES = f"""
 stoks AS (
     SELECT doc_id, ('0x' || substr(md5(tok), 1, 15))::BIGINT AS h
     FROM (SELECT doc_id,
-                 unnest(string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ')) AS tok
+                 unnest({_SQL_TOKS}) AS tok
           FROM documents)
 ), ssums AS (
     SELECT doc_id,
@@ -483,7 +559,7 @@ def simhash_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     toks = docs.select(
         "doc_id",
-        F.explode(F.split(F.trim(F.regexp_replace("text", r"\s+", " ")), " ")).alias("tok"),
+        F.explode(tokens()).alias("tok"),
     ).withColumn("h", portable_hash60("tok"))
     # Per-bit sign-sums are weighted sums over DISTINCT token hashes
     # (weight = term frequency): sum over occurrences of ±1 equals

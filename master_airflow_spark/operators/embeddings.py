@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from master_airflow_spark.catalog import load_table
+from master_airflow_spark.operators.text import _SQL_TOKS, tokens
 from master_airflow_spark.registry import register, track_cache
 
 _FP = 1_000_000_000  # fixed-point scale: 9 decimal digits
@@ -149,10 +150,10 @@ def embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sequence_packing",
-    oracle=r"""
+    oracle=rf"""
 WITH toks AS (
     SELECT doc_id, source,
-           len(string_split(trim(regexp_replace(text, '\s+', ' ', 'g')), ' ')) AS n_tokens
+           len({_SQL_TOKS}) AS n_tokens
     FROM documents
 ), packed AS (
     SELECT doc_id, source, n_tokens,
@@ -175,7 +176,7 @@ def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     key (distributed state, no global sort); emits each document's
     shard and offset within it."""
     d = load_table(spark, sf_dir, "documents")
-    n_tok = F.size(F.split(F.trim(F.regexp_replace("text", r"\s+", " ")), " "))
+    n_tok = F.size(tokens())
     w = Window.partitionBy("source").orderBy("doc_id")
     toks = d.select("doc_id", "source", n_tok.alias("n_tokens"))
     packed = toks.withColumn(

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from master_airflow_spark.catalog import load_table
+from master_airflow_spark.operators.text import _SQL_TOKS, tokens
 from master_airflow_spark.registry import register
 
 
@@ -348,10 +349,10 @@ def null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "array_hof_suite",
-    oracle=r"""
+    oracle=rf"""
 WITH t AS (
     SELECT doc_id,
-           string_split(trim(regexp_replace(text, '\s+', ' ', 'g')), ' ') AS toks
+           {_SQL_TOKS} AS toks
     FROM documents
 )
 SELECT doc_id,
@@ -373,8 +374,6 @@ def array_hof_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     combine. All JVM-side lambdas; the oracle states the same three
     via DuckDB's list comprehension forms (exists = filtered length >
     0, forall = no counter-example, zip_with = indexed transform)."""
-    from master_airflow_spark.operators.text import tokens
-
     docs = load_table(spark, sf_dir, "documents")
     toks = tokens()
     mirror_eq = F.zip_with(

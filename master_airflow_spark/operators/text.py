@@ -128,10 +128,10 @@ def lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "token_count_bpe",
-    oracle=r"""
+    oracle=rf"""
 SELECT doc_id,
        len(regexp_extract_all(text, '[a-z]+|[A-Z][a-z]*|[0-9]+|[^a-zA-Z0-9\s]')) AS n_bpe_ish,
-       len(string_split(trim(regexp_replace(text, '\s+', ' ', 'g')), ' ')) AS n_ws
+       len({_SQL_TOKS}) AS n_ws
 FROM documents
 """,
     tags=("X26",),
@@ -203,94 +203,11 @@ def rolling_hash_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ngram_jaccard_oracle(k: int = 5) -> str:
-    from master_airflow_spark.operators.dedup import SQL_MINHASH_CTES
-
-    return f"""
-WITH {SQL_MINHASH_CTES},
-tk AS (SELECT doc_id, {_SQL_TOKS} AS toks FROM documents),
-shg AS (SELECT doc_id,
-               list_distinct(CASE WHEN len(toks) >= {k}
-                   THEN list_transform(range(1, len(toks) - {k - 2}),
-                                       i -> array_to_string(list_slice(toks, i, i + {k - 1}), ' '))
-                   ELSE [array_to_string(toks, ' ')] END) AS sh
-        FROM tk)
-SELECT * FROM (
-    SELECT c.a_id, c.b_id,
-           CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-           / len(list_distinct(list_cat(a.sh, b.sh))) AS jaccard
-    FROM cand c
-    JOIN shg a ON a.doc_id = c.a_id
-    JOIN shg b ON b.doc_id = c.b_id
-) WHERE jaccard >= 0.3
-"""
-
-
-@register(
-    "ngram_jaccard_pairs",
-    oracle=_ngram_jaccard_oracle(),
-    tags=("X24", "X26"),
-)
-def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact n-gram Jaccard over MinHash-LSH candidate pairs: the
-    verify stage of the near-dup pipeline. Candidates come from the
-    per-row array signature pipeline (dedup.minhash_signatures, with a
-    doc_id repartition for scan parallelism); exact Jaccard
-    (array_intersect / array_union over distinct string shingles,
-    joined back by doc_id) runs only on candidates."""
-    from master_airflow_spark.operators.dedup import (
-        minhash_signatures,
-        shingles,
-        with_bands,
-    )
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        # explicit count — see dedup.minhash_near_dup: AQE would
-        # coalesce a count-less column repartition to one partition
-        .repartition(spark.sparkContext.defaultParallelism, F.col("doc_id"))
-    )
-    sigs = minhash_signatures(docs)
-    banded = with_bands(sigs)
-    left = banded.select(F.col("doc_id").alias("a_id"), "band_id", "band_hash")
-    right = banded.select(F.col("doc_id").alias("b_id"), "band_id", "band_hash")
-    pairs = (
-        left.join(right, ["band_id", "band_hash"])
-        .where(F.col("a_id") < F.col("b_id"))
-        .dropDuplicates(["a_id", "b_id"])
-    )
-    # compute the (expensive) string-shingle arrays ONLY for documents
-    # that appear in some candidate pair — a semi join first, then the
-    # array build over the tiny candidate set
-    cand_ids = (
-        pairs.select(F.col("a_id").alias("doc_id"))
-        .unionByName(pairs.select(F.col("b_id").alias("doc_id")))
-        .distinct()
-    )
-    sh = (
-        docs.join(cand_ids, "doc_id", "left_semi")
-        .select("doc_id", F.array_distinct(shingles("text")).alias("sh"))
-    )
-    sh = track_cache(sh)
-    joined = (
-        pairs.join(sh.select(F.col("doc_id").alias("a_id"), F.col("sh").alias("a_sh")), "a_id")
-        .join(sh.select(F.col("doc_id").alias("b_id"), F.col("sh").alias("b_sh")), "b_id")
-    )
-    inter = F.size(F.array_intersect("a_sh", "b_sh"))
-    union = F.size(F.array_union("a_sh", "b_sh"))
-    return joined.select(
-        "a_id",
-        "b_id",
-        (inter.cast("double") / union).alias("jaccard"),
-    ).where(F.col("jaccard") >= 0.3)
-
-
 @register(
     "term_frequencies",
-    oracle=r"""
+    oracle=rf"""
 SELECT tok, count(*) AS n
-FROM (SELECT unnest(string_split(trim(regexp_replace(text, '\s+', ' ', 'g')), ' ')) AS tok
+FROM (SELECT unnest({_SQL_TOKS}) AS tok
       FROM documents)
 GROUP BY tok
 ORDER BY n DESC, tok

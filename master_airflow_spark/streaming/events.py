@@ -28,7 +28,6 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQueryListener
 
 from master_airflow_spark.functions.exact import cents, dsum, lsum_money
 
@@ -280,8 +279,10 @@ def _checkpoint_root() -> str:
     I/O cuts the fixed per-drain cost. Production streams should pass a
     durable object-store checkpoint instead (this helper is only for
     drain-and-discard runs). MAS_STREAM_SCRATCH_DIR overrides the
-    root — the cluster escape hatch _assert_local_scratch's error
-    names: point it at shared storage (an hdfs://... or s3a://... URI
+    root for every driver-local scratch consumer (drain checkpoints,
+    shared-drain spools, the connected-components labels spill) — the
+    cluster escape hatch _assert_local_scratch's error names: point it
+    at shared storage (an hdfs://... or s3a://... URI
     passes through unvalidated; a plain path must exist and be
     writable). Without the override, every consumer of this root must
     call _assert_local_scratch first: the path is DRIVER-local, so any
@@ -340,105 +341,31 @@ def _assert_local_scratch(spark, what: str) -> None:
 _DRAIN_LOCK = threading.Lock()
 
 
-class _TriggerListener(StreamingQueryListener):
-    """Session-wide StreamingQueryListener summing triggerExecution per
-    run. Uncapped BY CONSTRUCTION (every progress event is summed as it
-    arrives), unlike recentProgress, whose history is bounded by
-    numRecentProgressUpdates and complete only because _drain raises
-    that cap. The listener is the primary drain-credit source; _drain
-    sums recentProgress alongside as a cross-check (round-7 ADVICE;
-    BENCH_DETAIL records the agreement)."""
-
-    def __init__(self) -> None:
-        self.lock = threading.Lock()
-        self.trigger_ms: dict[str, float] = {}
-        self.terminated: set[str] = set()
-
-    def onQueryStarted(self, event) -> None:
-        with self.lock:
-            self.trigger_ms.setdefault(str(event.runId), 0.0)
-
-    def onQueryProgress(self, event) -> None:
-        p = event.progress
-        ms = (p.durationMs or {}).get("triggerExecution", 0)
-        with self.lock:
-            self.trigger_ms[str(p.runId)] = (
-                self.trigger_ms.get(str(p.runId), 0.0) + float(ms)
-            )
-
-    def onQueryIdle(self, event) -> None:
-        pass
-
-    def onQueryTerminated(self, event) -> None:
-        with self.lock:
-            self.terminated.add(str(event.runId))
-
-    def runs(self) -> set[str]:
-        with self.lock:
-            return set(self.trigger_ms)
-
-    def trigger_seconds(self, before: set[str]) -> float:
-        """Trigger seconds of the runs started since the ``before``
-        snapshot (drains are lock-serialized, so the attribution is
-        unambiguous). Waits up to 10 s for the bus to deliver each run's
-        termination event: a run's progress events precede it, so a
-        seen termination proves the sum complete. On timeout returns
-        what has arrived (the recentProgress cross-check would expose a
-        shortfall)."""
-        deadline = time.perf_counter() + 10.0
-        while True:
-            with self.lock:
-                runs = set(self.trigger_ms) - before
-                if (runs and runs <= self.terminated) or time.perf_counter() >= deadline:
-                    return sum(self.trigger_ms[r] for r in runs) / 1000.0
-            time.sleep(0.02)
-
-
-_LISTENERS: dict[str, _TriggerListener] = {}  # session id -> listener
-
-
-def _ensure_listener(spark: SparkSession) -> _TriggerListener:
-    key = spark.sparkContext.applicationId
-    lst = _LISTENERS.get(key)
-    if lst is None:
-        lst = _TriggerListener()
-        spark.streams.addListener(lst)
-        _LISTENERS[key] = lst
-    return lst
-
-
 # Cumulative trigger-execution and wall-clock seconds of drains since
 # the last reset, fed only by _drain. A drain's wall-clock = one-time
-# query start/stop (checkpoint dir, offset WAL init, listener wiring —
-# paid ONCE by a long-lived production stream) + the recurring
-# per-trigger cost (incremental query planning, addBatch,
+# query start/stop (checkpoint dir, offset WAL init, stop, checkpoint
+# removal — paid ONCE by a long-lived production stream) + the
+# recurring per-trigger cost (incremental query planning, addBatch,
 # state-store/offset commits — paid per micro-batch forever).
 # triggerExecution from StreamingQueryProgress is exactly the recurring
 # part (planning + addBatch + walCommit + commitOffsets, measured by
-# Spark itself); credited_seconds credits drains by it, which is the
-# throughput number that scales. The listener total is primary; the
-# recentProgress sum is its cross-check; the wall total keeps the size
-# of the credit auditable (round-6 verdict).
+# Spark itself); _drain sums it over the finished query's
+# recentProgress, and credited_seconds credits drains by it, which is
+# the throughput number that scales. The wall total keeps the size of
+# the credit auditable (round-6 verdict).
 _DRAIN_TRIGGER_SEC = 0.0
-_DRAIN_TRIGGER_SEC_RECENT = 0.0
 _DRAIN_WALL_SEC = 0.0
 
 
 def reset_drain_trigger_seconds() -> None:
-    global _DRAIN_TRIGGER_SEC, _DRAIN_TRIGGER_SEC_RECENT, _DRAIN_WALL_SEC
+    global _DRAIN_TRIGGER_SEC, _DRAIN_WALL_SEC
     _DRAIN_TRIGGER_SEC = 0.0
-    _DRAIN_TRIGGER_SEC_RECENT = 0.0
     _DRAIN_WALL_SEC = 0.0
 
 
 def drain_trigger_seconds() -> float:
-    """Listener-accumulated triggerExecution seconds since reset."""
+    """triggerExecution seconds of the drains since the last reset."""
     return _DRAIN_TRIGGER_SEC
-
-
-def drain_trigger_seconds_recent() -> float:
-    """recentProgress-accumulated cross-check of the listener total."""
-    return _DRAIN_TRIGGER_SEC_RECENT
 
 
 def drain_wall_seconds() -> float:
@@ -453,8 +380,8 @@ def credited_seconds(wall: float) -> float:
     recurring trigger time instead of their wall-clock:
     min(wall, wall − drain_wall + trigger). Work outside the drains
     (plan construction, post-drain batch steps) stays in. Returns
-    ``wall`` when the trigger total is 0 — a stalled listener bus must
-    not credit away the whole drain."""
+    ``wall`` when the trigger total is 0: no trigger ran, so there is
+    no recurring time to credit the drains at."""
     if _DRAIN_TRIGGER_SEC <= 0:
         return wall
     return min(wall, wall - _DRAIN_WALL_SEC + _DRAIN_TRIGGER_SEC)
@@ -464,25 +391,26 @@ def _drain(spark: SparkSession, writer, ckpt: str, confs: dict[str, str]) -> Non
     """Run one bounded drain: start ``writer`` (a DataStreamWriter with
     its sink set) under Trigger.AvailableNow with checkpoint ``ckpt``
     and wait for it. Holds _DRAIN_LOCK and sets ``confs`` for the drain;
-    restores them and removes ``ckpt`` even when the query fails. Also
-    raises the recentProgress history cap (default 100): a many-file
-    landing dir (one trigger per file) would drop early triggers and
-    leave the cross-check short. Adds the listener and recentProgress
-    trigger seconds and the wall-clock to the module accumulators."""
-    global _DRAIN_TRIGGER_SEC, _DRAIN_TRIGGER_SEC_RECENT, _DRAIN_WALL_SEC
+    restores them and removes ``ckpt`` even when the query fails. Adds
+    the finished query's triggerExecution seconds (summed over its
+    recentProgress) and the drain's wall-clock to the module
+    accumulators."""
+    global _DRAIN_TRIGGER_SEC, _DRAIN_WALL_SEC
+    # recentProgress keeps only the last numRecentProgressUpdates
+    # triggers (default 100): a many-file landing dir drained one file
+    # per trigger would drop its early triggers from the sum. The raise
+    # is what makes the trigger total complete (for any drain of up to
+    # 100000 triggers).
     confs = {**confs, "spark.sql.streaming.numRecentProgressUpdates": "100000"}
-    listener = _ensure_listener(spark)
     t0 = time.perf_counter()
     with _DRAIN_LOCK:
         prev = {k: spark.conf.get(k) for k in confs}
         try:
             for k, v in confs.items():
                 spark.conf.set(k, v)
-            before = listener.runs()
             q = writer.option("checkpointLocation", ckpt).trigger(availableNow=True).start()
             q.awaitTermination()
-            _DRAIN_TRIGGER_SEC += listener.trigger_seconds(before)
-            _DRAIN_TRIGGER_SEC_RECENT += sum(
+            _DRAIN_TRIGGER_SEC += sum(
                 p["durationMs"].get("triggerExecution", 0) for p in q.recentProgress
             ) / 1000.0
         finally:

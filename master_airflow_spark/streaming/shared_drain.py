@@ -286,7 +286,8 @@ def drain_events_multi(
     map under "views", so bench.py can attribute the shared cost to
     the views from measured numbers instead of an assumed split. The
     pass runs through events._drain like the per-query drains, so its
-    wall and trigger seconds land in the same accumulators
+    wall and its triggerExecution seconds (summed from the finished
+    query's recentProgress) land in the same accumulators
     (events.drain_wall_seconds, events.drain_trigger_seconds) and
     events.credited_seconds credits it the same way."""
     from master_airflow_spark.registry import track_scratch_dir

@@ -55,15 +55,15 @@ def test_dedup_clusters_canonicals(spark, sf_dir):
         assert len(rows) >= 2  # singletons excluded
 
 def test_labels_scratch_root_override_validated(spark, monkeypatch):
-    """A bad MAS_CC_SCRATCH_DIR fails HERE, naming the env var, not as
-    an opaque mkdtemp error deep in connected_components (round-14
+    """A bad MAS_STREAM_SCRATCH_DIR fails HERE, naming the env var, not
+    as an opaque mkdtemp error deep in connected_components (round-14
     ADVICE)."""
     import pytest
 
     from master_airflow_spark.operators.clusters import _labels_scratch_root
 
-    monkeypatch.setenv("MAS_CC_SCRATCH_DIR", "/nonexistent/mas_cc_xyz")
-    with pytest.raises(ValueError, match="MAS_CC_SCRATCH_DIR"):
+    monkeypatch.setenv("MAS_STREAM_SCRATCH_DIR", "/nonexistent/mas_cc_xyz")
+    with pytest.raises(RuntimeError, match="MAS_STREAM_SCRATCH_DIR"):
         _labels_scratch_root(spark, lambda: 0)
 
 
@@ -74,7 +74,7 @@ def test_labels_scratch_root_gates_on_mount_type(spark, monkeypatch, tmp_path):
     tmpfs and a large spill would land on RAM ungated)."""
     from master_airflow_spark.operators import clusters as C
 
-    monkeypatch.delenv("MAS_CC_SCRATCH_DIR", raising=False)
+    monkeypatch.delenv("MAS_STREAM_SCRATCH_DIR", raising=False)
     # Force the drain root to a RAM-backed path and the estimate huge:
     # the gate must reject it even though nothing matches gettempdir().
     monkeypatch.setattr(
@@ -111,7 +111,7 @@ def test_driver_local_scratch_refused_off_local_master(spark, monkeypatch):
 
     with pytest.raises(RuntimeError, match="driver-local scratch"):
         _assert_local_scratch(FakeSpark(), "a test consumer")
-    monkeypatch.delenv("MAS_CC_SCRATCH_DIR", raising=False)
+    monkeypatch.delenv("MAS_STREAM_SCRATCH_DIR", raising=False)
     with pytest.raises(RuntimeError, match="labels spill"):
         _labels_scratch_root(FakeSpark(), lambda: 0)
     # the real local[...] session passes

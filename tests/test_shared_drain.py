@@ -50,11 +50,11 @@ def test_shared_drain_equals_per_query_drains(spark, sf_dir):
         assert got[v] == want, f"{v}: shared drain diverges from per-query drain"
 
     # Accounting surface: per-view handler seconds, and the pass wall
-    # and listener-measured trigger total in the events accumulators,
-    # must all be present and sane.
+    # and trigger total in the events accumulators, must all be present
+    # and sane.
     assert set(timings["views"]) == set(VIEW_NAMES)
     assert pass_wall > 0
-    assert 0 < trigger <= pass_wall + 0.5
+    assert 0 < trigger <= pass_wall
 
 
 def test_shared_drain_multibatch_merge(spark, sf_dir, tmp_path):

@@ -517,3 +517,93 @@ def test_drain_accumulators_and_credit(spark, sf_dir):
         ).count()
     )
     check(lambda: drain_events_multi(spark, sf_dir))
+
+
+def test_drain_trigger_seconds_counts_every_trigger(spark, sf_dir, tmp_path):
+    """The drain's trigger total is summed from the finished query's
+    recentProgress, whose history keeps only numRecentProgressUpdates
+    triggers. With the session cap set below the trigger count, both
+    drain forms must still count every trigger: their total equals a
+    test-local listener's, which sees each progress event as it is
+    posted (the cap raise inside events._drain is what keeps it so)."""
+    import threading
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from master_airflow_spark import registry
+    from master_airflow_spark.streaming import events
+    from master_airflow_spark.streaming.shared_drain import drain_events_multi
+
+    class Reference(StreamingQueryListener):
+        def __init__(self) -> None:
+            self.lock = threading.Lock()
+            self.trigger_ms: dict[str, list[int]] = {}
+            self.terminated: set[str] = set()
+
+        def onQueryStarted(self, event) -> None:
+            with self.lock:
+                self.trigger_ms.setdefault(str(event.runId), [])
+
+        def onQueryProgress(self, event) -> None:
+            p = event.progress
+            with self.lock:
+                self.trigger_ms.setdefault(str(p.runId), []).append(
+                    (p.durationMs or {}).get("triggerExecution", 0)
+                )
+
+        def onQueryIdle(self, event) -> None:
+            pass
+
+        def onQueryTerminated(self, event) -> None:
+            with self.lock:
+                self.terminated.add(str(event.runId))
+
+        def triggers_since(self, before: set[str]) -> list[int]:
+            """Trigger ms of the runs started since ``before``, once the
+            bus has delivered each run's termination event (a run's
+            progress events precede it)."""
+            deadline = time.perf_counter() + 30.0
+            while time.perf_counter() < deadline:
+                with self.lock:
+                    runs = set(self.trigger_ms) - before
+                    if runs and runs <= self.terminated:
+                        return [ms for r in runs for ms in self.trigger_ms[r]]
+                time.sleep(0.02)
+            raise AssertionError("no termination event within 30 s")
+
+    n_files = 3
+    d = _stage(
+        tmp_path,
+        [
+            [(i, f"2024-01-01 0{i}:00:00", 1, "click", float(i), "{}")]
+            for i in range(n_files)
+        ],
+    )
+    cap_key = "spark.sql.streaming.numRecentProgressUpdates"
+    cap = n_files - 1
+    prev_cap = spark.conf.get(cap_key)
+    ref = Reference()
+    spark.streams.addListener(ref)
+    try:
+        spark.conf.set(cap_key, str(cap))
+        drains = {
+            "run_to_memory": lambda: run_to_memory(
+                tumbling_agg(read_events_stream(spark, d, max_files=1)),
+                "complete",
+                state_partitions=2,
+            ).count(),
+            "drain_events_multi": lambda: drain_events_multi(
+                spark, sf_dir, events_dir=d, max_files=1
+            ),
+        }
+        for form, drain in drains.items():
+            before = set(ref.trigger_ms)
+            events.reset_drain_trigger_seconds()
+            drain()
+            registry.release_caches()
+            trigger_ms = ref.triggers_since(before)
+            assert len(trigger_ms) > cap, form
+            assert events.drain_trigger_seconds() == sum(trigger_ms) / 1000.0, form
+    finally:
+        spark.streams.removeListener(ref)
+        spark.conf.set(cap_key, prev_cap)
