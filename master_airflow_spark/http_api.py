@@ -5,9 +5,9 @@ Reference parity: FastAPI + Mongo serves today's high/low
 high/low (api/postgres/api.py:16-33), each opening a fresh DB
 connection per request. Here both endpoints share ONE long-lived
 SparkSession and call the serving functions in serve.py (single-pass
-top-1 plans, one prepared plan per endpoint and table version); the
-HTTP machinery is the standard library's threading HTTP server, so the
-engine adds no web-framework dependency.
+top-1 plans, whose collected rows are kept per endpoint and table
+version); the HTTP machinery is the standard library's threading HTTP
+server, so the engine adds no web-framework dependency.
 
 Endpoints (JSON, reference response shape):
     GET /prices/today    -> {"highest_price": {...}, "lowest_price": {...}}
@@ -16,16 +16,20 @@ Endpoints (JSON, reference response shape):
     GET /metrics         -> per route (and "unmatched" for unknown
                             paths): count, errors (non-200 responses),
                             p50/p95 latency in ms over the last
-                            1024 requests, prepared-plan hits and
-                            misses
+                            1024 requests, plan_hits (served from
+                            stored rows, no Spark job) and
+                            plan_misses (plan built and collected)
 
 Serving note for real deployments: the first request after lineitem
 is written builds and runs the top-1 plan (two Spark jobs, a few
 hundred ms at sf0.1 on a warm session); later requests on the same
-table version re-collect the prepared plan (one job, tens of ms). For
-high-QPS serving the same payloads should be periodically materialized
-to a key-value store — the write path for that is
-sinks.writers.write_keyed_upsert.
+table version are answered from the rows that request collected, with
+no Spark job (a fingerprint walk of lineitem's part files and a few
+py4j conf reads, a few ms). The answer is reused only while the table
+version is unchanged, so a writer that rewrites lineitem often turns
+most requests into misses; for that traffic the same payloads should
+be materialized to a key-value store on write — the write path for
+that is sinks.writers.write_keyed_upsert.
 """
 
 from __future__ import annotations
@@ -82,8 +86,8 @@ def _nearest_rank(sorted_ms: list[float], pct: int) -> float | None:
 
 
 def make_handler(spark: SparkSession, sf_dir: str):
-    # Each route returns (payload, whether a prepared plan was reused;
-    # None where no plan runs).
+    # Each route returns (payload, whether it was served from stored
+    # rows; None where no plan runs).
     routes = {
         "/prices/today": lambda: (get_prices_today(spark, sf_dir), plan_reused()),
         "/prices/alltime": lambda: (get_prices_alltime(spark, sf_dir), plan_reused()),

@@ -31,6 +31,9 @@ measured history behind each decision.
 
 from __future__ import annotations
 
+import os
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -85,8 +88,6 @@ def _is_ram_backed(path: str) -> bool:
     unreadable (non-Linux): assuming disk-backed there keeps the old
     ungated behavior rather than forcing every spill off a root we
     can't classify."""
-    import os
-
     try:
         real = os.path.realpath(path)
         best_mnt, best_type = "", None
@@ -116,7 +117,7 @@ def _labels_scratch_root(spark, est_bytes_fn) -> str:
     the one driver-local scratch override (streaming/events.py), is
     honoured as given with no size gate: _checkpoint_root validates it
     eagerly, so a bad path fails HERE naming the env var, not as an
-    opaque mkdtemp error deep in connected_components (round-14
+    opaque write error deep in connected_components (round-14
     ADVICE). Otherwise the shared-drain root is kept only while (a) it
     is not RAM-backed, or (b) the estimated spill leaves at least half
     the free tmpfs bytes untouched — the gate keys on actual mount type
@@ -129,7 +130,6 @@ def _labels_scratch_root(spark, est_bytes_fn) -> str:
     job), invoked only on the RAM-backed branch where the estimate is
     actually consulted (round-14 review: an eager count ran even under
     the override and the no-tmpfs fallback)."""
-    import os
     import tempfile
 
     from master_airflow_spark.streaming.events import (
@@ -267,19 +267,19 @@ def connected_components(edges: DataFrame, vertices: DataFrame) -> DataFrame:
     # land on disk-backed tmp; a MAS_STREAM_SCRATCH_DIR override is
     # used as given. Driver-local by design: in local[...] mode
     # executors share the driver's filesystem. A multi-node deployment
-    # must point MAS_STREAM_SCRATCH_DIR at a shared store — the
-    # write/read pair is path-agnostic, and _labels_scratch_root now
-    # REFUSES the automatic driver-local roots on a non-local master
-    # instead of silently spilling to per-node filesystems.
-    import tempfile
-
-    out_dir = tempfile.mkdtemp(
-        prefix="mas_cc_labels_",
+    # must point MAS_STREAM_SCRATCH_DIR at a shared store — the dir is
+    # named as the shared drain names its run root (root plus a uuid)
+    # and created by Spark's write, so a storage URI (hdfs://, s3a://)
+    # works, and _labels_scratch_root REFUSES the automatic
+    # driver-local roots on a non-local master instead of silently
+    # spilling to per-node filesystems.
+    out_dir = os.path.join(
         # labels is a flat checkpointed generation, so the count is a
         # cheap single-stage job; ~32 bytes/row covers two int64
         # parquet columns plus metadata with slack. Thunked: only the
         # tmpfs branch pays the count.
-        dir=_labels_scratch_root(edges.sparkSession, lambda: labels.count() * 32),
+        _labels_scratch_root(edges.sparkSession, lambda: labels.count() * 32),
+        f"mas_cc_labels_{uuid.uuid4().hex[:10]}",
     )
     labels.write.mode("overwrite").parquet(out_dir)
     _free_rdd_ids(sc, {gen_id})

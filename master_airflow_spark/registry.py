@@ -250,9 +250,9 @@ def release_caches() -> None:
         except Exception:
             pass
     while _TRACKED_SCRATCH_DIRS:
-        import shutil
+        from master_airflow_spark.streaming.events import _remove_scratch
 
-        shutil.rmtree(_TRACKED_SCRATCH_DIRS.pop(), ignore_errors=True)
+        _remove_scratch(_TRACKED_SCRATCH_DIRS.pop())
 
 
 _loaded = False

@@ -56,7 +56,7 @@ def price_oracle():
 @pytest.fixture()
 def lineitem_dir(tmp_path, sf_dir) -> str:
     """A private table directory holding a copy of ``sf_dir``'s lineitem,
-    so a test can rewrite it and starts with no prepared serving plan."""
+    so a test can rewrite it and starts with no stored serving rows."""
     import shutil
 
     from master_airflow_spark.catalog import table_path

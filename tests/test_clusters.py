@@ -116,3 +116,35 @@ def test_driver_local_scratch_refused_off_local_master(spark, monkeypatch):
         _labels_scratch_root(FakeSpark(), lambda: 0)
     # the real local[...] session passes
     _assert_local_scratch(spark, "a test consumer")
+
+
+def test_storage_uri_scratch_root(spark, sf_dir, monkeypatch, tmp_path):
+    """With MAS_STREAM_SCRATCH_DIR a storage URI (file:// standing in
+    for hdfs:// or s3a://), the labels spill and both drain forms give
+    the rows they give at the default root, and the drain checkpoints,
+    the shared-drain spool and the labels spill are all deleted: a
+    URI cannot go through shutil.rmtree."""
+    from master_airflow_spark import registry
+
+    registry._ensure_loaded()
+    edges, vertices = [(1, 2), (2, 3), (10, 11)], [1, 2, 3, 10, 11, 99]
+    drains = ("stream_tumbling_agg", "stream_session_window")
+
+    def run_all():
+        out = [sorted(_cc(spark, edges, vertices).items())]
+        for name in drains:
+            out.append(sorted(registry.REGISTRY[name].fn(spark, sf_dir).collect()))
+            registry.release_caches()
+        registry.release_caches()
+        return out
+
+    monkeypatch.delenv("MAS_STREAM_SCRATCH_DIR", raising=False)
+    want = run_all()
+    root = tmp_path / "scratch"
+    root.mkdir()
+    monkeypatch.setenv("MAS_STREAM_SCRATCH_DIR", root.as_uri())
+    assert run_all() == want
+    # the shared parents (mas_ckpt/, mas_shared_drain/) stay, as they
+    # do at a local root; every dir a run made under them is gone
+    left = sorted(str(p.relative_to(root)) for p in root.rglob("*"))
+    assert set(left) <= {"mas_ckpt", "mas_shared_drain"}, left

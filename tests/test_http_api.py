@@ -69,9 +69,9 @@ def test_rewrite_under_running_server(spark, lineitem_dir, price_oracle):
 
 
 def test_concurrent_requests_all_correct(spark, lineitem_dir, price_oracle):
-    """40 requests from 8 threads, starting with no prepared plan, so the
-    first ones race on the build and the rest collect one DataFrame
-    concurrently."""
+    """40 requests from 8 threads, starting with no stored rows, so the
+    first ones race on the miss: one per route collects, the others
+    wait for it and are served from its rows."""
     want = price_oracle(lineitem_dir)
     paths = [PRICES[i % 2] for i in range(40)]
     interval = sys.getswitchinterval()

@@ -1,5 +1,5 @@
 """Serving-layer parity: the reference's response shape, engine-backed,
-and the prepared-plan reuse behind it (built through the module
+and the stored-rows reuse behind it (built through the module
 attributes, invalidated by a new session, tagged by endpoint)."""
 
 from __future__ import annotations
@@ -51,8 +51,10 @@ def test_miss_builds_through_module_attribute(spark, lineitem_dir, price_oracle,
     assert (len(built), serve.plan_reused()) == (2, False)
 
 
-def test_failed_collect_drops_prepared_plan(spark, lineitem_dir, monkeypatch):
-    want = get_prices_alltime(spark, lineitem_dir)
+def test_failed_miss_stores_nothing(spark, lineitem_dir, price_oracle, monkeypatch):
+    """A miss whose collect fails stores no rows: the next call is a miss
+    again and returns the oracle payload, and the call after it hits."""
+    want = price_oracle(lineitem_dir)["/prices/alltime"]
     DataFrame = type(spark.range(1))  # the session's concrete class
     collect = DataFrame.collect
     calls = []
@@ -66,18 +68,28 @@ def test_failed_collect_drops_prepared_plan(spark, lineitem_dir, monkeypatch):
     monkeypatch.setattr(DataFrame, "collect", fail_once)
     with pytest.raises(RuntimeError, match="stage failed"):
         get_prices_alltime(spark, lineitem_dir)
-    assert serve.plan_reused() is True
+    assert serve.plan_reused() is False
     assert get_prices_alltime(spark, lineitem_dir) == want
     assert serve.plan_reused() is False
-    assert calls[0] is not calls[1]
+    assert get_prices_alltime(spark, lineitem_dir) == want
+    assert serve.plan_reused() is True
+    assert len(calls) == 2  # the hit collected nothing
 
 
 def test_serving_jobs_carry_endpoint_tag(spark, lineitem_dir):
+    """A miss runs its jobs under the endpoint's tag; a hit runs no Spark
+    job at all, and neither leaves a tag behind on the thread."""
     sc = spark.sparkContext
     tracker = sc._jsc.sc().statusTracker()
     before = set(tracker.getJobIdsForTag("/prices/alltime"))
     get_prices_alltime(spark, lineitem_dir)
-    assert set(tracker.getJobIdsForTag("/prices/alltime")) - before
+    assert serve.plan_reused() is False
+    missed = set(tracker.getJobIdsForTag("/prices/alltime"))
+    assert missed - before
+    assert set(sc.getJobTags()) == set()
+    get_prices_alltime(spark, lineitem_dir)
+    assert serve.plan_reused() is True
+    assert set(tracker.getJobIdsForTag("/prices/alltime")) == missed
     assert set(sc.getJobTags()) == set()
 
 
@@ -101,7 +113,7 @@ RESTART = textwrap.dedent("""
 
 def test_restarted_session_rebuilds(sf_dir, price_oracle):
     """The benchmark's set-up loop stops the session and starts a new
-    one in the same process; the prepared plans of the stopped session
+    one in the same process; the rows stored on the stopped session
     must not be served to the new one. A process of its own, because
     stopping the suite's shared session would break every later test."""
     env = dict(os.environ, SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="512m",

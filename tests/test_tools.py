@@ -97,8 +97,9 @@ def test_benchmark_binds_package_functions(module, name):
 
 @pytest.mark.parametrize("query", ["top1_price_today", "top1_price_alltime"])
 def test_registered_price_queries_stay_fresh(spark, sf_dir, query):
-    """The serving layer reuses prepared plans; the registered queries
-    must not, or query_suite would time a re-collect, not a plan."""
+    """The serving layer keeps each endpoint's collected rows per table
+    version; the registered queries must build a new plan on every
+    call, or query_suite would time a stored result, not a query."""
     from master_airflow_spark import registry
 
     registry._ensure_loaded()
