@@ -92,7 +92,7 @@ def table_fingerprint(path: str) -> tuple:
     """Driver-side identity of the parquet table at ``path``: its
     parquet_part_stats as a tuple, empty if the path is missing. The
     one key every fingerprint-keyed cache compares (the schema cache
-    below, the near-dup probe cache)."""
+    below, the near-dup probe cache, serve.py's stored rows)."""
     return tuple(parquet_part_stats(path))
 
 

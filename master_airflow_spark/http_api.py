@@ -5,9 +5,10 @@ Reference parity: FastAPI + Mongo serves today's high/low
 high/low (api/postgres/api.py:16-33), each opening a fresh DB
 connection per request. Here both endpoints share ONE long-lived
 SparkSession and call the serving functions in serve.py (single-pass
-top-1 plans, whose collected rows are kept per endpoint and table
-version); the HTTP machinery is the standard library's threading HTTP
-server, so the engine adds no web-framework dependency.
+top-1 plans, run on serve.py's own child session of it, whose
+collected rows are kept per endpoint and table version); the HTTP
+machinery is the standard library's threading HTTP server, so the
+engine adds no web-framework dependency.
 
 Endpoints (JSON, reference response shape):
     GET /prices/today    -> {"highest_price": {...}, "lowest_price": {...}}
@@ -24,12 +25,14 @@ Serving note for real deployments: the first request after lineitem
 is written builds and runs the top-1 plan (two Spark jobs, a few
 hundred ms at sf0.1 on a warm session); later requests on the same
 table version are answered from the rows that request collected, with
-no Spark job (a fingerprint walk of lineitem's part files and a few
-py4j conf reads, a few ms). The answer is reused only while the table
-version is unchanged, so a writer that rewrites lineitem often turns
-most requests into misses; for that traffic the same payloads should
-be materialized to a key-value store on write — the write path for
-that is sinks.writers.write_keyed_upsert.
+no Spark job and no JVM call (a fingerprint walk of lineitem's part
+files and a dict lookup). Answers follow the table version and the
+confs the server's session was built with; runtime conf changes to
+that session do not reach them. The answer is reused only while the
+table version is unchanged, so a writer that rewrites lineitem often
+turns most requests into misses; for that traffic the same payloads
+should be materialized to a key-value store on write — the write path
+for that is sinks.writers.write_keyed_upsert.
 """
 
 from __future__ import annotations

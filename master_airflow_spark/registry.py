@@ -232,7 +232,9 @@ def release_caches() -> None:
     unpersist frees the executor-side blocks (the leak) but leaves the
     broadcast re-sendable from the driver value, so a caller that
     builds several query plans before materializing them can still
-    execute an older plan afterwards."""
+    execute an older plan afterwards. Once a drain's products are
+    released, the emptied shared parents of its scratch dirs go too."""
+    drained = bool(_TRACKED_MEMORY_TABLES or _TRACKED_SCRATCH_DIRS)
     while _TRACKED_CACHES:
         try:
             _TRACKED_CACHES.pop().unpersist()
@@ -249,10 +251,12 @@ def release_caches() -> None:
             spark.catalog.dropTempView(name)
         except Exception:
             pass
-    while _TRACKED_SCRATCH_DIRS:
-        from master_airflow_spark.streaming.events import _remove_scratch
+    if drained:
+        from master_airflow_spark.streaming.events import _remove_scratch, _remove_scratch_parents
 
-        _remove_scratch(_TRACKED_SCRATCH_DIRS.pop())
+        while _TRACKED_SCRATCH_DIRS:
+            _remove_scratch(_TRACKED_SCRATCH_DIRS.pop())
+        _remove_scratch_parents()
 
 
 _loaded = False

@@ -305,22 +305,48 @@ def _checkpoint_root() -> str:
     return tempfile.gettempdir()
 
 
-def _remove_scratch(path: str) -> None:
+def _remove_scratch(path: str, recursive: bool = True) -> None:
     """Delete a scratch dir under ``_checkpoint_root()``, ignoring errors:
     ``shutil.rmtree`` for a local path, and the active SparkContext's
     Hadoop ``FileSystem.delete`` for a storage URI (an hdfs://, s3a://
-    or file:// MAS_STREAM_SCRATCH_DIR), which rmtree would skip."""
+    or file:// MAS_STREAM_SCRATCH_DIR), which rmtree would skip. With
+    ``recursive=False`` the dir is removed only if it is empty
+    (``os.rmdir`` locally); a dir that is not is left as it is."""
     if "://" not in path:
-        shutil.rmtree(path, ignore_errors=True)
+        if recursive:
+            shutil.rmtree(path, ignore_errors=True)
+        else:
+            try:
+                os.rmdir(path)
+            except OSError:
+                pass  # missing, or still in use
         return
     sc = SparkContext._active_spark_context
     if sc is None:
         return  # session already stopped
     try:
         p = sc._jvm.org.apache.hadoop.fs.Path(path)
-        p.getFileSystem(sc._jsc.hadoopConfiguration()).delete(p, True)
+        p.getFileSystem(sc._jsc.hadoopConfiguration()).delete(p, recursive)
     except Py4JError:
         pass
+
+
+# The shared parents drains make their dirs under, one of each per
+# scratch root: run_to_memory's checkpoints and drain_events_multi's
+# run roots.
+_CKPT_PARENT = "mas_ckpt"
+_SHARED_DRAIN_PARENT = "mas_shared_drain"
+
+
+def _remove_scratch_parents() -> None:
+    """Remove the shared drain parents under ``_checkpoint_root()`` that
+    are empty; a parent another drain still uses stays."""
+    try:
+        root = _checkpoint_root()
+    except RuntimeError:
+        return  # an invalid override: no drain ran under it
+    for parent in (_CKPT_PARENT, _SHARED_DRAIN_PARENT):
+        _remove_scratch(os.path.join(root, parent), recursive=False)
 
 
 def _assert_local_scratch(spark, what: str) -> None:
@@ -480,7 +506,7 @@ def run_to_memory(
     if output_mode == "complete":
         confs.update(_NO_TRAILING_BATCH)
     writer = stream_df.writeStream.format("memory").queryName(qname).outputMode(output_mode)
-    _drain(spark, writer, os.path.join(_checkpoint_root(), "mas_ckpt", qname), confs)
+    _drain(spark, writer, os.path.join(_checkpoint_root(), _CKPT_PARENT, qname), confs)
     out = spark.table(qname)  # analyzed now; survives the view drop
     track_memory_table(spark, qname)
     return out

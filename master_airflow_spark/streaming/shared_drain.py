@@ -293,6 +293,7 @@ def drain_events_multi(
     from master_airflow_spark.registry import track_scratch_dir
     from master_airflow_spark.streaming.events import (
         _NO_TRAILING_BATCH,
+        _SHARED_DRAIN_PARENT,
         _assert_local_scratch,
         _checkpoint_root,
         _drain,
@@ -321,7 +322,7 @@ def drain_events_multi(
     # micro-batch per landing file.
     stream = read_events_stream(spark, events_dir, max_files=max_files)
     run_id = uuid.uuid4().hex[:10]
-    root = os.path.join(_checkpoint_root(), "mas_shared_drain", run_id)
+    root = os.path.join(_checkpoint_root(), _SHARED_DRAIN_PARENT, run_id)
     # Registered before the stream starts, so a failed drain's spool
     # and checkpoint are released too. The merge plans read the spool
     # lazily, so it stays on disk until release_caches() — callers

@@ -122,8 +122,9 @@ def test_storage_uri_scratch_root(spark, sf_dir, monkeypatch, tmp_path):
     """With MAS_STREAM_SCRATCH_DIR a storage URI (file:// standing in
     for hdfs:// or s3a://), the labels spill and both drain forms give
     the rows they give at the default root, and the drain checkpoints,
-    the shared-drain spool and the labels spill are all deleted: a
-    URI cannot go through shutil.rmtree."""
+    the shared-drain spool, the labels spill and the parents they were
+    made under are all deleted: a URI cannot go through shutil.rmtree
+    or os.rmdir."""
     from master_airflow_spark import registry
 
     registry._ensure_loaded()
@@ -144,7 +145,28 @@ def test_storage_uri_scratch_root(spark, sf_dir, monkeypatch, tmp_path):
     root.mkdir()
     monkeypatch.setenv("MAS_STREAM_SCRATCH_DIR", root.as_uri())
     assert run_all() == want
-    # the shared parents (mas_ckpt/, mas_shared_drain/) stay, as they
-    # do at a local root; every dir a run made under them is gone
+    # every dir a run made is gone, and with them the emptied shared
+    # parents (mas_ckpt/, mas_shared_drain/)
     left = sorted(str(p.relative_to(root)) for p in root.rglob("*"))
-    assert set(left) <= {"mas_ckpt", "mas_shared_drain"}, left
+    assert left == [], left
+
+
+def test_release_removes_only_empty_scratch_parents(monkeypatch, tmp_path):
+    """At a local root, releasing a drain's scratch dir removes the
+    shared parents that are then empty, and keeps one another drain
+    still has a dir under."""
+    from master_airflow_spark import registry
+
+    monkeypatch.setenv("MAS_STREAM_SCRATCH_DIR", str(tmp_path))
+    (tmp_path / "mas_ckpt").mkdir()
+    run = tmp_path / "mas_shared_drain" / "run1" / "spool"
+    run.mkdir(parents=True)
+    registry.track_scratch_dir(str(run.parent))
+    registry.release_caches()
+    assert list(tmp_path.iterdir()) == []
+    (tmp_path / "mas_ckpt" / "q_busy").mkdir(parents=True)
+    run.mkdir(parents=True)
+    registry.track_scratch_dir(str(run.parent))
+    registry.release_caches()
+    assert sorted(str(p.relative_to(tmp_path)) for p in tmp_path.rglob("*")) == [
+        "mas_ckpt", "mas_ckpt/q_busy"]

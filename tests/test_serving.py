@@ -1,18 +1,24 @@
 """Serving-layer parity: the reference's response shape, engine-backed,
 and the stored-rows reuse behind it (built through the module
-attributes, invalidated by a new session, tagged by endpoint)."""
+attributes, invalidated by a new session, tagged by endpoint, with no
+JVM call on a hit and no effect on the caller's session)."""
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import subprocess
 import sys
 import textwrap
+import urllib.request
 
 import pytest
+from py4j import protocol as proto
+from py4j.clientserver import ClientServerConnection
 
 from master_airflow_spark import serve
+from master_airflow_spark.http_api import PriceServer
 from master_airflow_spark.serve import get_prices_alltime, get_prices_today
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -93,6 +99,77 @@ def test_serving_jobs_carry_endpoint_tag(spark, lineitem_dir):
     assert set(sc.getJobTags()) == set()
 
 
+# py4j's release of a JVM object ("m\nd\n<id>") is sent by whichever
+# thread drops the object's last Python reference, whenever that is;
+# it is not a call the code under test makes, so it is not counted.
+_RELEASE = proto.MEMORY_COMMAND_NAME + proto.MEMORY_DEL_SUBCOMMAND_NAME
+
+
+@contextlib.contextmanager
+def _jvm_calls():
+    """Every py4j command but a release, sent from any thread inside
+    the block."""
+    calls = []
+    send = ClientServerConnection.send_command
+
+    def counted(self, command):
+        if not command.startswith(_RELEASE):
+            calls.append(command)
+        return send(self, command)
+
+    ClientServerConnection.send_command = counted
+    try:
+        yield calls
+    finally:
+        ClientServerConnection.send_command = send
+
+
+def test_hit_makes_no_jvm_call(spark, lineitem_dir, price_oracle):
+    """A steady-state hit is a fingerprint walk and a dict lookup: no
+    py4j command, called directly or through a PriceServer request
+    thread. A miss still talks to the JVM."""
+    want = price_oracle(lineitem_dir)
+    for path, get in (("/prices/today", get_prices_today), ("/prices/alltime", get_prices_alltime)):
+        with _jvm_calls() as calls:
+            assert get(spark, lineitem_dir) == want[path]
+        assert serve.plan_reused() is False and calls
+        with _jvm_calls() as calls:
+            assert get(spark, lineitem_dir) == want[path]
+        assert (serve.plan_reused(), calls) == (True, [])
+    with PriceServer(spark, lineitem_dir) as srv:
+        for path in want:
+            with _jvm_calls() as calls:
+                with urllib.request.urlopen(f"http://127.0.0.1:{srv.port}{path}", timeout=60) as r:
+                    assert json.loads(r.read()) == want[path]
+            assert calls == []
+        with urllib.request.urlopen(f"http://127.0.0.1:{srv.port}/metrics", timeout=60) as r:
+            metrics = json.loads(r.read())
+    assert [metrics[p]["plan_hits"] for p in want] == [1, 1]
+
+
+TZ, BINARY = "spark.sql.session.timeZone", "spark.sql.parquet.binaryAsString"
+
+
+def test_serving_leaves_caller_session_alone(spark, lineitem_dir, price_oracle):
+    """Serving runs on a session of its own: it sets no conf on the
+    caller's session, and a runtime conf change on the caller neither
+    turns a hit into a miss nor changes the payload."""
+    want = price_oracle(lineitem_dir)["/prices/today"]
+    prev = {k: spark.conf.get(k) for k in (TZ, BINARY)}
+    try:
+        spark.conf.set(TZ, "America/New_York")
+        assert get_prices_today(spark, lineitem_dir) == want
+        assert serve.plan_reused() is False
+        assert spark.conf.get(TZ) == "America/New_York"
+        spark.conf.set(BINARY, "false" if prev[BINARY] == "true" else "true")
+        assert get_prices_today(spark, lineitem_dir) == want
+        assert serve.plan_reused() is True
+        assert spark.conf.get(TZ) == "America/New_York"
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+
+
 RESTART = textwrap.dedent("""
     import json, sys
     from master_airflow_spark import serve
@@ -125,3 +202,48 @@ def test_restarted_session_rebuilds(sf_dir, price_oracle):
     want = price_oracle(sf_dir)
     assert [(t, a) for t, a, _ in out] == [(want["/prices/today"], want["/prices/alltime"])] * 4
     assert [reused for *_, reused in out] == [False, True, False, True]
+
+
+HELD = textwrap.dedent("""
+    import json, sys
+    from pyspark.sql import SparkSession
+    from master_airflow_spark import serve
+    from master_airflow_spark.session import get_spark
+
+    def sessions(obj):
+        if isinstance(obj, SparkSession):
+            yield obj
+        elif isinstance(obj, dict):
+            for kv in obj.items():
+                yield from sessions(kv)
+        elif isinstance(obj, (list, tuple)):
+            for x in obj:
+                yield from sessions(x)
+
+    out = []
+    for _ in range(3):
+        spark = get_spark(app_name="serve-held")
+        spark.sparkContext.setLogLevel("ERROR")
+        serve.get_prices_today(spark, sys.argv[1])
+        serve.get_prices_alltime(spark, sys.argv[1])
+        held = [h for v in vars(serve).values() for h in sessions(v)]
+        out.append([len(serve._PREPARED), len(held),
+                    all(h._sc is spark.sparkContext for h in held)])
+        spark.stop()
+    print(json.dumps(out))
+""")
+
+
+def test_restart_holds_one_caller_state(sf_dir):
+    """After each restart has served, the module holds one stored entry
+    per slot and only sessions on the live context: nothing of a
+    stopped session, and no more sessions than after the first start,
+    so a new caller replaces the serving state instead of adding to it."""
+    env = dict(os.environ, SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="512m",
+               PYTHONPATH=os.pathsep.join(p for p in (ROOT, os.environ.get("PYTHONPATH")) if p))
+    proc = subprocess.run([sys.executable, "-c", HELD, sf_dir], env=env, cwd=ROOT,
+                          capture_output=True, text=True, timeout=300)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    # per start: stored entries, sessions held, all on the live context
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert out == [[2, out[0][1], True]] * 3 and out[0][1] > 0
