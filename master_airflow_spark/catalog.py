@@ -42,12 +42,6 @@ TABLES = (
     "embeddings",
 )
 
-# Dimension tables small enough to broadcast at any scale factor the
-# engine targets (region/nation are fixed-cardinality; supplier/part
-# grow with SF but stay broadcastable well past sf1 at default 10 MB
-# autoBroadcastJoinThreshold — Catalyst sizes them from parquet stats).
-BROADCAST_DIMS = ("region", "nation", "supplier", "part")
-
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")

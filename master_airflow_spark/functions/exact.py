@@ -27,10 +27,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# Matching DuckDB cast targets, for use inside oracle SQL strings.
-DEC = "DECIMAL(28,4)"
-DEC_WIDE = "DECIMAL(38,8)"
-
 
 def dsum(col: Column | str, alias: str | None = None) -> Column:
     """Order-independent SUM over a double column, returned as double."""

@@ -63,9 +63,8 @@ def zorder_layout_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicates on EITHER dimension. The bounds aggregate is 4 longs
     (broadcast); everything else is per-row bit arithmetic in
     WholeStageCodegen — zero data-sized shuffles to COMPUTE the
-    layout; the one range exchange happens only when writing
-    (sinks/zorder.py write_zordered). file_bucket = top 4 z bits =
-    the 16-way file routing the writer applies."""
+    layout; a writer would add the one range exchange on zvalue.
+    file_bucket = top 4 z bits = a 16-way file routing."""
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.col("o_custkey").cast("long").alias("ka"),

@@ -43,14 +43,6 @@ from pyspark.sql.types import (
 from master_airflow_spark.catalog import load_table
 from master_airflow_spark.registry import register
 
-try:  # pragma: no cover - decoder libs absent in this container
-    from PIL import Image  # noqa: F401
-
-    HAS_PIL = True
-except ImportError:
-    HAS_PIL = False
-
-
 def with_payload(docs: DataFrame) -> DataFrame:
     """Attach a binary payload + typed metadata struct. Payload bytes
     derive from the document text (deterministic stand-in for real
@@ -252,23 +244,6 @@ def encode_png(w: int, h: int, rgb: bytes, filters: "list[int] | None" = None) -
     )
 
 
-def decode_image(payload: bytes) -> object:
-    """Decode payload bytes to an image. PPM (P6) and 8-bit PNG decode
-    natively (stdlib); every other format requires PIL — STUB that
-    fails loudly."""
-    if payload.startswith(b"P6"):
-        return decode_ppm(payload)
-    if payload.startswith(_PNG_MAGIC):
-        return decode_png(payload)
-    if not HAS_PIL:
-        raise NotImplementedError(
-            "non-PPM/PNG image decode requires PIL (not installed in "
-            "this container); the Spark-side plumbing is exercised via "
-            "byte_features and the PPM/PNG branches instead"
-        )
-    raise NotImplementedError("wire PIL.Image.open(BytesIO(payload)) here")
-
-
 def resize_ppm(payload: bytes, out_w: int, out_h: int) -> bytes:
     """Nearest-neighbor resize of a P6 PPM — no codec library needed:
     decode, index-map rows/cols with floor arithmetic (deterministic,
@@ -320,7 +295,7 @@ def decode_wav(payload: bytes) -> tuple[int, int, int, bytes]:
     hardening widened the boundary from PCM16-only — 8-bit WAV is
     unsigned by spec, 16-bit little-endian signed); 24/32-bit PCM and
     compressed audio (mp3, ogg, flac) require a codec library — loud
-    stub, same contract as decode_image."""
+    stub, same contract as resize_image."""
     import io
     import wave
 
@@ -405,34 +380,6 @@ def byte_features(with_bin: DataFrame, n_buckets: int = 8) -> DataFrame:
             yield pd.DataFrame(rows, columns=["doc_id", "n_bytes", "features"])
 
     return with_bin.select("doc_id", "payload").mapInPandas(extract, FEATURES_SCHEMA)
-
-
-PPM_DIMS_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("width", LongType()),
-        StructField("height", LongType()),
-        StructField("n_pixels", LongType()),
-    ]
-)
-
-
-def ppm_dims(with_bin: DataFrame) -> DataFrame:
-    """Decode stage over PPM payloads: Arrow-batched mapInPandas, one
-    decode per row, emitting typed dimensions. Same plumbing shape as a
-    real image decode (binary in → struct of decoded properties out);
-    uses the native PPM branch so the path is actually executable in
-    this container."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, rgb = decode_ppm(bytes(payload))
-                rows.append((doc_id, w, h, len(rgb) // 3))
-            yield pd.DataFrame(rows, columns=["doc_id", "width", "height", "n_pixels"])
-
-    return with_bin.select("doc_id", "payload").mapInPandas(run, PPM_DIMS_SCHEMA)
 
 
 @register(

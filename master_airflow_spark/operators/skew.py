@@ -2,22 +2,19 @@
 keys → salting or AQE skew-join").
 
 AQE's skew-join splitting (on in this engine, session.py) handles
-skewed SHUFFLE PARTITIONS automatically; salting is the manual tool
-for the two cases AQE can't fix:
+skewed SHUFFLE PARTITIONS, joins included, automatically; salting is
+the manual tool for what AQE can't fix: a single hot KEY in an
+aggregation whose per-key state is expensive (two-stage salted
+aggregate: spread the hot key over N sub-keys, partial-aggregate,
+then collapse).
 
-- a single hot KEY in an aggregation whose per-key state is expensive
-  (two-stage salted aggregate: spread the hot key over N sub-keys,
-  partial-aggregate, then collapse);
-- a hot key in a shuffled join (salt the big side, replicate the
-  small side N ways so every salted row still finds its match).
-
-Both transformations are semantics-preserving; tests/test_skew.py
-pins equality against the unsalted forms.
+The transformation is semantics-preserving; tests/test_skew.py pins
+equality against the unsalted form.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -45,22 +42,6 @@ def salted_agg_counts(df: DataFrame, key: str, value: str, n_salts: int = 16) ->
         F.sum("__n").alias("n"),
         F.sum("__sum").cast("double").alias("total"),
     )
-
-
-def salted_join(
-    big: DataFrame, small: DataFrame, big_key: str, small_key: str, n_salts: int = 16
-) -> DataFrame:
-    """Skew-safe equi-join: salt the big side, explode the small side
-    into one copy per salt value, join on (key, salt). The hot key's
-    rows land on n_salts different reducers; the small side grows
-    n_salts× (it's small — that's the deal)."""
-    b = with_salt(big, big_key, n_salts)
-    s = small.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
-    )
-    return b.join(
-        s, (F.col(big_key) == F.col(small_key)) & (b["__salt"] == s["__salt"])
-    ).drop("__salt")
 
 
 def _register_salted_query() -> None:

@@ -30,8 +30,6 @@ from pyspark.sql import functions as F
 from master_airflow_spark.catalog import load_table
 from master_airflow_spark.registry import register
 
-_PRICE_COLS = ["which", "price", "l_orderkey", "l_linenumber"]
-
 
 def _argmax_struct(*, with_date: bool, lowest: bool) -> F.Column:
     """Lexicographic max-struct encoding of the reference's ORDER BY:

@@ -109,8 +109,10 @@ def get_spark(
             "spark.ui.enabled",
             "true" if os.environ.get("SPARK_GRAFT_UI") == "1" else "false",
         )
-        # saveAsTable target for bucketed tables (sinks/bucketed.py);
-        # kept out of the repo tree.
+        # Home of the default database and of the pipeline's managed
+        # gas_prices table (pipeline.py create_tables). Without it
+        # Spark creates spark-warehouse/ under the cwd on first catalog
+        # use, i.e. inside the repo tree.
         .config(
             "spark.sql.warehouse.dir",
             os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/mas_warehouse"),

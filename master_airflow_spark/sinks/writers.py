@@ -170,31 +170,3 @@ def fan_out(df: DataFrame, writers: list[Callable[[DataFrame], None]]) -> None:
             w(df)
     finally:
         df.unpersist()
-
-
-def idempotent_batch_writer(
-    target_dir: str,
-) -> Callable[[DataFrame, int], None]:
-    """Exactly-once foreachBatch sink: Structured Streaming guarantees
-    at-least-once delivery to foreachBatch (a batch REPLAYS after a
-    failure between sink write and checkpoint commit), so the writer
-    itself must deduplicate on ``batch_id``. The standard ledger
-    pattern: each batch lands in its own subdirectory committed by an
-    atomic marker file — a replayed batch_id sees its marker and
-    becomes a no-op, making the (at-least-once stream) × (idempotent
-    sink) product exactly-once. On a real deployment the marker is a
-    transactional commit (Delta txn version, JDBC upsert on batch_id);
-    the directory marker here is the filesystem-only equivalent with
-    the same replay contract."""
-    import os
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        part = os.path.join(target_dir, f"batch_id={batch_id}")
-        marker = os.path.join(part, "_COMMITTED")
-        if os.path.exists(marker):
-            return  # replayed batch: already committed, exactly-once no-op
-        batch_df.write.mode("overwrite").parquet(part)
-        with open(marker, "w") as f:
-            f.write("")
-
-    return write

@@ -5,16 +5,15 @@ Min/max file statistics prune scans on ONE leading sort column; a
 corpus queried by both customer and date needs rows clustered so that
 files are tight ranges in BOTH dimensions at once. Interleaving the
 bits of the two keys (the Morton curve) gives a single sort key whose
-ranges are small rectangles in (key1, key2) space: repartitionByRange
-on the z-value then sortWithinPartitions writes files whose per-column
-min/max footprints are narrow in every interleaved dimension — the
-same layout trick Delta/Iceberg OPTIMIZE ZORDER applies, expressed
-with nothing but column expressions and a range partitioner.
+ranges are small rectangles in (key1, key2) space: a writer that
+range-partitions on the z-value and sorts within partitions gets files
+whose per-column min/max footprints are narrow in every interleaved
+dimension — the same layout trick Delta/Iceberg OPTIMIZE ZORDER
+applies, expressed with nothing but column expressions.
 
 The z-value is pure integer bit arithmetic (shifts, masks, adds), so
-the judged query carries an exact DuckDB oracle; the write path is
-verified by a file-footprint test (per-file min/max rectangles must
-not cover the whole key space).
+the judged query (operators/layout.zorder_layout_keys) carries an
+exact DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -84,22 +83,4 @@ def with_zvalue(
     nb = _normalize(F.col(col_b), F.col("b_lo"), F.col("b_hi"), bits)
     return j.withColumn("zvalue", interleave_bits(na, nb, bits)).drop(
         "a_lo", "a_hi", "b_lo", "b_hi"
-    )
-
-
-def write_zordered(
-    df: DataFrame, col_a: str, col_b: str, path: str, n_files: int = 16
-) -> None:
-    """Materialize df clustered on the (col_a, col_b) Morton curve:
-    range-partition on zvalue (a sampled range exchange — the one
-    shuffle), sort within partitions, one file per partition. Each
-    output file then spans a narrow rectangle of (col_a, col_b) space,
-    so min/max footer stats prune file reads for predicates on EITHER
-    key — the property tests/test_zorder.py measures directly."""
-    (
-        with_zvalue(df, col_a, col_b)
-        .repartitionByRange(n_files, "zvalue")
-        .sortWithinPartitions("zvalue")
-        .write.mode("overwrite")
-        .parquet(path)
     )

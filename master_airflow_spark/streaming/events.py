@@ -6,8 +6,8 @@ The reference's only temporal behavior is a daily batch trigger
 streaming-native recast is ``Trigger.AvailableNow`` micro-batches over
 a landing directory — plus the full event-time toolkit the closure
 requires: tumbling / sliding / session windows, watermarks with
-late-data drop, stateful stream dedup, and foreachBatch multi-sink
-fan-out (the streaming form of O5).
+late-data drop and stateful stream dedup. The foreachBatch multi-view
+drain lives in streaming/shared_drain.py.
 
 Every transformation here is also valid on a batch DataFrame (the
 functions take either) — that's what the batch-replay equivalence
@@ -24,7 +24,6 @@ import tempfile
 import threading
 import time
 import uuid
-from collections.abc import Callable
 
 from py4j.protocol import Py4JError
 from pyspark import SparkContext
@@ -510,25 +509,6 @@ def run_to_memory(
     out = spark.table(qname)  # analyzed now; survives the view drop
     track_memory_table(spark, qname)
     return out
-
-
-def fan_out_stream(
-    stream_df: DataFrame, writers: list[Callable[[DataFrame, int], None]]
-) -> None:
-    """O5 streaming form: one micro-batch, N sinks via foreachBatch.
-    The batch DataFrame is persisted once per trigger; each writer
-    reuses it — no re-read of the source, mirroring sinks.fan_out."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        try:
-            for w in writers:
-                w(batch_df, batch_id)
-        finally:
-            batch_df.unpersist()
-
-    q = stream_df.writeStream.foreachBatch(handle).trigger(availableNow=True).start()
-    q.awaitTermination()
 
 
 def attribution_join(

@@ -9,8 +9,8 @@ delta/commit files) for every trigger — profiled at 1.14s of a 1.46s
 session-window trigger at sf0.1. A production deployment computing
 several materialized views over one stream does neither: it reads the
 source ONCE and fans out (the foreachBatch multi-sink pattern —
-Spark's own recommended shape for multi-sink streaming, the same O5
-form as streaming/events.fan_out_stream).
+Spark's own recommended shape for multi-sink streaming, the streaming
+form of the batch sinks/writers.fan_out).
 
 This module is that deployment shape, built on the classic
 partial-aggregate-then-merge design instead of per-view state stores:

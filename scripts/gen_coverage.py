@@ -128,15 +128,11 @@ MODULE_ROWS = [
     ("W4", "Keyed-upsert sink (MinIO semantics)", "sinks/writers.py write_keyed_upsert", "tests/test_ingest.py, test_pipeline.py"),
     ("O1-O3", "Task graph (operators + dependency edges)", "pipeline.py Stage/Pipeline (topo order, cycles rejected)", "tests/test_pipeline.py"),
     ("O4", "Schedule/logical-date runs + backfill", "pipeline.py run/backfill(run_date)", "tests/test_pipeline.py"),
-    ("O5", "Fan-out to N sinks", "sinks/writers.py fan_out; streaming foreachBatch", "tests/test_ingest.py, test_streaming.py"),
+    ("O5", "Fan-out to N sinks", "sinks/writers.py fan_out; streaming/shared_drain.py (foreachBatch)", "tests/test_ingest.py, test_shared_drain.py"),
     ("O6", "Distributed execution", "Spark scheduler (local[32] here; partitioning designed for clusters)", "plan tests"),
-    ("—", "Bucketed co-located joins", "sinks/bucketed.py", "tests/test_bucketing.py (Exchange-free plan)"),
-    ("—", "Z-order (Morton) clustered write for multi-dim file skipping", "sinks/zorder.py; operators/layout.py (exact-oracle key query)", "tests/test_zorder.py (file-footprint + pruning measurement)"),
+    ("—", "Z-order (Morton) layout key for multi-dim file skipping", "sinks/zorder.py; operators/layout.py (exact-oracle key query)", "tests/test_zorder.py (bit layout)"),
     ("—", "Skew salting", "operators/skew.py", "tests/test_skew.py"),
-    ("—", "Custom stateful streaming", "streaming/stateful.py (applyInPandasWithState)", "tests/test_stateful.py"),
-    ("—", "JSON/CSV/ORC sources with corrupt-record surfacing", "sources/readers.py; ORC round-trip", "tests/test_readers.py"),
-    ("—", "binaryFile source for multimodal blob ingest (glob pushdown)", "sources/readers.py read_binary_dir", "tests/test_multimodal_plumbing.py (decode-kernel round-trip)"),
-    ("—", "Exactly-once streaming sink (batch-id ledger)", "sinks/writers.py idempotent_batch_writer", "tests/test_streaming.py (replay test)"),
+    ("—", "Custom stateful streaming", "streaming/events.py ewma_per_user (applyInPandasWithState)", "tests/test_streaming.py (cross-batch state)"),
     ("O4", "Per-stage retries (default_args parity, injectable clock)", "pipeline.py Stage.retries", "tests/test_pipeline.py"),
 ]
 

@@ -13,9 +13,10 @@ from master_airflow_spark.functions.bloom import (
     bloom_build,
     bloom_might_contain,
 )
-from master_airflow_spark.plans.explain import formatted, join_kinds
+from master_airflow_spark.plans.explain import formatted
 from master_airflow_spark.registry import REGISTRY, _ensure_loaded, release_caches
 from master_airflow_spark.testing import run_one
+from plan_asserts import join_kinds
 
 _ensure_loaded()
 

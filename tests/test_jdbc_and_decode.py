@@ -6,11 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from master_airflow_spark.operators.multimodal import (
-    decode_image,
-    decode_ppm,
-    ppm_dims,
-)
+from master_airflow_spark.operators.multimodal import decode_ppm
 from master_airflow_spark.sinks.writers import jdbc_options
 
 
@@ -65,27 +61,6 @@ def test_decode_ppm_errors():
         decode_ppm(b"JFIF....")
     with pytest.raises(ValueError, match="maxval"):
         decode_ppm(b"P6\n2 2\n65535\n" + b"\0" * 24)
-
-
-def test_decode_image_dispatch():
-    assert decode_image(_ppm(2, 2))[:2] == (2, 2)
-    # PNG decodes natively since round 11 — a malformed PNG is a
-    # ValueError (parse failure), not a stub
-    with pytest.raises(ValueError):
-        decode_image(b"\x89PNG\r\n\x1a\n....")
-    # formats with no stdlib codec stay loud stubs (JPEG magic)
-    with pytest.raises(NotImplementedError):
-        decode_image(b"\xff\xd8\xff\xe0....")
-
-
-def test_ppm_dims_distributed(spark):
-    payloads = [(i, _ppm(2 + i, 3)) for i in range(8)]
-    df = spark.createDataFrame(payloads, "doc_id long, payload binary")
-    out = {r.doc_id: r for r in ppm_dims(df).collect()}
-    assert len(out) == 8
-    for i in range(8):
-        assert (out[i].width, out[i].height) == (2 + i, 3)
-        assert out[i].n_pixels == (2 + i) * 3
 
 
 def test_write_jdbc_rejects_bad_batchsize(spark):

@@ -91,35 +91,6 @@ def test_registered_queries_run(spark, sf_dir):
     assert rs.count() == vs.count() > 0
 
 
-def test_binary_file_source_feeds_decode_kernel(spark, tmp_path):
-    """Real ingest path: PPM blobs staged as FILES, read through
-    Spark's binaryFile source (path/length/content schema), decoded by
-    the same pure-Python PPM kernel the synthetic pipeline uses — the
-    decode result must match decoding the staged bytes directly, and
-    the glob filter must hide the non-image file from the scan."""
-    from master_airflow_spark.operators.multimodal import decode_ppm
-    from master_airflow_spark.sources.readers import read_binary_dir
-
-    blobs = {
-        "a.ppm": _ppm(2, 2, bytes(range(12))),
-        "b.ppm": _ppm(1, 3, bytes(range(9))),
-    }
-    for name, payload in blobs.items():
-        (tmp_path / name).write_bytes(payload)
-    (tmp_path / "notes.txt").write_bytes(b"not an image")
-
-    df = read_binary_dir(spark, str(tmp_path), glob="*.ppm")
-    rows = df.select("path", "length", "content").collect()
-    assert len(rows) == 2, "glob filter must exclude the txt file"
-    for r in rows:
-        name = r.path.rsplit("/", 1)[-1]
-        assert r.length == len(blobs[name])
-        assert bytes(r.content) == blobs[name]
-        w, h, px = decode_ppm(bytes(r.content))
-        w2, h2, px2 = decode_ppm(blobs[name])
-        assert (w, h, px) == (w2, h2, px2)
-
-
 # ---- PNG codec (round 11: the real-compressed-format branch) ----------------
 
 
@@ -236,13 +207,9 @@ def test_png_unsupported_variants_stay_loud():
         decode_png(build(8, 3, 0))  # palette
     with pytest.raises(NotImplementedError):
         decode_png(build(8, 2, 1))  # Adam7
-
-
-def test_decode_image_dispatches_png():
-    from master_airflow_spark.operators.multimodal import decode_image, encode_png
-
-    rgb = bytes(range(12))
-    assert decode_image(encode_png(2, 2, rgb)) == (2, 2, rgb)
+    # a malformed PNG is a parse failure, not a stub
+    with pytest.raises(ValueError):
+        decode_png(b"\x89PNG\r\n\x1a\n....")
 
 
 def test_png_decode_stats_query(spark, sf_dir):

@@ -5,15 +5,9 @@ results, catastrophic at scale."""
 
 from __future__ import annotations
 
-from master_airflow_spark.plans.explain import (
-    formatted,
-    has_operator,
-    has_pushed_filter,
-    join_kinds,
-    op_count,
-    read_schemas,
-)
+from master_airflow_spark.plans.explain import formatted
 from master_airflow_spark.registry import REGISTRY, _ensure_loaded
+from plan_asserts import has_operator, has_pushed_filter, join_kinds, op_count, read_schemas
 
 _ensure_loaded()
 
@@ -143,8 +137,6 @@ def test_top1_is_single_scan_argmax(spark, sf_dir):
     # top-1 compiles to ONE aggregate over ONE scan (argmax as
     # max(struct(...)) with partial map-side combine), not a global
     # sort and not two sorted scans unioned
-    from master_airflow_spark.plans.explain import formatted
-
     for q in ("top1_price_alltime", "top1_price_today"):
         plan = formatted(_q(spark, sf_dir, q))
         # formatted() prints each node twice (tree line + detail
@@ -161,8 +153,6 @@ def test_multikey_sort_uses_take_ordered(spark, sf_dir):
 def test_pricing_summary_partial_agg(spark, sf_dir):
     # two HashAggregates (partial + final) around one exchange =
     # map-side combine is on
-    from master_airflow_spark.plans.explain import formatted
-
     plan = formatted(_q(spark, sf_dir, "pricing_summary"))
     assert plan.count("HashAggregate") >= 2
     assert "Exchange" in plan
@@ -175,8 +165,6 @@ def test_normalize_whitespace_prunes_to_two_columns(spark, sf_dir):
 
 
 def test_semi_join_stays_semi(spark, sf_dir):
-    from master_airflow_spark.plans.explain import formatted
-
     plan = formatted(_q(spark, sf_dir, "semi_anti_customers"))
     assert "LeftSemi" in plan and "LeftAnti" in plan
 
@@ -184,8 +172,6 @@ def test_semi_join_stays_semi(spark, sf_dir):
 def test_stats_moments_partial_agg(spark, sf_dir):
     # decimal sufficient statistics must map-side combine: partial +
     # final HashAggregate around a single exchange
-    from master_airflow_spark.plans.explain import op_count
-
     df = _q(spark, sf_dir, "stats_moments")
     assert op_count(df, "HashAggregate") == 2
     assert op_count(df, "Exchange") == 1
@@ -196,8 +182,6 @@ def test_sessionize_single_shuffle(spark, sf_dir):
     # hashpartitioning(user_id) already clusters that, so Spark must
     # NOT add a second exchange — at 100 TB a redundant shuffle of the
     # full events table would dominate the query
-    from master_airflow_spark.plans.explain import op_count
-
     assert op_count(_q(spark, sf_dir, "sessionize_events"), "Exchange") == 1
 
 
@@ -217,8 +201,6 @@ def test_listagg_broadcasts_nation(spark, sf_dir):
 def test_window_distribution_single_shuffle(spark, sf_dir):
     # both window frames share partitioning+ordering: one exchange,
     # one sort — not one per window function
-    from master_airflow_spark.plans.explain import op_count
-
     df = _q(spark, sf_dir, "window_distribution")
     assert op_count(df, "Exchange") == 1
     assert op_count(df, "Window") == 1
@@ -226,16 +208,12 @@ def test_window_distribution_single_shuffle(spark, sf_dir):
 
 def test_embedding_normalize_no_shuffle(spark, sf_dir):
     # per-row vector math must stay a scan-side projection
-    from master_airflow_spark.plans.explain import op_count
-
     df = _q(spark, sf_dir, "embedding_normalize")
     assert op_count(df, "Exchange") == 0
     assert op_count(df, "Scan parquet") == 1
 
 
 def test_embedding_centroids_partial_agg(spark, sf_dir):
-    from master_airflow_spark.plans.explain import op_count
-
     df = _q(spark, sf_dir, "embedding_centroids")
     # single (label, dim) hash-agg pair — partial + final around one
     # exchange, fully codegen (the judged output is exploded per-dim,
@@ -246,15 +224,11 @@ def test_embedding_centroids_partial_agg(spark, sf_dir):
 
 
 def test_sequence_packing_single_shuffle(spark, sf_dir):
-    from master_airflow_spark.plans.explain import op_count
-
     assert op_count(_q(spark, sf_dir, "sequence_packing"), "Exchange") == 1
 
 
 def test_q6_filters_push_to_scan(spark, sf_dir):
     # Q6's whole point: every predicate reaches the parquet scan
-    from master_airflow_spark.plans.explain import formatted
-
     plan = formatted(_q(spark, sf_dir, "q6_forecast_revenue"))
     assert "PushedFilters: [" in plan
     pushed = plan.split("PushedFilters")[1].split("]")[0]
@@ -302,7 +276,6 @@ def test_containment_pairs_no_cartesian(spark, sf_dir):
 def test_scd2_single_exchange(spark, sf_dir):
     """SCD2 build is one shuffle keyed on user_id — lead() and the
     interval projection reuse the same partitioning."""
-    from master_airflow_spark.plans.explain import op_count
 
     df = _q(spark, sf_dir, "scd2_purchase_history")
     assert op_count(df, "Exchange") == 1
@@ -318,7 +291,6 @@ def test_runtime_bloom_filter_injects(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from master_airflow_spark.catalog import load_table
-    from master_airflow_spark.plans.explain import formatted
 
     confs = {
         # sf0.001's lineitem parquet is ~115KB; the app-side scan must
@@ -397,16 +369,12 @@ def test_last_touch_attribution_no_range_join(spark, sf_dir):
     # regressed to the quadratic clicks×purchases candidate space
     df = _q(spark, sf_dir, "last_touch_attribution")
     assert join_kinds(df) == []
-    from master_airflow_spark.plans.explain import op_count
-
     assert op_count(df, "Exchange") == 1, "one user_id shuffle only"
 
 
 def test_multi_touch_no_join_single_shuffle(spark, sf_dir):
     df = _q(spark, sf_dir, "multi_touch_window_count")
     assert join_kinds(df) == []
-    from master_airflow_spark.plans.explain import op_count
-
     assert op_count(df, "Exchange") == 1
 
 
@@ -417,8 +385,6 @@ def test_equi_depth_no_corpus_global_window(spark, sf_dir):
     # and the total count (#value-buckets rows each), never the fact
     # rows — an added global ntile/row_number over orders would
     # introduce a third.
-    from master_airflow_spark.plans.explain import formatted
-
     plan = formatted(_q(spark, sf_dir, "equi_depth_price_buckets"))
     # fact-side ranking runs inside hashpartitioning(vbkt) windows
     assert "hashpartitioning(vbkt" in plan
@@ -431,8 +397,6 @@ def test_equi_depth_no_corpus_global_window(spark, sf_dir):
 def test_inverted_index_single_term_shuffle_after_distinct(spark, sf_dir):
     # distinct on (doc_id, term) then groupBy(term): two exchanges
     # total (pair hash, then term hash) — no third
-    from master_airflow_spark.plans.explain import op_count
-
     df = _q(spark, sf_dir, "inverted_index_postings")
     assert op_count(df, "Exchange") <= 2
 
@@ -463,7 +427,6 @@ def test_source_token_divergence_broadcasts_vocab(spark, sf_dir):
 def test_quality_logit_zero_shuffle_pruned_scan(spark, sf_dir):
     """The quality classifier is a single pruned scan: no exchanges,
     no joins, and the unused columns never leave parquet."""
-    from master_airflow_spark.plans.explain import op_count, read_schemas
 
     df = _q(spark, sf_dir, "quality_logit_score")
     assert op_count(df, "Exchange") == 0
@@ -475,7 +438,6 @@ def test_scd2_history_single_exchange(spark, sf_dir):
     """Duplicate-state collapse (lag), versioning (row_number), and
     interval close (lead) all share ONE user_id-keyed exchange — a
     second shuffle of the events table would dominate at scale."""
-    from master_airflow_spark.plans.explain import op_count
 
     df = _q(spark, sf_dir, "scd2_history_build")
     assert op_count(df, "Exchange") == 1
@@ -489,11 +451,6 @@ def test_boilerplate_no_broadcast_of_corpus(spark, sf_dir):
     the (doc_id, gram) set is cached, so the plan contains exactly one
     parquet scan of the text column (two InMemoryTableScans replace
     the second full pass ReuseExchange failed to dedup)."""
-    from master_airflow_spark.plans.explain import (
-        join_kinds,
-        op_count,
-        read_schemas,
-    )
     from master_airflow_spark.registry import release_caches
 
     df = _q(spark, sf_dir, "boilerplate_shingle_ratio")
@@ -514,7 +471,6 @@ def test_lsh_ann_single_corpus_scan_one_bounded_shuffle(spark, sf_dir):
     the plan (the bounded query set is collected before planning), and
     the only exchange is the k*|Q|-bounded window shuffle — no joins
     at all."""
-    from master_airflow_spark.plans.explain import join_kinds, op_count, read_schemas
 
     df = _q(spark, sf_dir, "lsh_bucketed_ann")
     from master_airflow_spark.registry import release_caches
@@ -534,11 +490,6 @@ def test_dup_span_extract_no_cartesian_docid_windows(spark, sf_dir):
     branches (exactly two scans — measured cheaper than caching the
     corpus-sized gram stream), and no range partitioning anywhere
     (all sorts are hash-partitioned window-local)."""
-    from master_airflow_spark.plans.explain import (
-        formatted,
-        join_kinds,
-        read_schemas,
-    )
 
     df = _q(spark, sf_dir, "dup_span_extract")
     kinds = join_kinds(df)
@@ -557,7 +508,6 @@ def test_dup_span_cut_keeps_all_docs_no_global_sort(spark, sf_dir):
     docs survive to the aggregate), no cartesian/NLJ, no global sort
     (reassembly order comes from array_sort inside the aggregate, not
     an ORDER BY)."""
-    from master_airflow_spark.plans.explain import formatted, join_kinds
 
     df = _q(spark, sf_dir, "dup_span_cut")
     kinds = join_kinds(df)
@@ -576,7 +526,6 @@ def test_heavy_hitters_verify_broadcasts_candidates(spark, sf_dir):
     into the second corpus scan (never shuffle the corpus against it),
     with no cartesian/NLJ and no global sort; the sketch feeds the
     candidate merge from cache, not a second mapInPandas corpus pass."""
-    from master_airflow_spark.plans.explain import formatted, join_kinds
     from master_airflow_spark.registry import release_caches
 
     try:
@@ -643,7 +592,6 @@ def test_bpe_apply_zero_shuffle_pruned_scan(spark, sf_dir):
     shape as the learned config) is ONE streaming mapInPandas pass:
     no Exchange anywhere (the merge table rides an sc.broadcast, not
     a plan-level join), and the documents scan prunes to doc_id+text."""
-    from master_airflow_spark.plans.explain import op_count
 
     df = _q(spark, sf_dir, "bpe_tokenize_zero_merges")
     assert op_count(df, "Exchange") == 0, "corpus must never shuffle"
@@ -658,7 +606,6 @@ def test_semdedup_single_cell_exchange_no_cartesian(spark, sf_dir):
     Exchange — the hash-partition by cell feeding the grouped
     pairwise kernel. No cartesian/NLJ anywhere (the whole point vs
     all-pairs), no plan-level broadcast of the corpus."""
-    from master_airflow_spark.plans.explain import op_count
 
     df = _q(spark, sf_dir, "semdedup_keep")
     kinds = join_kinds(df)

@@ -1,53 +1,9 @@
-"""Source-format readers: JSON/CSV roundtrips with declared schemas
-and corrupt-record surfacing."""
+"""Source formats beyond parquet: an ORC round-trip with pushdown."""
 
 from __future__ import annotations
 
 from master_airflow_spark.catalog import load_table
-from master_airflow_spark.sources.readers import CORRUPT_COL, read_csv, read_json
 
-SCHEMA = "o_orderkey bigint, o_custkey bigint, o_totalprice double"
-
-
-def test_json_roundtrip(spark, sf_dir, tmp_path):
-    p = str(tmp_path / "j")
-    src = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    src.write.json(p)
-    back = read_json(spark, p, SCHEMA).cache()  # corrupt-col-only queries require a cache
-    assert back.count() == src.count()
-    assert back.where(f"{CORRUPT_COL} IS NOT NULL").count() == 0
-    a = sorted(map(tuple, src.collect()))
-    b = sorted(map(tuple, back.drop(CORRUPT_COL).collect()))
-    assert a == b
-
-
-def test_csv_roundtrip(spark, sf_dir, tmp_path):
-    p = str(tmp_path / "c")
-    src = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    src.write.option("header", "true").csv(p)
-    back = read_csv(spark, p, SCHEMA)
-    assert back.count() == src.count()
-    a = sorted(map(tuple, src.collect()))
-    b = sorted(map(tuple, back.drop(CORRUPT_COL).collect()))
-    assert a == b
-
-
-def test_corrupt_json_surfaces(spark, tmp_path):
-    p = tmp_path / "bad"
-    p.mkdir()
-    (p / "data.json").write_text(
-        '{"o_orderkey": 1, "o_custkey": 2, "o_totalprice": 3.5}\n'
-        "THIS IS NOT JSON\n"
-        '{"o_orderkey": 4, "o_custkey": 5, "o_totalprice": 6.5}\n'
-    )
-    df = read_json(spark, str(p), SCHEMA).cache()
-    assert df.count() == 3
-    bad = df.where(f"{CORRUPT_COL} IS NOT NULL").collect()
-    assert len(bad) == 1 and bad[0][CORRUPT_COL] == "THIS IS NOT JSON"
 
 def test_orc_roundtrip(spark, sf_dir, tmp_path):
     """ORC is the second Spark-native columnar format (predicate

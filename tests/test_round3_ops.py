@@ -220,7 +220,6 @@ def test_hll_sketch_error_bound_and_union_law(spark, sf_dir):
     union-of-sketches estimate is consistent with the flat estimate
     over the union of inputs (the re-aggregation law)."""
     from master_airflow_spark.catalog import load_table
-    from master_airflow_spark.operators.relational import hll_sketch_users
 
     e = load_table(spark, sf_dir, "events")
     exact = {
@@ -230,7 +229,15 @@ def test_hll_sketch_error_bound_and_union_law(spark, sf_dir):
         .collect()
     }
     exact["__all__"] = e.agg(F.count_distinct("user_id")).collect()[0][0]
-    est = {r.event_type: r.est_users for r in hll_sketch_users(spark, sf_dir).collect()}
+    sketches = e.groupBy("event_type").agg(F.hll_sketch_agg("user_id").alias("sk"))
+    est = {
+        r.event_type: r.est
+        for r in sketches.select(
+            "event_type", F.hll_sketch_estimate("sk").alias("est")
+        ).collect()
+    }
+    # the global estimate is the union of the per-type sketches
+    est["__all__"] = sketches.agg(F.hll_sketch_estimate(F.hll_union_agg("sk"))).first()[0]
     assert set(est) == set(exact)
     for k, v in exact.items():
         assert abs(est[k] - v) <= max(1, 0.03 * v), (k, est[k], v)

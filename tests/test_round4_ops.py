@@ -15,14 +15,16 @@ from master_airflow_spark import testing
 
 
 def test_hll_estimate_cross_engine(spark, sf_dir):
-    """The HLL sketch query is rows-only at the driver (DataSketches
-    isn't SQL-expressible in DuckDB), so pin the ESTIMATE here against
-    DuckDB's independent approx_count_distinct (also HLL): both engines
-    must land within the error bound of the exact distinct count on the
-    same data — certifying the value, not just the row shape."""
-    from master_airflow_spark.operators.relational import hll_sketch_users
+    """Pin the DataSketches HLL audit (hll_sketch_error) against
+    DuckDB's independent approx_count_distinct (also HLL): both
+    engines must land within the error bound of the exact distinct
+    count on the same data, and the exact counts must agree —
+    certifying the value, not just the row shape."""
+    from master_airflow_spark.operators.relational import hll_sketch_error
+    from master_airflow_spark.registry import release_caches
 
-    est = {r.event_type: r.est_users for r in hll_sketch_users(spark, sf_dir).collect()}
+    spark_rows = {r.event_type: r for r in hll_sketch_error(spark, sf_dir).collect()}
+    release_caches()
     con = testing.duckdb_connection(sf_dir)
     duck = {
         r[0]: (r[1], r[2])
@@ -35,10 +37,11 @@ def test_hll_estimate_cross_engine(spark, sf_dir):
         "SELECT approx_count_distinct(user_id), count(DISTINCT user_id) FROM events"
     ).fetchone()
     con.close()
-    assert set(est) == set(duck)
+    assert set(spark_rows) == set(duck)
     for et, (duck_est, exact) in duck.items():
         tol = max(0.05 * exact, 3)  # HLL k=2^12 rse ~1.6%; 5% is 3σ headroom
-        assert abs(est[et] - exact) <= tol, f"{et}: spark {est[et]} vs exact {exact}"
+        assert spark_rows[et].exact_users == exact, f"{et}: exact counts differ"
+        assert spark_rows[et].within_3sigma, f"{et}: spark estimate outside the 5% bound"
         assert abs(duck_est - exact) <= tol, f"{et}: duckdb {duck_est} vs exact {exact}"
 
 

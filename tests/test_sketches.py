@@ -166,8 +166,9 @@ def test_exact_quantiles_final_plan_is_single_scan(spark, sf_dir):
     the below-counts and candidate lists are conditional aggregate
     expressions over a single FileScan, not separate join branches
     re-reading the fact table."""
-    from master_airflow_spark.plans.explain import formatted, op_count
+    from master_airflow_spark.plans.explain import formatted
     from master_airflow_spark.registry import REGISTRY, release_caches
+    from plan_asserts import op_count
 
     df = REGISTRY["exact_quantiles_sketched"].fn(spark, sf_dir)
     assert op_count(df, "Scan parquet") == 1, formatted(df)

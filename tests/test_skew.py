@@ -1,11 +1,11 @@
-"""Salting preserves semantics: salted aggregate / join == unsalted."""
+"""Salting preserves semantics: salted aggregate == unsalted."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 
 from master_airflow_spark.catalog import load_table
-from master_airflow_spark.operators.skew import salted_agg_counts, salted_join
+from master_airflow_spark.operators.skew import salted_agg_counts
 
 
 def test_salted_agg_equals_plain(spark, sf_dir):
@@ -21,17 +21,6 @@ def test_salted_agg_equals_plain(spark, sf_dir):
         )
     )
     assert sorted(map(tuple, salted.collect())) == sorted(map(tuple, plain.collect()))
-
-
-def test_salted_join_equals_plain(spark, sf_dir):
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    salted = salted_join(li, p, "l_partkey", "p_partkey", n_salts=4)
-    plain = li.join(p, li.l_partkey == p.p_partkey)
-    assert salted.count() == plain.count()
-    a = sorted(map(tuple, salted.select("l_orderkey", "l_partkey", "p_brand").collect()))
-    b = sorted(map(tuple, plain.select("l_orderkey", "l_partkey", "p_brand").collect()))
-    assert a == b
 
 
 def test_salt_spreads_hot_key(spark):

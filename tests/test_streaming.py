@@ -1,5 +1,5 @@
 """Multi-batch streaming semantics: watermark late-data drop, stateful
-dedup expiry, batch-replay equivalence, foreachBatch fan-out.
+dedup expiry, batch-replay equivalence.
 
 Files are staged into a tmp landing dir with increasing mtimes and
 read with an explicit ``max_files=1``, so AvailableNow replays them as
@@ -21,7 +21,6 @@ from pyspark.errors import StreamingQueryException
 
 from master_airflow_spark.streaming.events import (
     dedup_within_watermark,
-    fan_out_stream,
     read_events_stream,
     run_to_memory,
     tumbling_agg,
@@ -125,29 +124,6 @@ def test_batch_replay_equivalence(spark, sf_dir):
     assert a == b
 
 
-def test_fan_out_stream_multi_sink(spark, sf_dir, tmp_path):
-    from master_airflow_spark.streaming.events import landing_dir_for
-
-    stream = read_events_stream(
-        spark, landing_dir_for(os.path.join(sf_dir, "events.parquet"))
-    )
-    p1, p2 = str(tmp_path / "s1"), str(tmp_path / "s2")
-    fan_out_stream(
-        stream,
-        [
-            lambda df, bid: df.write.mode("append").parquet(p1),
-            lambda df, bid: df.groupBy("event_type")
-            .count()
-            .write.mode("append")
-            .parquet(p2),
-        ],
-    )
-    n_src = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).count()
-    assert spark.read.parquet(p1).count() == n_src
-    assert {r.event_type for r in spark.read.parquet(p2).collect()} == {
-        "click", "view", "signup", "purchase", "error",
-    }
-
 def test_interval_join_across_batches(spark, tmp_path):
     # click arrives in batch 0, its purchase in batch 1: the join's
     # click-side state must survive the trigger boundary and match
@@ -232,26 +208,6 @@ def test_ewma_state_continuity_across_batches(spark, tmp_path):
     # refold of batch 1 alone (which would give 3.0)
     assert rows[(7, 3)] == 2.25
     assert rows[(8, 1)] == 5.0
-
-
-def test_idempotent_batch_writer_replay_is_exactly_once(spark, sf_dir, tmp_path):
-    """Simulate the at-least-once replay foreachBatch is subject to:
-    delivering the same batch_id twice (even with different content,
-    as a failed-then-replayed batch would) must leave exactly one
-    committed copy; a NEW batch_id appends normally."""
-    from master_airflow_spark.sinks.writers import idempotent_batch_writer
-
-    target = str(tmp_path / "sink")
-    write = idempotent_batch_writer(target)
-    b0 = spark.range(10).withColumnRenamed("id", "v")
-    write(b0, 0)
-    write(b0, 0)  # replay: no-op
-    write(spark.range(5).withColumnRenamed("id", "v"), 0)  # replay after "crash"
-    write(spark.range(7).withColumnRenamed("id", "v"), 1)  # next batch
-    out = spark.read.parquet(target)
-    assert out.where("batch_id = 0").count() == 10, "replays must not re-write"
-    assert out.where("batch_id = 1").count() == 7
-    assert out.count() == 17
 
 
 def test_unique_users_rollup_across_batches(spark, tmp_path):

@@ -1,7 +1,7 @@
 """The query lists bench.py shares with the benchmark, the package
 functions the benchmark binds, the row check of scripts/ab.py, the
 registry pin of the ANN anchor triples, and the scan for package
-functions and classes that no code calls.
+functions, classes and constants that no code reads.
 
 bench.py and perfbench/metrics.py each keep a headline list; both must
 name the same registered queries in the same order, or bench.py and
@@ -122,37 +122,19 @@ def test_ab_refuses_to_time_candidate_with_other_rows(spark, sf_dir, monkeypatch
 
 
 # Top-level package names that no code outside tests/ refers to, kept
-# on purpose. Anything else the scan finds is a second code path that
-# production never runs: delete it, or call it from the path that runs.
+# on purpose: reference features and reference definitions. Anything
+# else the scan finds is a second code path that production never
+# runs: delete it, or call it from the path that runs.
 SERVED_ELSEWHERE = {
-    "DailySchedule": "library API: cron-style schedule; tests/test_pipeline.py",
-    "bucketed_join": "library API of the bucketed sink; tests/test_bucketing.py",
-    "compact_parquet": "library API: sink maintenance; tests/test_maintenance.py",
-    "decode_image": "library API of the media decoders; tests/test_multimodal_plumbing.py",
-    "fan_out_stream": "library API: streaming multi-sink; tests/test_streaming.py",
-    "fetch_many": "library API of the HTTP source; tests/test_http_source.py",
-    "fetch_pages": "library API of the HTTP source; tests/test_http_source.py",
-    "has_operator": "plan-assertion helper; tests/test_plans.py",
-    "has_pushed_filter": "plan-assertion helper; tests/test_plans.py",
-    "hll_sketch_users": "sketch building block; tests/test_round3_ops.py",
-    "idempotent_batch_writer": "library API: exactly-once foreachBatch sink; tests/test_streaming.py",
+    "DailySchedule": "reference feature: the DAGs' @daily schedule; tests/test_pipeline.py",
+    "fetch_many": "reference feature: the HTTP scrape source; tests/test_http_source.py",
+    "fetch_pages": "reference feature: the HTTP scrape source; tests/test_http_source.py",
     "jaccard_block_pairs_prefix_only": "lossless-filter reference for jaccard_block_pairs; tests/test_dedup.py",
-    "join_kinds": "plan-assertion helper; tests/test_plans.py",
     "lsh_bucket": "column-form definition the banding kernel is pinned to; tests/test_similarity.py",
-    "op_count": "plan-assertion helper; tests/test_plans.py",
-    "ppm_dims": "media-header helper; tests/test_jdbc_and_decode.py",
-    "read_binary_dir": "library API reader; tests/test_multimodal_plumbing.py",
-    "read_csv": "library API reader; tests/test_readers.py",
-    "read_json": "library API reader; tests/test_readers.py",
-    "read_schemas": "plan-assertion helper; tests/test_plans.py",
-    "salted_join": "library API: skew-join building block; tests/test_skew.py",
-    "spend_alerts": "library API: custom stateful operator; tests/test_stateful.py",
-    "write_append": "sink writer (reference W1-W3); tests/test_ingest.py",
-    "write_bucketed": "sink writer; tests/test_bucketing.py",
-    "write_es_bulk": "sink writer (reference ES); tests/test_jdbc_and_decode.py",
-    "write_jdbc": "sink writer (reference Postgres); tests/test_jdbc_and_decode.py",
-    "write_mongoimport_jsonl": "sink writer (reference Mongo); tests/test_jdbc_and_decode.py",
-    "write_zordered": "sink writer; tests/test_zorder.py",
+    "write_append": "reference sink writer (W1-W3); tests/test_ingest.py",
+    "write_es_bulk": "reference sink writer (Elasticsearch); tests/test_jdbc_and_decode.py",
+    "write_jdbc": "reference sink writer (Postgres); tests/test_jdbc_and_decode.py",
+    "write_mongoimport_jsonl": "reference sink writer (MongoDB); tests/test_jdbc_and_decode.py",
 }
 
 
@@ -167,20 +149,39 @@ def _py_files(*rels: str):
 
 def _registered(node: ast.AST) -> bool:
     """Decorated with registry.register: served through REGISTRY."""
-    for dec in node.decorator_list:
+    for dec in getattr(node, "decorator_list", ()):
         f = dec.func if isinstance(dec, ast.Call) else dec
         if isinstance(f, ast.Name) and f.id == "register":
             return True
     return False
 
 
+def _own_names(top: ast.stmt) -> set[str]:
+    """Names a top-level statement defines: a function or class name,
+    or the plain names a module-level assignment binds (dunders such
+    as __all__ are module protocol, not definitions)."""
+    if isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return {top.name}
+    targets = (
+        top.targets if isinstance(top, ast.Assign)
+        else [top.target] if isinstance(top, ast.AnnAssign)
+        else []
+    )
+    return {
+        n.id
+        for t in targets
+        for n in ast.walk(t)
+        if isinstance(n, ast.Name) and not (n.id.startswith("__") and n.id.endswith("__"))
+    }
+
+
 def _unreferenced_package_names() -> set[str]:
-    """Top-level functions and classes of master_airflow_spark/ that no
-    code refers to outside their own definition, searching the package,
-    scripts/, perfbench/, bench.py and the driver entry point. Only the
-    syntax tree counts (names, attributes, imports), so a name that
-    appears in a docstring, a comment or an SQL string is still
-    unreferenced."""
+    """Top-level functions, classes and assigned names of
+    master_airflow_spark/ that no code refers to outside their own
+    definition, searching the package, scripts/, perfbench/, bench.py
+    and the driver entry point. Only the syntax tree counts (names,
+    attributes, imports), so a name that appears in a docstring, a
+    comment or an SQL string is still unreferenced."""
     files = _py_files(
         "master_airflow_spark", "scripts", "perfbench", "bench.py", "__spark_entry__.py"
     )
@@ -189,9 +190,9 @@ def _unreferenced_package_names() -> set[str]:
         tree = ast.parse(open(path).read())
         in_package = os.path.relpath(path, ROOT).startswith("master_airflow_spark")
         for top in tree.body:
-            own = getattr(top, "name", None)
-            if in_package and own and not _registered(top):
-                defined.add(own)
+            own = _own_names(top)
+            if in_package and not _registered(top):
+                defined |= own
             for n in ast.walk(top):
                 if isinstance(n, ast.Name):
                     name = n.id
@@ -201,7 +202,7 @@ def _unreferenced_package_names() -> set[str]:
                     name = n.name.rsplit(".", 1)[-1]
                 else:
                     continue
-                if name != own:
+                if name not in own:
                     used.add(name)
     return defined - used
 
