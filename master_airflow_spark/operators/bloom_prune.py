@@ -72,12 +72,14 @@ def bloom_join_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def join_prune_frame(
-    spark: SparkSession, sf_dir: str, use_bloom: bool
+    spark: SparkSession, sf_dir: str, use_bloom: bool = False
 ) -> DataFrame:
-    """Builder behind ``bloom_join_prune``; ``use_bloom=False`` yields
-    the byte-for-byte identical plan minus the bitmap filter — the
-    control arm scripts/bloom_probe.py uses to measure how many
-    shuffle bytes the pruning actually removes."""
+    """Builder behind ``bloom_join_prune``; ``use_bloom=False`` (the
+    default) yields the byte-for-byte identical plan minus the bitmap
+    filter — the control arm that measures how many shuffle bytes the
+    pruning removes, run as the ARM
+    ``master_airflow_spark.operators.bloom_prune:join_prune_frame`` of
+    scripts/scale_probe.py."""
     part_f = load_table(spark, sf_dir, "part").where(
         F.col("p_brand").isin(*_BRANDS)
     )
@@ -146,13 +148,14 @@ def bloom_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def incremental_dedup_frame(
-    spark: SparkSession, sf_dir: str, use_bloom: bool
+    spark: SparkSession, sf_dir: str, use_bloom: bool = False
 ) -> DataFrame:
     """Builder behind ``bloom_incremental_dedup``; ``use_bloom=False``
-    is the plain anti-join (same expressions as
+    (the default) is the plain anti-join (same expressions as
     ``incremental_corpus_dedup``, same merge hint as the pruned arm)
-    — the control arm for scripts/bloom_probe.py's shuffle-bytes
-    measurement."""
+    — the control arm of the shuffle-bytes measurement, run as the ARM
+    ``master_airflow_spark.operators.bloom_prune:incremental_dedup_frame``
+    of scripts/scale_probe.py."""
     from master_airflow_spark.registry import track_cache
 
     docs = load_table(spark, sf_dir, "documents")

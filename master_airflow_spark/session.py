@@ -100,11 +100,11 @@ def get_spark(
         # many-small-jobs workload — measured on this box it is half
         # the per-action floor (1-row noop action: 0.08-0.17s with UI,
         # 0.044-0.057s without). The observability fallbacks are
-        # OPT-IN, not pre-wired: SPARK_GRAFT_UI=1 (or extra_conf, as
-        # scripts/bloom_probe.py does for its REST reads) turns the
-        # live UI back on, and SPARK_GRAFT_EVENTLOG_DIR=<dir> writes
-        # the event log a history server replays — the config a
-        # production cluster running UI-off would set.
+        # OPT-IN, not pre-wired: SPARK_GRAFT_UI=1 (or extra_conf)
+        # turns the live UI back on, and SPARK_GRAFT_EVENTLOG_DIR=<dir>
+        # (or the spark.eventLog.* extra_conf scripts/scale_probe.py
+        # passes) writes the event log a history server replays — the
+        # config a production cluster running UI-off would set.
         .config(
             "spark.ui.enabled",
             "true" if os.environ.get("SPARK_GRAFT_UI") == "1" else "false",

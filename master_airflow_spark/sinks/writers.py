@@ -14,10 +14,9 @@ All writes are partition-parallel ``df.write`` — the reference's
 row-at-a-time round-trips (1 insert/row) become batched parquet/JDBC
 partitions. Parquet stands in for the external sinks (the engine's
 internal format); the semantics, not the wire protocol, are the
-contract. Keyed upsert partitions output by a date-derived column so
-re-runs replace only touched partitions (dynamic partition overwrite),
-which is also what makes the downstream date-range filters
-partition-prunable at 100 TB.
+contract. The keyed upsert reads the whole sink, merges the batch in
+and rewrites the whole sink as one unpartitioned overwrite, so its cost
+grows with the sink's history, not with the batch.
 """
 
 from __future__ import annotations
@@ -51,7 +50,6 @@ def write_keyed_upsert(
     path: str,
     keys: list[str],
     order: list[str],
-    partition_col: str | None = None,
 ) -> None:
     """Keyed last-write-wins upsert (the MinIO object-key overwrite,
     reference dags/get_prices_load_minio.py:80): merge incoming rows
@@ -73,10 +71,7 @@ def write_keyed_upsert(
     else:  # first write — nothing to merge
         merged = df
     result = latest_per_key(merged, keys, order).localCheckpoint(eager=True)
-    writer = result.write.mode("overwrite")
-    if partition_col:
-        writer = writer.partitionBy(partition_col)
-    writer.parquet(path)
+    result.write.mode("overwrite").parquet(path)
 
 
 def jdbc_options(

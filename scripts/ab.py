@@ -31,6 +31,18 @@ class RowsDiffer(Exception):
     """A candidate arm returned other rows than the registered query."""
 
 
+def resolve(arm: str):
+    """The fn of a registered query, or the function a ``module:function``
+    names; either takes (spark, sf_dir)."""
+    from master_airflow_spark import registry
+
+    registry._ensure_loaded()
+    if arm in registry.REGISTRY:
+        return registry.REGISTRY[arm].fn
+    module, _, attr = arm.partition(":")
+    return getattr(importlib.import_module(module), attr)
+
+
 def rows(df) -> list[tuple]:
     return sorted(map(tuple, df.collect()), key=repr)
 
@@ -85,8 +97,7 @@ def ab(spark, sf_dir: str, argv: list[str]) -> int:
         key, val_a, val_b = rest[:3]
         rest = rest[3:]
     elif mode == "fn":
-        module, _, attr = rest[0].partition(":")
-        candidate = getattr(importlib.import_module(module), attr)
+        candidate = resolve(rest[0])
         rest = rest[1:]
     else:
         raise SystemExit(__doc__)

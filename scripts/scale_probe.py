@@ -1,65 +1,86 @@
-"""Empirical scale-up probe: replicate the sf0.1 tables K× with
-key-shifted copies (distinct surrogate keys, so join/group
-cardinalities grow linearly, not quadratically), then time a headline
-subset at each scale. The point is the CURVE, not the absolute
-numbers: plans whose runtime grows ~linearly in rows on local[32]
-are the plans whose single shuffle / broadcast structure survives a
-1000-executor scale-out; superlinear growth here flags a plan that
-would melt at 100 TB.
+"""Scale harness: replicate the base tables K times with key-shifted
+copies (distinct surrogate keys, so join and group cardinalities grow
+linearly, not quadratically), then time each arm at each scale and
+check its output against the DuckDB oracle on the same replica. The
+point is the CURVE, not the absolute numbers: a plan whose runtime
+grows faster than its rows is a plan that would not survive 100 TB,
+and the same measurement at two scales separates a fixed per-stage
+cost from a data-proportional one.
 
-Run: python scripts/scale_probe.py            (writes SCALE.md)
-     SCALE_FACTORS="1 2 5" python scripts/scale_probe.py
+Run: python scripts/scale_probe.py [ARM ...] [--factors 1 2 5 10]
+                                   [--unsalted] [--no-oracle]
 
-Control-experiment knobs (round-6 verdict item #3 — prove the salt
-explanation for the two superlinear cells, don't just assert it):
-  SCALE_UNSALTED=1   replicate documents WITHOUT the per-copy rotation —
-                     vocabulary stays FIXED while rows grow, the clean
-                     control for vocabulary-sensitive non-pair queries
-                     (boilerplate, divergence, quality). NEVER probe
-                     pair-output queries (minhash_*, dup_span_*,
-                     jaccard) unsalted: byte-identical replicas make
-                     candidate pairs k²-explode by data construction.
-  SCALE_QUERIES="a b"  probe only these queries.
-  SCALE_OUT=path     explicit output path. When unset, subset/control
-                     runs (SCALE_QUERIES or SCALE_UNSALTED active)
-                     write SCALE_subset.md with an annotated header —
-                     never the official SCALE.md curve.
+The base is SPARK_GRAFT_SF_DIR (default sf0.1). An ARM is a registered
+query name or a ``module:function`` taking (spark, sf_dir), resolved as
+scripts/ab.py resolves its candidate; no ARM means PROBE_QUERIES.
 
-Dimension tables nation/region stay fixed (they are fixed-cardinality
-in any warehouse); customer/supplier/part/orders/lineitem/documents/
-embeddings/events replicate with shifted keys.
+Replicas (build_replica): nation and region stay fixed; every other
+table gets K copies whose keys are shifted by one global shift. Copy
+i > 0 is salted so that cross-copy pairs do not k²-explode by
+construction: documents map their alphanumerics to a disjoint
+code-point plane, customer names get a doubled copy code, and
+embeddings get a seeded Gaussian perturbation. ``--unsalted`` keeps
+byte-identical copies (the fixed-vocabulary control; never probe
+pair-output queries such as minhash_* or dup_span_* with it). A
+replica is reused only when its marker matches.
+
+Measurement: per arm and scale, one warm-up and REPS reps, each plan
+built by fn() and written to the noop sink under its own job group.
+`credited` is events.credited_seconds (drains credited at their
+trigger time; equal to wall when no drain ran). The session writes an
+event log to a temp dir; after the last rep the session stops and
+jobs, shuffle-write bytes, spill and job gaps per rep are read from it.
+Every oracled arm also gets a median-of-3 DuckDB time and a
+testing.compare check; an output with a `recall_at_k` column reports
+its mean and min. All figures are medians over the reps.
+
+Output: one markdown table on stdout (progress on stderr). Exit 1 if
+any oracle check failed; the run goes on past a failure.
+
+A/B arms run through scripts/ab.py with SPARK_GRAFT_SF_DIR set to a
+replica dir (printed on stderr), e.g. the state-store provider:
+  ab.py conf spark.sql.streaming.stateStore.providerClass \\
+    org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider \\
+    org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider \\
+    3 stream_session_window_state
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import shutil
+import statistics
 import sys
+import tempfile
 import time
+from functools import reduce
 
-sys.path.insert(0, ".")
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path[:0] = [os.path.dirname(HERE), HERE]
 
+import numpy as np  # noqa: E402
+import pandas as pd  # noqa: E402
+import pyarrow as pa  # noqa: E402
+import pyarrow.parquet as pq  # noqa: E402
+from pyspark.sql import DataFrame  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
+import ab  # noqa: E402
 from master_airflow_spark import registry  # noqa: E402
-from master_airflow_spark.catalog import TABLES, load_table  # noqa: E402
+from master_airflow_spark.catalog import TABLES, load_table, table_fingerprint, table_path  # noqa: E402
 from master_airflow_spark.session import get_spark  # noqa: E402
+from master_airflow_spark.streaming import events  # noqa: E402
+from master_airflow_spark.testing import compare, duckdb_connection  # noqa: E402
+from perfbench.eventlog import read_groups  # noqa: E402
 
 BASE_SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+OUT_ROOT = "/tmp/mas_scale"
+REPS = 3
+SIGMA = 0.35  # relative size of the per-copy embedding perturbation
 _ROT_ALPHABET = (
     "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789"
 )
-UNSALTED = os.environ.get("SCALE_UNSALTED") == "1"
-OUT_ROOT = "/tmp/mas_scale" + ("_unsalted" if UNSALTED else "")
-# Subset (SCALE_QUERIES) and control (SCALE_UNSALTED) runs must never
-# clobber the official full curve: when either knob is set and
-# SCALE_OUT isn't, the output defaults to SCALE_subset.md and the
-# table header names the active knobs (see main()).
-_SUBSET_RUN = UNSALTED or bool(os.environ.get("SCALE_QUERIES"))
-OUT_MD = os.environ.get("SCALE_OUT") or (
-    "SCALE_subset.md" if _SUBSET_RUN else "SCALE.md"
-)
-FACTORS = [int(x) for x in os.environ.get("SCALE_FACTORS", "1 2 5 10").split()]
 
 # per-table key columns that must be disjoint across copies
 SHIFT_KEYS: dict[str, tuple[str, ...]] = {
@@ -74,8 +95,11 @@ SHIFT_KEYS: dict[str, tuple[str, ...]] = {
 }
 
 # headline subset spanning the main physical shapes: fact-fact joins
-# (q3/q7/q18), single-scan agg (q6), window dedup (keyed upsert),
-# LSH dedup over documents, text scoring, exact dedup
+# (q3/q7/q18/q21), single-scan aggs, window dedup, LSH and exact dedup
+# over documents, text scoring, iterative graph kernels (per-iteration
+# join+agg), inverted-index build, two-level aggs, SCD2 windows,
+# span-level dedup, sketch-then-verify, LSH-then-verify near-dup and
+# the rank-sketch quantiles
 PROBE_QUERIES = (
     "q3_shipping_priority",
     "q7_volume_shipping",
@@ -89,42 +113,26 @@ PROBE_QUERIES = (
     "sessionize_events",
     "lsh_bucketed_ann",
     "bm25_lite_ranking",
-    # round-4 additions: iterative graph (per-iteration join+agg),
-    # union-scan attribution window, inverted-index build, TV
-    # divergence (two-level agg + broadcast join), distributed NTILE
     "pagerank_trade_graph",
     "last_touch_attribution",
     "inverted_index_postings",
     "source_token_divergence",
     "equi_depth_price_buckets",
-    # round-5 additions: corpus-frequency boilerplate (explode + two
-    # keyed aggs + join-back), candidate-bounded estimator audit,
-    # pure-scan classifier, two shared-exchange SCD2 windows
     "boilerplate_shingle_ratio",
     "minhash_estimate_error",
     "quality_logit_score",
     "scd2_history_build",
-    # round-5 late additions: span-level exact-substring dedup (gram
-    # frequency join + islands / rolling-max cover + in-agg text
-    # reassembly), triangle counting (oriented edge self-join), and
-    # bounded multi-source BFS (per-hop join+agg)
     "dup_span_extract",
     "dup_span_cut",
     "triangle_count_cosuppliers",
     "bfs_reachability_hops",
-    # sketch-then-verify: bounded-memory candidates + exact verify
     "heavy_hitters_mg_verified",
-    # round-10 addition: LSH-candidates-then-exact-verify near-dup —
-    # the 100 TB all-pairs path (x1/x10/x50 row in SCALE.md §round-10)
     "embedding_near_dup_lsh_verified",
-    # round-7 addition: exact quantiles via rank sketch — the curve
-    # should track the two scans (linear) since the candidate sort is
-    # ~U rows, corpus-size-bounded by the per-batch budget
     "exact_quantiles_sketched",
 )
 
 
-def _global_key_shift(spark) -> int:
+def _global_key_shift(spark, base: str) -> int:
     """ONE replica key shift for every table: next power of 10 above
     the max key across ALL shifted tables. It must be global — orders
     replica i references customer replica i through o_custkey, so a
@@ -135,7 +143,7 @@ def _global_key_shift(spark) -> int:
     base SF."""
     hi = 0
     for t, keys in SHIFT_KEYS.items():
-        df = load_table(spark, BASE_SF, t)
+        df = load_table(spark, base, t)
         maxes = [F.max(c) for c in keys]
         v = df.select(F.greatest(*maxes) if len(maxes) > 1 else maxes[0]).first()[0]
         hi = max(hi, v or 0)
@@ -145,209 +153,197 @@ def _global_key_shift(spark) -> int:
     return shift
 
 
-def _copy(df, t: str, keys: tuple[str, ...], i: int, shift: int):
+def _copy(df, t: str, keys: tuple[str, ...], i: int, shift: int, salted: bool):
     out = df.select(
         *[
             (F.col(c) + F.lit(i * shift)).alias(c) if c in keys else F.col(c)
             for c in df.columns
         ]
     )
-    if t == "documents" and i > 0 and not UNSALTED:
-        # De-duplicate replica text cross-copy: byte-identical (or
-        # nearly identical) replicas are legitimate near-dups of the
-        # base copy, so pair output would k²-explode by data
-        # construction rather than plan behavior.
-        #
-        # Round-12 scheme: per-copy DISJOINT-PLANE CHARACTER MAP (a
-        # bijective translate shifting the 62 alphanumeric chars by
-        # i*64 code points — copy i's alphabet occupies its own
-        # 64-code-point plane). The previous per-token suffix salt
-        # only broke TOKEN-level similarity — character-gram queries
-        # (jaccard_block_pairs' 3-grams, containment_pairs' 8-gram
-        # shingles) still shared every interior gram of long tokens
-        # across copies, so their true pair output k²-exploded anyway
-        # (measured: containment 35 → 370k pairs at x10); and an
-        # in-alphabet ROTATION still collided on this corpus's tiny
-        # dense gram space (rot_i(g) is itself a frequent base gram),
-        # polluting candidate pairs 58× at x10. Disjoint planes make
-        # cross-copy tokens AND character grams collision-FREE at
-        # every gram width, while a bijective char map preserves each
-        # copy's internal structure exactly (same equalities, same
-        # char lengths; whitespace/punctuation unmapped, so
-        # tokenization and punctuation stats are unchanged).
+    if t == "documents" and i > 0 and salted:
+        # Per-copy disjoint-plane character map: a bijective translate
+        # shifting the 62 alphanumerics by i*64 code points, so copy
+        # i's alphabet occupies its own plane. Cross-copy tokens AND
+        # character grams of every width are collision-free (a token
+        # suffix salt still shared interior grams; an in-alphabet
+        # rotation collided on the dense gram space), while each
+        # copy's internal structure, lengths and punctuation stay
+        # exactly the base's.
         shifted = "".join(chr(ord(c) + i * 64) for c in _ROT_ALPHABET)
         out = out.withColumn(
             "text", F.translate("text", _ROT_ALPHABET, shifted)
         )
-    if t == "customer" and i > 0 and not UNSALTED:
-        # Same construction-vs-plan argument for NAME-keyed pair
-        # queries (fuzzy_customer_pairs, round 12): unsalted copies
-        # make every base name reappear k times at edit distance 0,
-        # so TRUE pair output grows k² by data construction. The
-        # doubled two-digit copy code keeps every cross-copy pair at
-        # Levenshtein ≥ 2 (any two distinct codes differ in ≥1 digit,
-        # and the code appears twice), while each copy's internal
-        # distance-≤1 structure stays identical to the base.
+    if t == "customer" and i > 0 and salted:
+        # Same argument for name-keyed pair queries: the doubled
+        # two-digit copy code keeps every cross-copy pair at
+        # Levenshtein ≥ 2 while each copy's distance-≤1 structure
+        # stays the base's.
         code = f"{i:02d}"
         out = out.withColumn("c_name", F.concat("c_name", F.lit(code + code)))
     return out
 
 
-def build_scale(spark, k: int, shift: int) -> str:
-    dst = os.path.join(OUT_ROOT, f"x{k}")
-    if os.path.isdir(dst):
-        return dst
-    os.makedirs(dst, exist_ok=True)
+def _embeddings(base: str, k: int, shift: int, salted: bool) -> pa.Table:
+    """The embeddings copies in vec_id order. Salted copy i > 0 adds to
+    each base vector a Gaussian of norm SIGMA × its norm from one
+    generator per copy (seed 1_000_003·i, drawn over the vec_id-ordered
+    matrix), then rescales it to the base norm: no vector repeats, the
+    cluster structure survives, and every build is identical."""
+    tbl = pq.read_table(table_path(base, "embeddings")).sort_by("vec_id")
+    df = tbl.to_pandas()
+    V = np.asarray([np.asarray(v, dtype=np.float64) for v in df["embedding"]])
+    norms = np.linalg.norm(V, axis=1, keepdims=True)
+    frames = []
+    for i in range(k):
+        copy = df.assign(vec_id=df["vec_id"] + i * shift)
+        if salted and i:
+            G = np.random.default_rng(1_000_003 * i).standard_normal(V.shape)
+            P = V + SIGMA * norms * G / np.linalg.norm(G, axis=1, keepdims=True)
+            P = P * (norms / np.linalg.norm(P, axis=1, keepdims=True))
+            copy["embedding"] = [row.astype(np.float32) for row in P]
+        frames.append(copy)
+    out = pd.concat(frames, ignore_index=True)
+    return pa.Table.from_pandas(out, schema=tbl.schema, preserve_index=False)
+
+
+def build_replica(spark, base: str, root: str, k: int, salted: bool = True) -> str:
+    """The x``k`` replica of the tables in ``base``, as a dir under
+    ``root``. A dir is reused only when its marker names the base
+    tables' fingerprints, ``k`` and the salting; the marker is written
+    last, so a half-built dir is rebuilt."""
+    dst = os.path.join(root, f"x{k}" if salted else f"x{k}_unsalted")
+    marker = os.path.join(dst, "_REPLICA")
+    key = repr(([table_fingerprint(table_path(base, t)) for t in TABLES], k, salted))
+    if os.path.exists(marker):
+        with open(marker) as f:
+            if f.read() == key:
+                return dst
+    shutil.rmtree(dst, ignore_errors=True)
+    os.makedirs(dst)
+    shift = _global_key_shift(spark, base)
     for t in TABLES:
-        df = load_table(spark, BASE_SF, t)
+        if t == "embeddings":
+            pq.write_table(_embeddings(base, k, shift, salted), table_path(dst, t))
+            continue
+        df = load_table(spark, base, t)
         keys = SHIFT_KEYS.get(t)
-        if not keys:  # nation/region: fixed-cardinality dims
-            out = df
-        else:
-            out = _copy(df, t, keys, 0, shift)
-            for i in range(1, k):
-                out = out.unionByName(_copy(df, t, keys, i, shift))
-        out.write.mode("overwrite").parquet(os.path.join(dst, f"{t}.parquet"))
+        out = df  # nation/region: fixed-cardinality dims
+        if keys:
+            copies = (_copy(df, t, keys, i, shift, salted) for i in range(k))
+            out = reduce(DataFrame.unionByName, copies)
+        out.write.mode("overwrite").parquet(table_path(dst, t))
+    with open(marker, "w") as f:
+        f.write(key)
     return dst
 
 
-def _materialize(df) -> None:
-    """Force FULL materialization of every output column via the noop
-    sink. A bare count() lets Catalyst prune unreferenced aggregate
-    expressions and the operators that feed only them (e.g.
-    dup_span_cut's window + in-agg text reassembly vanish entirely),
-    which would silently time a lighter plan than the query ships."""
-    df.write.format("noop").mode("overwrite").save()
+def _rep(spark, sf_dir: str, fn, group: str) -> tuple[float, float]:
+    """(credited, wall) seconds of one ab.run of ``fn`` under ``group``."""
+    sc = spark.sparkContext
+    events.reset_drain_trigger_seconds()
+    sc.setJobGroup(group, group)
+    try:
+        wall = ab.run(spark, sf_dir, fn)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return events.credited_seconds(wall), wall
 
 
-def main() -> None:
-    spark = get_spark(app_name="mas-scale-probe")
-    spark.sparkContext.setLogLevel("ERROR")
-    registry._ensure_loaded()
+def probe(spark, sf_dir: str, arm: str, fn, k: int, con) -> dict:
+    """One arm at one scale: warm-up, timed reps, oracle check, recall."""
+    ab.run(spark, sf_dir, fn)
+    groups = [f"{arm}@x{k}#{r}" for r in range(REPS)]
+    reps = [_rep(spark, sf_dir, fn, g) for g in groups]
+    out = {"arm": arm, "k": k, "groups": groups,
+           "credited": statistics.median(c for c, _ in reps),
+           "wall": statistics.median(w for _, w in reps)}
+    print(f"x{k} {arm}: credited {['%.3f' % c for c, _ in reps]}", file=sys.stderr, flush=True)
+    df = fn(spark, sf_dir)
+    if "recall_at_k" in df.columns:
+        out["recall"] = df.agg(F.mean("recall_at_k"), F.min("recall_at_k")).first()
+    oracle = registry.REGISTRY[arm].oracle if arm in registry.REGISTRY else None
+    if oracle and con is not None:
+        times = []
+        for _ in range(3):
+            t0 = time.perf_counter()
+            con.execute(oracle).fetchall()
+            times.append(time.perf_counter() - t0)
+        out["oracle"] = statistics.median(times)
+        res = compare(arm, df, con, oracle)
+        out["ok"] = res.ok
+        if not res.ok:
+            print(f"x{k} {arm}: ORACLE CHECK FAILED {res.mismatches}", file=sys.stderr, flush=True)
+    registry.release_caches()
+    return out
 
-    probe_queries = tuple(os.environ.get("SCALE_QUERIES", "").split()) or PROBE_QUERIES
-    results: dict[str, dict[int, float]] = {q: {} for q in probe_queries}
-    rows_at: dict[int, int] = {}
-    shift = _global_key_shift(spark)
-    for k in FACTORS:
-        sf_dir = build_scale(spark, k, shift)
-        rows_at[k] = load_table(spark, sf_dir, "lineitem").count()
-        for t in TABLES:  # warm file listing + footer cache
-            load_table(spark, sf_dir, t).count()
-        for q in probe_queries:
-            spec = registry.REGISTRY[q]
-            df = spec.fn(spark, sf_dir)
-            _materialize(df)  # warm (codegen cache, broadcast build)
-            registry.release_caches()
-            samples = []
-            for _ in range(3):  # median of 3: GC outliers hit ~1 run in 10
-                t0 = time.perf_counter()
-                df2 = spec.fn(spark, sf_dir)
-                _materialize(df2)
-                samples.append(time.perf_counter() - t0)
-                registry.release_caches()
-            dt = sorted(samples)[1]
-            results[q][k] = round(dt, 3)
-            print(f"x{k} {q}: {dt:.3f}s {['%.2f' % s for s in samples]}", file=sys.stderr)
 
-    base_k = FACTORS[0]
-    row_growth_txt = rows_at[FACTORS[-1]] / rows_at[base_k]
-    knobs = []
-    if UNSALTED:
-        knobs.append("SCALE_UNSALTED=1 (control: fixed vocabulary)")
-    if os.environ.get("SCALE_QUERIES"):
-        knobs.append(f"SCALE_QUERIES={os.environ['SCALE_QUERIES']!r}")
-    title = "# SCALE — empirical scale-up curve (generated by scripts/scale_probe.py)"
-    if knobs:
-        title = (
-            "# SCALE (SUBSET/CONTROL RUN — not the official curve; knobs: "
-            + "; ".join(knobs)
-            + ")"
-        )
+def table(results: list[dict], groups: dict, lineitem_rows: dict, salted: bool) -> str:
+    first = {}
+    for r in results:
+        first.setdefault(r["arm"], r["credited"])
     lines = [
-        title,
+        f"Base {BASE_SF}, {'salted' if salted else 'unsalted'} replicas; lineitem rows "
+        + ", ".join(f"x{k}={n:,}" for k, n in lineitem_rows.items())
+        + f". Medians of {REPS} reps after one warm-up; growth = credited / credited"
+        " at the first scale.",
         "",
-        "Base: sf0.1 replicated with key-shifted copies; lineitem rows at each",
-        "scale: " + ", ".join(f"x{k}={rows_at[k]:,}" for k in FACTORS) + ".",
-        "Timings are steady-state (plan warmed, caches released), local[32],",
-        "full-materialization via the noop sink (count() would let Catalyst",
-        "prune work that feeds only unreferenced output columns).",
-        f"`growth` = T(x{FACTORS[-1]}) / T(x{base_k}) vs the "
-        f"{row_growth_txt:.0f}× row growth — a plan",
-        "whose growth ≤ the row growth scales linearly or better; superlinear",
-        "growth flags a shape that would not survive 100 TB.",
-        "",
-        "| query | " + " | ".join(f"x{k} (s)" for k in FACTORS) + " | growth | rows grew |",
-        "|---|" + "---|" * (len(FACTORS) + 2),
+        "| arm | scale | credited s | wall s | growth | jobs | shuffle write B | spill B"
+        " | job gap s | oracle s | check | recall mean / min |",
+        "|---|---|---|---|---|---|---|---|---|---|---|---|",
     ]
-    row_growth = rows_at[FACTORS[-1]] / rows_at[base_k]
-    for q in probe_queries:
-        r = results[q]
-        growth = r[FACTORS[-1]] / r[base_k] if r[base_k] else float("nan")
+    for r in results:
+        med = {key: statistics.median(groups.get(g, {}).get(key, 0) for g in r["groups"])
+               for key in ("jobs", "shuffle_write_bytes", "spill_bytes", "job_gap_s")}
+        check = {True: "ok", False: "FAIL"}.get(r.get("ok"), "-")
+        rec = r.get("recall")
         lines.append(
-            f"| {q} | "
-            + " | ".join(f"{r[k]:.3f}" for k in FACTORS)
-            + f" | {growth:.1f}× | {row_growth:.0f}× |"
+            f"| {r['arm']} | x{r['k']} | {r['credited']:.3f} | {r['wall']:.3f}"
+            f" | {r['credited'] / first[r['arm']]:.2f}× | {med['jobs']:g}"
+            f" | {med['shuffle_write_bytes']:,.0f} | {med['spill_bytes']:,.0f}"
+            f" | {med['job_gap_s']:.3f} | {'%.3f' % r['oracle'] if 'oracle' in r else '-'}"
+            f" | {check} | {'%.3f / %.3f' % tuple(rec) if rec else '-'} |"
         )
-    lines += [
-        "",
-        "Notes: timings are median-of-3 (single-JVM GC outliers hit ~1 run in",
-        "10). Replica text is de-duplicated by per-copy character ROTATION",
-        "(round 12; previously a per-token suffix salt): same text length,",
-        "same in-copy structure, cross-copy tokens AND char-grams disjoint.",
-        "minhash_near_dup's pair OUTPUT scales exactly linearly",
-        "(~212 pairs per copy). lsh_bucketed_ann's query side (vec_id % 50)",
-        "grows WITH the corpus until the MAX_QUERIES cap, so its candidate",
-        "space grows ~quadratically (~100× at x10) while runtime grows far",
-        "slower — the fused kernel's collide mask pays the dot-product fold",
-        "only on colliding pairs, which is the designed behavior. Sub-1×",
-        "growth = fixed driver/scheduling overhead amortizing, the regime",
-        "the engine is built for.",
-        "boilerplate_shingle_ratio's replicas inherit the rotation:",
-        "each copy contributes a disjoint gram vocabulary (until charset^k",
-        "saturation), so the gram-frequency aggregate's key space grows",
-        "~linearly with copies — input grows faster than the row column.",
-        "pagerank_trade_graph's x1 number carries ~3s of fixed cost (edge",
-        "build + 3 iteration plans, each a join+agg job); growth reflects",
-        "only the data-dependent part, which is the 100 TB question.",
-        "source_token_divergence replicas inherit the vocabulary caveat:",
-        "rotation multiplies vocabulary ~linearly per copy, so its",
-        "input grows faster than the row column suggests.",
-        "minhash_estimate_error inherits it too (signatures over a ~10×",
-        "vocabulary at x10) and its per-sample spread on this multi-tenant",
-        "box reaches 2-5× (noisy neighbors), so treat its growth cell as",
-        "an upper bound. dup_span_extract/cut also inherit the rotation — the",
-        "disjoint per-copy gram vocabulary keeps duplicated pairs",
-        "within-copy, i.e. the dup workload grows linearly by design",
-        "rather than quadratically across replicas.",
-        "embedding_near_dup_lsh_verified: embeddings replicate UNSALTED",
-        "(byte-identical vectors under shifted ids), so its TRUE-pair",
-        "output grows ~k² by data construction — 0 pairs at x1 (the sf0.1",
-        "base has none ≥0.95) vs 2000·C(k,2) cross-copy pairs after (90k",
-        "at x10). Its growth cell is therefore time over a ~100×-growing",
-        "pair workload, not over the 10× row column — 3× time over 100×",
-        "pairs is the LSH pipeline doing its job (cf. the x50 section:",
-        "16.8× faster than exact all-pairs at equal output).",
-    ]
-    # Preserve the bloom_probe.py section and the manually-curated
-    # control-experiment section (both appended after their markers)
-    # across regenerations of the main curve: keep everything from the
-    # FIRST preserved marker onward.
-    tail = ""
-    markers = (
-        "## Control experiments",
-        "## Bloom pruning probe (generated by scripts/bloom_probe.py)",
-    )
-    if os.path.exists(OUT_MD):
-        with open(OUT_MD) as f:
-            old = f.read()
-        cut = min((old.find(m) for m in markers if m in old), default=-1)
-        if cut >= 0:
-            tail = "\n" + old[cut:]
-    with open(OUT_MD, "w") as f:
-        f.write("\n".join(lines) + "\n" + tail)
-    print(f"{OUT_MD} written")
+    return "\n".join(lines)
+
+
+def main(argv: list[str] | None = None) -> int:
+    p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    p.add_argument("arms", nargs="*", metavar="ARM")
+    p.add_argument("--factors", type=int, nargs="+", default=[1, 2, 5, 10])
+    p.add_argument("--unsalted", action="store_true")
+    p.add_argument("--no-oracle", action="store_true")
+    args = p.parse_args(argv)
+    fns = {arm: ab.resolve(arm) for arm in args.arms or PROBE_QUERIES}
+    log_dir = tempfile.mkdtemp(prefix="mas_scale_eventlog_")
+    spark = get_spark(app_name="mas-scale-probe", extra_conf={
+        "spark.eventLog.enabled": "true", "spark.eventLog.dir": log_dir,
+        "spark.eventLog.compress": "false", "spark.eventLog.rolling.enabled": "false",
+        "spark.ui.showConsoleProgress": "false",
+    })
+    spark.sparkContext.setLogLevel("ERROR")
+    results, lineitem_rows = [], {}
+    try:
+        try:
+            for k in args.factors:
+                sf_dir = build_replica(spark, BASE_SF, OUT_ROOT, k, not args.unsalted)
+                print(f"x{k}: {sf_dir}", file=sys.stderr, flush=True)
+                # counting every table also warms file listing and footers before the first arm
+                counts = {t: load_table(spark, sf_dir, t).count() for t in TABLES}
+                lineitem_rows[k] = counts["lineitem"]
+                con = None if args.no_oracle else duckdb_connection(sf_dir)
+                try:
+                    results += [probe(spark, sf_dir, a, fn, k, con) for a, fn in fns.items()]
+                finally:
+                    if con is not None:
+                        con.close()
+        finally:
+            spark.stop()  # flushes the event log
+        groups = read_groups(log_dir)
+    finally:
+        shutil.rmtree(log_dir, ignore_errors=True)
+    print(table(results, groups, lineitem_rows, not args.unsalted))
+    return 1 if any(r.get("ok") is False for r in results) else 0
 
 
 if __name__ == "__main__":
-    main()
+    raise SystemExit(main())

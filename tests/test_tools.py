@@ -1,12 +1,14 @@
 """The query lists bench.py shares with the benchmark, the package
 functions the benchmark binds, the row check of scripts/ab.py, the
-registry pin of the ANN anchor triples, and the scan for package
-functions, classes and constants that no code reads.
+reproducible plan dumps of scripts/plans.py, the registry pin of the
+ANN anchor triples, and the scan for package functions, classes and
+constants that no code reads.
 
 bench.py and perfbench/metrics.py each keep a headline list; both must
 name the same registered queries in the same order, or bench.py and
 the benchmark time different work. perfbench/ is only read here, never
-edited. Only the ab test and the fresh-plan test need a Spark session.
+edited. Only the ab, plan-dump and fresh-plan tests need a Spark
+session.
 """
 
 from __future__ import annotations
@@ -15,6 +17,7 @@ import ast
 import importlib
 import importlib.util
 import os
+import re
 
 import pytest
 
@@ -31,6 +34,7 @@ def _load(relpath: str, name: str):
 bench = _load("bench.py", "bench_under_test")
 metrics = _load("perfbench/metrics.py", "perfbench_metrics")
 ab = _load("scripts/ab.py", "ab_tool")
+plans = _load("scripts/plans.py", "plans_tool")
 
 
 def test_headline_matches_benchmark_in_order():
@@ -119,6 +123,19 @@ def test_ab_refuses_to_time_candidate_with_other_rows(spark, sf_dir, monkeypatch
     same = "master_airflow_spark.operators.relational:pricing_summary"
     assert ab.ab(spark, sf_dir, ["fn", same, "1", "pricing_summary"]) == 0
     assert len(timed) == 1
+
+
+def test_plan_dumps_mask_the_drain_run_dir(spark, sf_dir):
+    """Every shared drain spools under a new random run dir, and that
+    path shows in stream_session_window's plan; the dump masks it.
+    Expression ids count up within one session, so they are masked
+    here only: a fresh process numbers them the same way each time."""
+    a, b = (
+        re.sub(r"#\d+", "#", plans.dump(spark, sf_dir, "stream_session_window"))
+        for _ in range(2)
+    )
+    assert "mas_shared_drain/<run>/spool/" in a
+    assert a == b
 
 
 # Top-level package names that no code outside tests/ refers to, kept
